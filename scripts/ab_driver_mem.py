@@ -9,8 +9,9 @@ spark.driver.memory=8g shared by 32 concurrent tasks leaves ~150 MB
 of execution+storage per task for wide-state aggregates, vs 4x that
 at 8 cores. Each (conf, value) variant runs in a FRESH JVM (local
 mode cannot resize a live driver heap), same bench methodology
-(min-of-N, clearCache between repeats), and reports per-entry wall +
-GC time delta from the executor metrics.
+(min-of-N, clearCache between repeats), and reports per-entry wall
+time (min of the repeats); with two or more variants it also prints
+the first two side by side with their speedup.
 
 Usage: python scripts/ab_driver_mem.py <sf_dir> <cpus> <mem1,mem2> q1 q2 ...
 """
@@ -85,6 +86,8 @@ def main() -> int:
             print(f"variant {mem} FAILED:\n{p.stderr[-2000:]}")
             return 1
     print(json.dumps(results, indent=1))
+    if len(mems) < 2:
+        return 0
     a, b = mems[0], mems[1]
     print(f"\n{'entry':35s} {a:>8s} {b:>8s}  speedup")
     for n in names:

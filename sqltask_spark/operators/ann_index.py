@@ -61,6 +61,8 @@ concurrent readers are always safe.
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -81,89 +83,54 @@ from sqltask_spark.operators.similarity import (
 )
 
 
-def _committed(
-    spark: SparkSession, path: str, as_of: int | None = None
-) -> dict:
-    """The newest committed manifest, or — time travel — the exact
-    version ``as_of``. Every version since the last compaction stays
-    readable (mutations write only new files; sweeps respect the
-    union of ALL manifests' references); travel past the compaction
-    boundary errors loudly instead of serving a partial index."""
-    if as_of is None:
-        m = index_fs.read_manifest(spark, path)
-        if m is None:
-            raise ValueError(f"no committed manifest under {path}")
-        return m
-    m = index_fs.read_manifest_at(spark, path, as_of)
-    if m is None:
-        raise ValueError(
-            f"version {as_of} of {path} does not exist (never"
-            f" committed, or torn); available:"
-            f" {index_fs.list_manifest_seqs(spark, path)}"
-        )
-    missing = [
-        f"vectors/gen={g}"
-        for g in m["generations"]
-        if not index_fs.path_exists(spark, f"{path}/vectors/gen={g}")
-    ]
-    if not index_fs.path_exists(
-        spark, f"{path}/quantizer/{m['quantizer']}"
-    ):
-        missing.append(f"quantizer/{m['quantizer']}")
-    if missing:
-        raise ValueError(
-            f"version {as_of} of {path} is no longer readable —"
-            f" compaction/rebuild reclaimed {missing}; time travel"
-            f" reaches back only to the last compaction"
-        )
-    return m
+class IvfStore(index_fs.GenerationStore):
+    """The IVF index on the shared generation protocol
+    (:class:`~sqltask_spark.operators.index_fs.GenerationStore`): a
+    generation is one cell-partitioned vectors directory
+    ``vectors/gen=g*/cell=*``, and the side relation is the versioned
+    frozen ``quantizer``."""
 
+    id_col = "neighbor_id"
+    gen_dir = "vectors"
+    gen_prefix = "gen="
+    aux = "quantizer"
 
-def _pinned_read(
-    spark: SparkSession, m: dict, rel: str, *paths: str
-) -> DataFrame:
-    """Parquet read with the manifest-recorded schema for ``rel``
-    when present — planning then costs ZERO Spark jobs, where schema
-    inference over a multi-file relation runs a distributed
-    footer-read job per ``spark.read.parquet`` call (measured: one
-    job per unpinned read site; at 100 TB the footer sweep is real
-    work, repeated on every probe/mutation). Falls back to inference
-    for manifests committed before schemas were recorded — mutations
-    backfill the entry, so old indexes heal on their next write."""
-    import json as _json
+    def gen_read(self, m: dict, gens: list) -> DataFrame:
+        """Pinned read of vector generation directories under
+        ``basePath`` (the recorded vectors schema plus the ``gen``
+        partition column the basePath read surfaces)."""
+        from pyspark.sql.types import StringType, StructField, StructType
 
-    from pyspark.sql.types import StructType
-
-    s = m.get("schemas", {}).get(rel)
-    reader = spark.read
-    if s:
-        reader = reader.schema(StructType.fromJson(_json.loads(s)))
-    return reader.parquet(*paths)
-
-
-def _pinned_gen_read(
-    spark: SparkSession, path: str, m: dict, gens: list
-) -> DataFrame:
-    """Pinned read of vector generation directories under
-    ``basePath`` (the recorded vectors schema plus the ``gen``
-    partition column the basePath read surfaces)."""
-    import json as _json
-
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    s = m.get("schemas", {}).get("vectors")
-    reader = spark.read.option("basePath", f"{path}/vectors")
-    if s:
-        st = StructType.fromJson(_json.loads(s))
-        reader = reader.schema(
-            StructType(
-                list(st.fields)
-                + [StructField("gen", StringType(), True)]
+        s = m.get("schemas", {}).get("vectors")
+        reader = self.spark.read.option("basePath", f"{self.path}/vectors")
+        if s:
+            st = StructType.fromJson(json.loads(s))
+            reader = reader.schema(
+                StructType(
+                    list(st.fields)
+                    + [StructField("gen", StringType(), True)]
+                )
             )
+        return reader.parquet(*[self.gen_path(g) for g in gens])
+
+    def read_ids(self, m, gens=None):
+        gens = m["generations"] if gens is None else gens
+        return self.gen_read(m, gens).select("neighbor_id")
+
+    def rewrite_generation(self, m, g, gnew, keep):
+        kept = keep(self.gen_read(m, [g]).drop("gen"))
+        self.write(
+            kept.repartition("cell"), self.gen_rel(gnew), partition_by="cell"
         )
-    return reader.parquet(
-        *[f"{path}/vectors/gen={g}" for g in gens]
-    )
+
+    def write_compacted(self, m, gen, keep):
+        live = keep(self.gen_read(m, m["generations"]).drop("gen"))
+        self.write(
+            live.repartition(int(m["params"]["n_cells"]), "cell"),
+            self.gen_rel(gen),
+            partition_by="cell",
+        )
+        return {}
 
 
 def _read_vectors(
@@ -179,25 +146,12 @@ def _read_vectors(
     caller needs the physical view (``include_tombstoned=True`` — the
     append idempotency check, which must keep deleted ids UNAVAILABLE
     until compaction frees them)."""
-    out = _pinned_gen_read(spark, path, m, m["generations"]).drop("gen")
-    tombs = _read_tombstones(spark, path, m)
+    store = IvfStore(spark, path)
+    out = store.gen_read(m, m["generations"]).drop("gen")
+    tombs = store.tombstones(m)
     if tombs is not None and not include_tombstoned:
         out = out.join(tombs, "neighbor_id", "left_anti")
     return out
-
-
-def _read_tombstones(
-    spark: SparkSession, path: str, m: dict
-) -> DataFrame | None:
-    """Union of committed tombstone sets (``(neighbor_id)``) or
-    ``None``."""
-    gens = m.get("tombstones", [])
-    if not gens:
-        return None
-    return _pinned_read(
-        spark, m, "tombstones",
-        *[f"{path}/tombstones/{g}" for g in gens],
-    )
 
 
 def committed_manifest(
@@ -209,7 +163,7 @@ def committed_manifest(
     ``generations`` / ``quantizer`` / ``params`` / ``tombstones`` /
     ``batches`` / optional ``gen_stats`` + ``synced`` and the
     ``_seq`` expected by the next commit."""
-    return _committed(spark, path, as_of)
+    return IvfStore(spark, path).committed(as_of)
 
 
 def read_tombstones(
@@ -218,8 +172,10 @@ def read_tombstones(
     """Public read API: the committed tombstone set
     ``(neighbor_id)``, or ``None`` when empty. ``manifest`` (from
     :func:`committed_manifest`) avoids a re-read."""
-    m = manifest if manifest is not None else _committed(spark, path)
-    return _read_tombstones(spark, path, m)
+    store = IvfStore(spark, path)
+    return store.tombstones(
+        manifest if manifest is not None else store.committed()
+    )
 
 
 def read_vectors(
@@ -232,7 +188,7 @@ def read_vectors(
     generations (``neighbor_id, cv, cell, cn`` [+ ``codes`` in PQ
     layout]), tombstones anti-joined out unless the caller needs the
     physical view."""
-    m = manifest if manifest is not None else _committed(spark, path)
+    m = manifest if manifest is not None else committed_manifest(spark, path)
     return _read_vectors(spark, path, m, include_tombstoned)
 
 
@@ -240,7 +196,7 @@ def _read_centroids(spark: SparkSession, path: str, m: dict):
     """Frozen coarse quantizer of the committed manifest, as an
     ndarray ordered by cell."""
     cent_rows = sorted(
-        _pinned_read(
+        index_fs.pinned_read(
             spark, m, "centroids",
             f"{path}/quantizer/{m['quantizer']}/centroids",
         ).collect(),
@@ -252,7 +208,7 @@ def _read_centroids(spark: SparkSession, path: str, m: dict):
 def _read_pq_codebooks(spark: SparkSession, path: str, m_fest: dict):
     """(m, pq_k, codebooks) decoded from the committed PQ
     sub-codebooks."""
-    cb_rows = _pinned_read(
+    cb_rows = index_fs.pinned_read(
         spark, m_fest, "codebooks",
         f"{path}/quantizer/{m_fest['quantizer']}/codebooks",
     ).collect()
@@ -263,6 +219,34 @@ def _read_pq_codebooks(spark: SparkSession, path: str, m_fest: dict):
     for r in cb_rows:
         codebooks[r["subspace"]][r["code"]] = list(r["centroid"])
     return m, pq_k, codebooks
+
+
+def _encode(rows: DataFrame, corpus_id: str, vec_col: str,
+            cents, codebooks) -> DataFrame:
+    """``(neighbor_id, cv[, codes], cell, cn)`` rows of a corpus under
+    a quantizer — the one encoding both build and append write."""
+    if codebooks is not None:
+        encode = _pq_encode_udf(cents, codebooks)
+        base = rows.select(
+            F.col(corpus_id).alias("neighbor_id"),
+            F.col(vec_col).cast("array<float>").alias("cv"),
+            encode(F.col(vec_col)).alias("e"),
+        ).select(
+            "neighbor_id", "cv", F.col("e.codes").alias("codes"),
+            F.col("e.cell").alias("cell"),
+        )
+    else:
+        base = rows.select(
+            F.col(corpus_id).alias("neighbor_id"),
+            # stored as float: the engine-wide contract casts to
+            # double before any arithmetic, and float→double→float
+            # round-trips the original float embeddings losslessly —
+            # so the index is half the bytes (and parquet list-decode
+            # work) with bit-identical scores (equality-tested)
+            F.col(vec_col).cast("array<float>").alias("cv"),
+            _cell_assign_udf(cents, 1)(F.col(vec_col))[0].alias("cell"),
+        )
+    return base.withColumn("cn", l2_norm(as_double_array(F.col("cv"))))
 
 
 def build_ivf_index(
@@ -292,10 +276,12 @@ def build_ivf_index(
     sample = _sample_matrix(corpus, corpus_id, vec_col, sample_cap)
     cents = _spherical_kmeans(sample, n_cells, 8)
     spark = corpus.sparkSession
+    store = IvfStore(spark, path)
     prev = index_fs.read_manifest(spark, path)
     gen = index_fs.fresh_gen(
         spark, [f"{path}/vectors", f"{path}/quantizer"], prev
     )
+    codebooks = cb_df = None
     if m is not None:
         norms = np.linalg.norm(sample, axis=1)
         unit = sample[norms > 0] / norms[norms > 0, None]
@@ -307,15 +293,6 @@ def build_ivf_index(
             _kmeans_euclid(unit[:, j * subdim : (j + 1) * subdim], pq_k, 8)
             for j in range(m)
         ]
-        encode = _pq_encode_udf(cents, codebooks)
-        base = corpus.select(
-            F.col(corpus_id).alias("neighbor_id"),
-            F.col(vec_col).cast("array<float>").alias("cv"),
-            encode(F.col(vec_col)).alias("e"),
-        ).select(
-            "neighbor_id", "cv", F.col("e.codes").alias("codes"),
-            F.col("e.cell").alias("cell"),
-        )
         cb_df = spark.createDataFrame(
             [
                 (j, c, [float(x) for x in codebooks[j][c]])
@@ -324,51 +301,24 @@ def build_ivf_index(
             ],
             ["subspace", "code", "centroid"],
         )
-        (
-            cb_df.coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{path}/quantizer/{gen}/codebooks")
-        )
-    else:
-        cb_df = None
-        base = corpus.select(
-            F.col(corpus_id).alias("neighbor_id"),
-            # stored as float: the engine-wide contract casts to
-            # double before any arithmetic, and float→double→float
-            # round-trips the original float embeddings losslessly —
-            # so the index is half the bytes (and parquet list-decode
-            # work) with bit-identical scores (equality-tested)
-            F.col(vec_col).cast("array<float>").alias("cv"),
-            _cell_assign_udf(cents, 1)(F.col(vec_col))[0].alias("cell"),
-        )
-    vec_df = base.withColumn(
-        "cn", l2_norm(as_double_array(F.col("cv")))
-    )
-    (
-        vec_df
-        # co-locate each cell before the partitioned write: one file
-        # per cell directory instead of (writer tasks × cells) shards
-        .repartition(n_cells, "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{path}/vectors/gen={gen}")
+        store.write(cb_df.coalesce(1), f"quantizer/{gen}/codebooks")
+    vec_df = _encode(corpus, corpus_id, vec_col, cents, codebooks)
+    # co-locate each cell before the partitioned write: one file per
+    # cell directory instead of (writer tasks × cells) shards
+    store.write(
+        vec_df.repartition(n_cells, "cell"), store.gen_rel(gen),
+        partition_by="cell",
     )
     cent_df = spark.createDataFrame(
         [(i, [float(x) for x in cents[i]]) for i in range(len(cents))],
         ["cell", "centroid"],
     )
-    (
-        cent_df.coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{path}/quantizer/{gen}/centroids")
-    )
+    store.write(cent_df.coalesce(1), f"quantizer/{gen}/centroids")
     # readback pinned from the plan just written — no inference job;
     # reader schemas recorded in the manifest (the MERGE tables'
     # ``schema`` convention) so every later read plans job-free
     st = index_fs.id_bounds(
-        spark.read.schema(vec_df.schema).parquet(
-            f"{path}/vectors/gen={gen}"
-        ),
+        spark.read.schema(vec_df.schema).parquet(store.gen_path(gen)),
         "neighbor_id",
     )
     schemas = index_fs.relation_schemas(
@@ -379,39 +329,33 @@ def build_ivf_index(
     )
     # layout is RECORDED in the manifest, never inferred from
     # filesystem probes (a driver-local exists() check lies on
-    # HDFS/S3 and would silently append PQ rows without codes)
-    index_fs.commit_manifest(
-        spark,
-        path,
-        {
-            # unknown manifest keys (sync markers, future metadata)
-            # carry forward verbatim — the rule every other mutation
-            # follows; a drift rebuild that stripped 'synced' would
-            # force the next sync epoch back to seed_from_seq
-            **{k: v for k, v in (prev or {}).items() if k != "_seq"},
-            "generations": [gen],
-            "quantizer": gen,
-            "schemas": schemas,
-            # per-generation id range for targeted rewrites
-            # (unblock_ivf_ids) — prune untouched generations unread
-            "gen_stats": {gen: st} if st else {},
-            "params": {
-                "n_cells": n_cells,
-                "m": m,
-                "pq_k": pq_k if m is not None else None,
-            },
-            # a rebuild writes exactly its input corpus: previously
-            # tombstoned rows are physically absent, so the tombstone
-            # set resets (the retention boundary, like compaction)
-            "tombstones": [],
-            # the epoch ledger survives a rebuild: the rebuilt index
-            # still CONTAINS every ledgered batch's vectors, so a
-            # redelivered epoch must keep ledger-skipping (and the
-            # streaming sink's collision detection keeps working)
-            "batches": prev.get("batches", []) if prev else [],
+    # HDFS/S3 and would silently append PQ rows without codes).
+    # Unknown manifest keys (sync markers, future metadata) carry
+    # forward verbatim — the rule every other mutation follows; a
+    # drift rebuild that stripped 'synced' would force the next sync
+    # epoch back to seed_from_seq
+    store.commit(prev, {
+        "generations": [gen],
+        "quantizer": gen,
+        "schemas": schemas,
+        # per-generation id range for targeted rewrites
+        # (unblock_ivf_ids) — prune untouched generations unread
+        "gen_stats": {gen: st} if st else {},
+        "params": {
+            "n_cells": n_cells,
+            "m": m,
+            "pq_k": pq_k if m is not None else None,
         },
-        prev["_seq"] if prev else -1,
-    )
+        # a rebuild writes exactly its input corpus: previously
+        # tombstoned rows are physically absent, so the tombstone
+        # set resets (the retention boundary, like compaction)
+        "tombstones": [],
+        # the epoch ledger survives a rebuild: the rebuilt index
+        # still CONTAINS every ledgered batch's vectors, so a
+        # redelivered epoch must keep ledger-skipping (and the
+        # streaming sink's collision detection keeps working)
+        "batches": prev.get("batches", []) if prev else [],
+    })
     return n_cells
 
 
@@ -451,194 +395,42 @@ def append_to_ivf_index(
     anti-join recheck, which remains the correctness backstop for
     un-ledgered callers.
     """
-    spark = batch.sparkSession
-    m_fest = _committed(spark, path)
-    if batch_id is not None and batch_id in m_fest.get("batches", []):
-        return 0
-    # committed = the UNION over all manifests, not just the newest:
-    # older versions stay time-travel readable until compaction
-    live = index_fs.live_unions(
-        spark, path, ("generations", "quantizer", "tombstones")
-    )
-    index_fs.sweep_orphans(
-        spark,
-        f"{path}/vectors",
-        {f"gen={g}" for g in live["generations"]},
-        "gen=",
-    )
-    index_fs.sweep_orphans(
-        spark, f"{path}/quantizer", live["quantizer"], "g"
-    )
-    index_fs.sweep_orphans(
-        spark, f"{path}/tombstones", live["tombstones"], "g"
-    )
-    meta = m_fest["params"]
-    # SMALL-BATCH fast path (r12 session 3, the minhash-append
-    # mirror): a batch under the collect cap is pulled to the driver
-    # once (ids + filter-bit positions, one narrow job); generation
-    # pruning, the idempotency check (one bounded isin-pushdown
-    # membership scan instead of distinct + anti-join exchanges), the
-    # novel count and the manifest stats all derive driver-side.
-    # Results identical; larger batches keep the join formulation.
-    gens = list(m_fest["generations"])
-    gen_stats = m_fest.get("gen_stats", {})
-    id_rows = index_fs.collect_id_rows(batch, corpus_id)
-    novel = None
-    st: dict | None = None
-    n_novel = -1
-    if id_rows is not None:
-        if not id_rows:
-            return 0
-        if gen_stats:
-            bounds = index_fs.stats_from_id_rows(id_rows)
-            probe_pos = [
-                (p0, p1)
-                for _, p0, p1 in id_rows
-                if p0 is not None and p1 is not None
-            ]
-            gens = [
-                g
-                for g in gens
-                if not index_fs.generation_prunable(
-                    gen_stats.get(g), bounds, probe_pos
-                )
-            ]
-        hits: set = set()
-        if gens:
-            uniq = list({i for i, _, _ in id_rows if i is not None})
-            if uniq:
-                # include_tombstoned: a deleted id stays unavailable
-                # until compaction (the LSM id-reuse hazard)
-                hits = {
-                    r["neighbor_id"]
-                    for r in _read_vectors(
-                        spark, path, {**m_fest, "generations": gens},
-                        include_tombstoned=True,
-                    )
-                    .select("neighbor_id")
-                    .filter(F.col("neighbor_id").isin(uniq))
-                    .collect()
-                }
-        novel_rows = [t for t in id_rows if t[0] not in hits]
-        n_novel = len(novel_rows)
-        if n_novel == 0:
-            return 0
-        st = index_fs.stats_from_id_rows(novel_rows)
-        novel = (
-            batch.filter(
-                index_fs.keep_ids_filter(corpus_id, sorted(hits))
-            )
-            if hits
-            else batch
-        ).persist()
-    elif len(gens) >= index_fs.GEN_PRUNE_MIN and gen_stats:
-        # generation pruning for the idempotency anti-join (r12): skip
-        # generations provably disjoint from the batch ids ([min,max]
-        # + id Bloom — the delete/unblock machinery), gated on
-        # generation count so small indexes pay no extra jobs.
-        bk = (
-            batch.select(F.col(corpus_id).alias("neighbor_id"))
-            .distinct()
-            .persist()
-        )
+    store = IvfStore(batch.sparkSession, path)
+
+    def write_generation(m_fest, novel, known, gen):
+        novel = novel.persist()
         try:
-            _, bounds = index_fs.count_and_bounds(bk, "neighbor_id")
-            probe_pos = index_fs.filter_probe_positions(
-                bk, "neighbor_id"
-            )
-            gens = [
-                g
-                for g in gens
-                if not index_fs.generation_prunable(
-                    gen_stats.get(g), bounds, probe_pos
-                )
-            ]
-        finally:
-            bk.unpersist()
-    if novel is None:
-        if gens:
-            # include_tombstoned: a deleted id stays unavailable until
-            # compaction (re-admitting earlier would be killed by its
-            # own tombstone — the LSM id-reuse hazard, excluded by
-            # construction)
-            stored_ids = _read_vectors(
-                spark, path, {**m_fest, "generations": gens},
-                include_tombstoned=True,
-            ).select("neighbor_id")
-            novel = batch.join(
-                stored_ids,
-                batch[corpus_id] == stored_ids["neighbor_id"],
-                "left_anti",
-            ).persist()
-        else:
-            # every generation provably disjoint — the whole batch is
-            # novel
-            novel = batch.persist()
-    try:
-        if n_novel < 0:
             # large-batch path: the count the append needs anyway +
             # the generation's id bounds in one aggregate action
-            n_novel, st = index_fs.count_and_bounds(novel, corpus_id)
-        if n_novel == 0:
-            return 0
-        cents = _read_centroids(spark, path, m_fest)
-        if meta["m"] is not None:
-            _, _, codebooks = _read_pq_codebooks(spark, path, m_fest)
-            encode = _pq_encode_udf(cents, codebooks)
-            base = novel.select(
-                F.col(corpus_id).alias("neighbor_id"),
-                F.col(vec_col).cast("array<float>").alias("cv"),
-                encode(F.col(vec_col)).alias("e"),
-            ).select(
-                "neighbor_id", "cv", F.col("e.codes").alias("codes"),
-                F.col("e.cell").alias("cell"),
+            n_novel, st = known or index_fs.count_and_bounds(
+                novel, corpus_id
             )
-        else:
-            base = novel.select(
-                F.col(corpus_id).alias("neighbor_id"),
-                F.col(vec_col).cast("array<float>").alias("cv"),
-                _cell_assign_udf(cents, 1)(F.col(vec_col))[0].alias("cell"),
+            if n_novel == 0:
+                return 0, None, {}
+            cents = _read_centroids(store.spark, path, m_fest)
+            codebooks = (
+                _read_pq_codebooks(store.spark, path, m_fest)[2]
+                if m_fest["params"]["m"] is not None
+                else None
             )
-        gen = index_fs.next_gen(m_fest)
-        vec_df = base.withColumn(
-            "cn", l2_norm(as_double_array(F.col("cv")))
-        )
-        (
-            vec_df
-            .repartition("cell")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(f"{path}/vectors/gen={gen}")
-        )
-        stats = dict(m_fest.get("gen_stats", {}))
-        if st:
-            stats[gen] = st
-        # reader schemas: carried forward by the **m spread below;
-        # BACKFILLED for pre-schema manifests where derivable (the
-        # quantizer relations are not in hand here — they stay on
-        # inference until a rebuild records them)
-        schemas = m_fest.get("schemas") or index_fs.relation_schemas(
-            vectors=vec_df,
-            tombstones=vec_df.select("neighbor_id"),
-        )
-        # the COMMIT: the generation was invisible until this line.
-        # Unknown manifest keys (sync markers, future metadata) carry
-        # forward verbatim
-        index_fs.commit_manifest(
-            spark, path,
-            {
-                **{k: v for k, v in m_fest.items() if k != "_seq"},
-                "generations": m_fest["generations"] + [gen],
-                "schemas": schemas,
-                "gen_stats": stats,
-                "batches": m_fest.get("batches", [])
-                + ([batch_id] if batch_id else []),
-            },
-            m_fest["_seq"],
-        )
-        return n_novel
-    finally:
-        novel.unpersist()
+            vec_df = _encode(novel, corpus_id, vec_col, cents, codebooks)
+            store.write(
+                vec_df.repartition("cell"), store.gen_rel(gen),
+                partition_by="cell",
+            )
+            # reader schemas: carried forward from the manifest;
+            # BACKFILLED for pre-schema manifests where derivable (the
+            # quantizer relations are not in hand here — they stay on
+            # inference until a rebuild records them)
+            schemas = m_fest.get("schemas") or index_fs.relation_schemas(
+                vectors=vec_df,
+                tombstones=vec_df.select("neighbor_id"),
+            )
+            return n_novel, st, {"schemas": schemas}
+        finally:
+            novel.unpersist()
+
+    return store.append(batch, corpus_id, write_generation, batch_id)
 
 
 def delete_from_ivf_index(
@@ -658,149 +450,7 @@ def delete_from_ivf_index(
     stays unavailable to :func:`append_to_ivf_index` until
     compaction.
     """
-    spark = ids.sparkSession
-    m = _committed(spark, path)
-    index_fs.sweep_orphans(
-        spark, f"{path}/tombstones",
-        index_fs.live_union(spark, path, "tombstones"), "g",
-    )
-    blocked = (
-        ids.select(F.col(corpus_id).alias("neighbor_id")).distinct()
-    )
-    gens = list(m["generations"])
-    gen_stats = m.get("gen_stats", {})
-    # SMALL-BATCH fast path (r12 session 3, the minhash-delete
-    # mirror): collect the blocked ids once, prune generations
-    # driver-side, confirm membership with one bounded isin-pushdown
-    # scan, subtract prior tombstones with one bounded filtered read,
-    # and write the target set from a driver-built relation. Results
-    # identical; takedown waves past the cap keep the joins below.
-    id_rows = index_fs.collect_id_rows(blocked, "neighbor_id")
-    if id_rows is not None:
-        uniq = sorted({i for i, _, _ in id_rows if i is not None})
-        if not uniq:
-            return 0
-        if gen_stats:
-            bounds = index_fs.stats_from_id_rows(id_rows)
-            probe_pos = [
-                (p0, p1)
-                for _, p0, p1 in id_rows
-                if p0 is not None and p1 is not None
-            ]
-            gens = [
-                g
-                for g in gens
-                if not index_fs.generation_prunable(
-                    gen_stats.get(g), bounds, probe_pos
-                )
-            ]
-        if not gens:
-            return 0
-        hits = {
-            r["neighbor_id"]
-            for r in _read_vectors(
-                spark, path, {**m, "generations": gens},
-                include_tombstoned=True,
-            )
-            .select("neighbor_id")
-            .filter(F.col("neighbor_id").isin(uniq))
-            .collect()
-        }
-        prior_df = _read_tombstones(spark, path, m)
-        prior: set = set()
-        if prior_df is not None and hits:
-            prior = {
-                r["neighbor_id"]
-                for r in prior_df.filter(
-                    F.col("neighbor_id").isin(sorted(hits))
-                ).collect()
-            }
-        target_ids = [i for i in uniq if i in hits and i not in prior]
-        n = len(target_ids)
-        if n == 0:
-            return 0
-        target = spark.createDataFrame(
-            [(i,) for i in target_ids], blocked.schema
-        )
-        gen = index_fs.fresh_gen(spark, [f"{path}/tombstones"], None)
-        index_fs.shard_for_write(target, n).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/tombstones/{gen}")
-        schemas = dict(m.get("schemas", {}))
-        schemas.setdefault("tombstones", target.schema.json())
-        index_fs.commit_manifest(
-            spark,
-            path,
-            {
-                **{k: v for k, v in m.items() if k != "_seq"},
-                "tombstones": m.get("tombstones", []) + [gen],
-                "schemas": schemas,
-            },
-            m["_seq"],
-        )
-        return n
-    # generation pruning for the stored-id semi-join (r12): mirrors
-    # delete_from_minhash_index — generations PROVABLY holding none
-    # of the batch ids (per-generation [min,max] + id Bloom filter,
-    # the unblock machinery) are skipped, gated on generation count
-    # so small indexes pay zero extra jobs. Results identical: a
-    # pruned generation contributes nothing to the semi-join.
-    if len(gens) >= index_fs.GEN_PRUNE_MIN and gen_stats:
-        blocked = blocked.persist()
-        n_b, bounds = index_fs.count_and_bounds(
-            blocked, "neighbor_id"
-        )
-        if n_b == 0:
-            blocked.unpersist()
-            return 0
-        probe_pos = index_fs.filter_probe_positions(
-            blocked, "neighbor_id"
-        )
-        gens = [
-            g
-            for g in gens
-            if not index_fs.generation_prunable(
-                gen_stats.get(g), bounds, probe_pos
-            )
-        ]
-        if not gens:
-            blocked.unpersist()
-            return 0
-    stored = _read_vectors(
-        spark, path, {**m, "generations": gens},
-        include_tombstoned=True,
-    ).select("neighbor_id")
-    target = blocked.join(stored, "neighbor_id", "left_semi")
-    prior = _read_tombstones(spark, path, m)
-    if prior is not None:
-        target = target.join(prior, "neighbor_id", "left_anti")
-    target = target.persist()
-    try:
-        n = target.count()
-        if n == 0:
-            return 0
-        gen = index_fs.fresh_gen(spark, [f"{path}/tombstones"], None)
-        index_fs.shard_for_write(target, n).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/tombstones/{gen}")
-        # backfill the tombstone reader schema for pre-schema
-        # manifests (carried forward verbatim otherwise)
-        schemas = dict(m.get("schemas", {}))
-        schemas.setdefault("tombstones", target.schema.json())
-        index_fs.commit_manifest(
-            spark,
-            path,
-            {
-                **{k: v for k, v in m.items() if k != "_seq"},
-                "tombstones": m.get("tombstones", []) + [gen],
-                "schemas": schemas,
-            },
-            m["_seq"],
-        )
-        return n
-    finally:
-        target.unpersist()
-        blocked.unpersist()
+    return IvfStore(ids.sparkSession, path).delete(ids, corpus_id)
 
 
 def compact_ivf_index(spark: SparkSession, path: str) -> None:
@@ -812,53 +462,7 @@ def compact_ivf_index(spark: SparkSession, path: str) -> None:
     frees deleted ids for re-admission. Atomic like every mutation;
     superseded directories are swept after the manifest lands.
     """
-    m = _committed(spark, path)
-    live = index_fs.live_unions(
-        spark, path, ("generations", "quantizer", "tombstones")
-    )
-    index_fs.sweep_orphans(
-        spark,
-        f"{path}/vectors",
-        {f"gen={g}" for g in live["generations"]},
-        "gen=",
-    )
-    index_fs.sweep_orphans(
-        spark, f"{path}/quantizer", live["quantizer"], "g"
-    )
-    index_fs.sweep_orphans(
-        spark, f"{path}/tombstones", live["tombstones"], "g"
-    )
-    gen = index_fs.fresh_gen(spark, [f"{path}/vectors"], m)
-    live = _read_vectors(spark, path, m)
-    (
-        live.repartition(int(m["params"]["n_cells"]), "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{path}/vectors/gen={gen}")
-    )
-    st = index_fs.id_bounds(
-        _pinned_gen_read(spark, path, m, [gen]), "neighbor_id"
-    )
-    index_fs.commit_manifest(
-        spark,
-        path,
-        {
-            **{k: v for k, v in m.items() if k != "_seq"},
-            "generations": [gen],
-            "tombstones": [],
-            "gen_stats": {gen: st} if st else {},
-        },
-        m["_seq"],
-    )
-    # post-commit cleanup of the superseded state. An in-flight or
-    # not-yet-executed probe PLAN against the old manifest would need
-    # a retry after this sweep — the standard compaction caveat
-    # (probe_ivf_index returns lazy plans; execute them before
-    # compacting, or re-plan after).
-    index_fs.sweep_orphans(
-        spark, f"{path}/vectors", {f"gen={gen}"}, "gen="
-    )
-    index_fs.sweep_orphans(spark, f"{path}/tombstones", set(), "g")
+    IvfStore(spark, path).compact()
 
 
 def vacuum_ivf_index(
@@ -872,24 +476,7 @@ def vacuum_ivf_index(
     surviving manifest references. Newest committed state untouched;
     time travel to a dropped version errors loudly afterwards.
     Writer-context only."""
-    dropped = index_fs.drop_manifests(spark, path, keep_versions)
-    live = index_fs.live_unions(
-        spark, path, ("generations", "quantizer", "tombstones")
-    )
-    swept = []
-    swept += index_fs.sweep_orphans(
-        spark,
-        f"{path}/vectors",
-        {f"gen={g}" for g in live["generations"]},
-        "gen=",
-    )
-    swept += index_fs.sweep_orphans(
-        spark, f"{path}/quantizer", live["quantizer"], "g"
-    )
-    swept += index_fs.sweep_orphans(
-        spark, f"{path}/tombstones", live["tombstones"], "g"
-    )
-    return {"dropped_versions": dropped, "swept_dirs": swept}
+    return IvfStore(spark, path).vacuum(keep_versions)
 
 
 def unblock_ivf_ids(
@@ -913,217 +500,7 @@ def unblock_ivf_ids(
     "rewritten_generations", "candidate_generations"}``; idempotent and crash-atomic like
     every index mutation.
     """
-    m = _committed(spark, path)
-    tombs = _read_tombstones(spark, path, m)
-    if tombs is None:
-        return {"unblocked": 0, "rewritten_generations": [],
-                "candidate_generations": 0}
-    # SMALL-BATCH fast path (r12 session 3, the minhash-unblock
-    # mirror): collect the incoming ids once and intersect with the
-    # tombstones via one bounded isin-filtered read — blocked set,
-    # count, bounds and probe positions derive driver-side; the
-    # census and rewrites then consume a driver-built literal
-    # relation / plain filters. Past the cap, the join formulation.
-    blocked_ids: list | None = None
-    id_rows = index_fs.collect_id_rows(
-        ids.select(F.col(corpus_id).alias("neighbor_id")),
-        "neighbor_id",
-    )
-    if id_rows is not None:
-        uniq = sorted({i for i, _, _ in id_rows if i is not None})
-        hit = (
-            {
-                r["neighbor_id"]
-                for r in tombs.filter(
-                    F.col("neighbor_id").isin(uniq)
-                ).collect()
-            }
-            if uniq
-            else set()
-        )
-        blocked_ids = [i for i in uniq if i in hit]
-        if not blocked_ids:
-            return {"unblocked": 0, "rewritten_generations": [],
-                    "candidate_generations": 0}
-        blocked = spark.createDataFrame(
-            [(i,) for i in blocked_ids],
-            ids.select(F.col(corpus_id).alias("neighbor_id")).schema,
-        ).persist()
-    else:
-        blocked = (
-            ids.select(F.col(corpus_id).alias("neighbor_id"))
-            .distinct()
-            .join(tombs, "neighbor_id", "left_semi")
-            .persist()
-        )
-    try:
-        gen_stats = m.get("gen_stats", {})
-        if blocked_ids is not None:
-            n = len(blocked_ids)
-            rows_b = [
-                t for t in id_rows if t[0] in set(blocked_ids)
-            ]
-            st_b = index_fs.stats_from_id_rows(rows_b)
-            bounds = (
-                {"min_id": st_b["min_id"], "max_id": st_b["max_id"]}
-                if st_b
-                else None
-            )
-            probe_pos = [
-                (p0, p1)
-                for _, p0, p1 in rows_b
-                if p0 is not None and p1 is not None
-            ] or None
-        else:
-            # one action: blocked count + its id bounds + its bitmap
-            # for stats pruning
-            n, bounds = index_fs.count_and_bounds(
-                blocked, "neighbor_id"
-            )
-            if n == 0:
-                return {"unblocked": 0, "rewritten_generations": [],
-                    "candidate_generations": 0}
-            # per-id filter probe (bounded collect; see
-            # unblock_minhash_ids) — content pruning for interleaved
-            # ids
-            probe_pos = index_fs.filter_probe_positions(
-                blocked, "neighbor_id"
-            )
-        candidates = [
-            g
-            for g in m["generations"]
-            if not index_fs.generation_prunable(
-                gen_stats.get(g), bounds, probe_pos
-            )
-        ]
-        # ONE job: affected + fully-blocked census over all candidate
-        # generations (see unblock_minhash_ids)
-        from functools import reduce
-
-        affected: list[str] = []
-        fully_blocked: set[str] = set()
-        if candidates:
-            tagged = reduce(
-                DataFrame.unionByName,
-                [
-                    _pinned_gen_read(spark, path, m, [g])
-                    .select("neighbor_id")
-                    .withColumn("_g", F.lit(g))
-                    for g in candidates
-                ],
-            )
-            census = tagged.join(
-                blocked.withColumn("_b", F.lit(1)),
-                "neighbor_id",
-                "left",
-            ).groupBy("_g").agg(
-                F.count(F.lit(1)).alias("_total"),
-                F.sum(F.coalesce("_b", F.lit(0))).alias("_hit"),
-            ).collect()
-            affected = sorted(r["_g"] for r in census if r["_hit"])
-            fully_blocked = {
-                r["_g"]
-                for r in census
-                if r["_hit"] and r["_hit"] == r["_total"]
-            }
-        import re as _re
-
-        nums = [-1] + [int(g[1:]) for g in m["generations"]]
-        for parent in (f"{path}/vectors", f"{path}/quantizer",
-                       f"{path}/tombstones"):
-            for name in index_fs.list_names(spark, parent):
-                mm = _re.search(r"g(\d{6})$", name)
-                if mm:
-                    nums.append(int(mm.group(1)))
-        counter = 1 + max(nums)
-
-        def alloc() -> str:
-            nonlocal counter
-            g = "g%06d" % counter
-            counter += 1
-            return g
-
-        mapping: dict[str, str | None] = {}
-        for g in affected:
-            # fully-blocked generation → drop it from the manifest
-            # instead of writing an unreadable empty directory;
-            # decided by the census above, no extra job
-            if g in fully_blocked:
-                mapping[g] = None
-                continue
-            gnew = alloc()
-            src_gen = _pinned_gen_read(spark, path, m, [g]).drop("gen")
-            kept = (
-                src_gen.filter(
-                    index_fs.keep_ids_filter(
-                        "neighbor_id", blocked_ids
-                    )
-                )
-                if blocked_ids is not None
-                else src_gen.join(blocked, "neighbor_id", "left_anti")
-            )
-            (
-                kept.repartition("cell")
-                .write.mode("overwrite")
-                .partitionBy("cell")
-                .parquet(f"{path}/vectors/gen={gnew}")
-            )
-            mapping[g] = gnew
-        remaining = (
-            tombs.filter(
-                index_fs.keep_ids_filter("neighbor_id", blocked_ids)
-            )
-            if blocked_ids is not None
-            else tombs.join(blocked, "neighbor_id", "left_anti")
-        ).persist()
-        try:
-            new_tombs: list[str] = []
-            n_rem = remaining.count()
-            if n_rem:
-                tg = alloc()
-                index_fs.shard_for_write(remaining, n_rem).write.mode(
-                    "overwrite"
-                ).parquet(f"{path}/tombstones/{tg}")
-                new_tombs = [tg]
-            new_gens = [
-                mapping.get(g, g)
-                for g in m["generations"]
-                if mapping.get(g, g) is not None
-            ]
-            if not new_gens:
-                raise ValueError(
-                    f"unblock would leave {path} with zero"
-                    " generations (every stored row is blocked) —"
-                    " rebuild the index instead"
-                )
-            stats = {
-                mapping.get(g, g): gen_stats[g]
-                for g in m["generations"]
-                if g in gen_stats and mapping.get(g, g) is not None
-            }
-            index_fs.commit_manifest(
-                spark,
-                path,
-                {
-                    **{k: v for k, v in m.items() if k != "_seq"},
-                    "generations": new_gens,
-                    "tombstones": new_tombs,
-                    "gen_stats": stats,
-                },
-                m["_seq"],
-            )
-        finally:
-            remaining.unpersist()
-        return {
-            "unblocked": n,
-            "rewritten_generations": affected,
-            # observability for the pruning claim: how many
-            # generations survived stats+filter pruning and were
-            # actually read by the census job
-            "candidate_generations": len(candidates),
-        }
-    finally:
-        blocked.unpersist()
+    return IvfStore(spark, path).unblock(ids, corpus_id)
 
 
 def ivf_occupancy_stats(
@@ -1144,7 +521,7 @@ def ivf_occupancy_stats(
     partition column only. ``as_of`` profiles a PAST committed
     version (how did occupancy look before this week's ingest?).
     """
-    m = _committed(spark, path, as_of)
+    m = committed_manifest(spark, path, as_of)
     census = (
         _read_vectors(spark, path, m)
         .groupBy("cell")
@@ -1201,7 +578,7 @@ def probe_ivf_index_distributed(
     from sqltask_spark.data import ensure_min_partitions
     from sqltask_spark.operators.similarity import _salted_cell_join
 
-    m_fest = _committed(spark, path, as_of)
+    m_fest = committed_manifest(spark, path, as_of)
     cents = _read_centroids(spark, path, m_fest)
     assigned = queries.select(
         F.col(query_id).alias("query_id"),
@@ -1283,7 +660,7 @@ def probe_ivf_index(
     committed version (reproducible audit of an earlier serving
     state); versions reclaimed by compaction/rebuild error loudly.
     """
-    m_fest = _committed(spark, path, as_of)
+    m_fest = committed_manifest(spark, path, as_of)
     cents = _read_centroids(spark, path, m_fest)
     q_rows = queries.select(
         F.col(query_id).alias("query_id"), F.col(query_vec).alias("qv")

@@ -240,7 +240,12 @@ def learn_bpe_merges_distributed(
     # truncates the growing withColumn lineage so plan depth stays
     # bounded for large ``n_merges``. Values are bit-identical: same
     # expressions, same data, only the materialization schedule moved.
+    # The newest eager checkpoint (``anchor``) is NOT released with the
+    # lazily persisted predecessors: their successors' lineage is
+    # truncated AT it, so a lost cache block recomputes from it — it
+    # goes only once the next eager checkpoint has replaced it.
     pending = None  # predecessor cache awaiting release
+    anchor = vocab
     for rank in range(1, n_merges + 1):
         pairs = (
             vocab.select(
@@ -287,15 +292,19 @@ def learn_bpe_merges_distributed(
             ).otherwise(F.col("syms")),
         )
         if rank % _TRUNC_EVERY == 0:
-            # eager: pays one job, resets plan depth
+            # eager: pays one job, resets plan depth — nothing hangs
+            # off the previous anchor any more
             vocab = rewritten.localCheckpoint()
             old.unpersist()
+            anchor.unpersist()
+            anchor = vocab
         else:
             vocab = rewritten.persist()
-            pending = old
+            pending = old if old is not anchor else None
     if pending is not None:
         pending.unpersist()
     vocab.unpersist()
+    anchor.unpersist()
     return spark.createDataFrame(merges, _MERGE_SCHEMA)
 
 

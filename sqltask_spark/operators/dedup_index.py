@@ -78,95 +78,94 @@ from sqltask_spark.operators.dedup import (
 from sqltask_spark.operators import index_fs
 
 
-def _committed(
-    spark: SparkSession, path: str, as_of: int | None = None
-) -> dict:
-    """The newest committed manifest, or — time travel — the exact
-    version ``as_of``. Every version committed since the last
-    compaction stays readable (mutations write only new files and
-    sweeps respect the union of ALL manifests' references);
-    compaction is the retention boundary, and travelling past it
-    errors loudly instead of serving a partial index."""
-    if as_of is None:
-        m = index_fs.read_manifest(spark, path)
-        if m is None:
-            raise ValueError(f"no committed manifest under {path}")
-        return m
-    m = index_fs.read_manifest_at(spark, path, as_of)
-    if m is None:
-        raise ValueError(
-            f"version {as_of} of {path} does not exist (never"
-            f" committed, or torn); available:"
-            f" {index_fs.list_manifest_seqs(spark, path)}"
+def _bucket_sizes(postings: DataFrame) -> DataFrame:
+    """``(band, band_hash, bucket_size)`` census of a postings
+    relation."""
+    return postings.groupBy("band", "band_hash").agg(
+        F.count(F.lit(1)).cast("long").alias("bucket_size")
+    )
+
+
+class MinHashStore(index_fs.GenerationStore):
+    """The MinHash index on the shared generation protocol
+    (:class:`~sqltask_spark.operators.index_fs.GenerationStore`): a
+    generation holds the ``postings`` and ``shingles`` relations under
+    ``data/g*``, and the side relation is the merged bucket ``sizes``
+    (one full version per commit under ``sizes/``)."""
+
+    id_col = "id"
+    gen_dir = "data"
+    aux = "sizes"
+
+    def relation(
+        self, m: dict, rel: str, gens: "list[str] | None" = None
+    ) -> DataFrame:
+        """Pinned read of ``rel`` (``postings``/``shingles``) over
+        ``gens`` (default: the committed generations)."""
+        gens = m["generations"] if gens is None else gens
+        return index_fs.pinned_read(
+            self.spark, m, rel, *[f"{self.gen_path(g)}/{rel}" for g in gens]
         )
-    missing = [
-        f"data/{g}"
-        for g in m["generations"]
-        if not index_fs.path_exists(spark, f"{path}/data/{g}")
-    ]
-    if not index_fs.path_exists(spark, f"{path}/sizes/{m['sizes']}"):
-        missing.append(f"sizes/{m['sizes']}")
-    if missing:
-        raise ValueError(
-            f"version {as_of} of {path} is no longer readable —"
-            f" compaction reclaimed {missing}; time travel reaches"
-            f" back only to the last compaction"
+
+    def read_ids(self, m, gens=None):
+        return self.relation(m, "shingles", gens).select("id")
+
+    def rewrite_generation(self, m, g, gnew, keep):
+        for rel in ("postings", "shingles"):
+            self.write(keep(self.relation(m, rel, [g])), f"data/{gnew}/{rel}")
+
+    def rewrite_aux(self, m, affected, drop, alloc):
+        # sizes: subtract exactly the dropped postings' bucket counts
+        # (never a full recount — the sizes relation stays the same
+        # conservative as-built census compaction would refresh).
+        # No affected generation (a phantom tombstone whose rows are
+        # already gone) drops no postings — the committed sizes
+        # version carries over unchanged.
+        if not affected:
+            return {}
+        dropped = (
+            drop(self.relation(m, "postings", affected))
+            .groupBy("band", "band_hash")
+            .agg(F.count(F.lit(1)).cast("long").alias("c"))
         )
-    return m
+        sizes_gen = alloc()
+        self.write(
+            _read_sizes(self.spark, self.path, m)
+            .join(dropped, ["band", "band_hash"], "left")
+            .select(
+                "band",
+                "band_hash",
+                (
+                    F.col("bucket_size") - F.coalesce(F.col("c"), F.lit(0))
+                ).cast("long").alias("bucket_size"),
+            )
+            .filter(F.col("bucket_size") > 0),
+            f"sizes/{sizes_gen}",
+        )
+        return {"sizes": sizes_gen}
 
-
-def _pinned_read(
-    spark: SparkSession, m: dict, rel: str, *paths: str
-) -> DataFrame:
-    """Parquet read with the manifest-recorded schema for ``rel``
-    when present — planning then costs ZERO Spark jobs, where schema
-    inference over a multi-file relation runs a distributed
-    footer-read job per ``spark.read.parquet`` call (measured: one
-    job per unpinned read site; at 100 TB the footer sweep is real
-    work, repeated on every probe/mutation). Falls back to inference
-    for manifests committed before schemas were recorded — mutations
-    backfill the entry, so old indexes heal on their next write."""
-    import json as _json
-
-    from pyspark.sql.types import StructType
-
-    s = m.get("schemas", {}).get(rel)
-    reader = spark.read
-    if s:
-        reader = reader.schema(StructType.fromJson(_json.loads(s)))
-    return reader.parquet(*paths)
+    def write_compacted(self, m, gen, keep):
+        for rel in ("postings", "shingles"):
+            self.write(keep(self.relation(m, rel)), f"data/{gen}/{rel}")
+        # sizes recomputed over the surviving postings just written
+        self.write(
+            _bucket_sizes(self.relation(m, "postings", [gen])),
+            f"sizes/{gen}",
+        )
+        return {"sizes": gen}
 
 
 def _read_postings(spark: SparkSession, path: str, m: dict) -> DataFrame:
-    return _pinned_read(
-        spark, m, "postings",
-        *[f"{path}/data/{g}/postings" for g in m["generations"]],
-    )
+    return MinHashStore(spark, path).relation(m, "postings")
 
 
 def _read_shingles(spark: SparkSession, path: str, m: dict) -> DataFrame:
-    return _pinned_read(
-        spark, m, "shingles",
-        *[f"{path}/data/{g}/shingles" for g in m["generations"]],
-    )
+    return MinHashStore(spark, path).relation(m, "shingles")
 
 
 def _read_sizes(spark: SparkSession, path: str, m: dict) -> DataFrame:
-    return _pinned_read(
+    return index_fs.pinned_read(
         spark, m, "sizes", f"{path}/sizes/{m['sizes']}"
-    )
-
-
-def _read_tombstones(
-    spark: SparkSession, path: str, m: dict
-) -> DataFrame | None:
-    """Union of committed tombstone sets (``(id)``), or ``None``."""
-    gens = m.get("tombstones", [])
-    if not gens:
-        return None
-    return _pinned_read(
-        spark, m, "tombstones",
-        *[f"{path}/tombstones/{g}" for g in gens],
     )
 
 
@@ -179,7 +178,7 @@ def committed_manifest(
     manifest internals. The dict carries ``generations`` / ``sizes`` /
     ``params`` / ``tombstones`` / optional ``gen_stats`` + ``synced``
     and the ``_seq`` expected by the next commit."""
-    return _committed(spark, path, as_of)
+    return MinHashStore(spark, path).committed(as_of)
 
 
 def read_tombstones(
@@ -189,8 +188,10 @@ def read_tombstones(
     DataFrame, or ``None`` when no tombstone set is committed.
     ``manifest`` (from :func:`committed_manifest`) avoids a second
     manifest read when the caller already holds one."""
-    m = manifest if manifest is not None else _committed(spark, path)
-    return _read_tombstones(spark, path, m)
+    store = MinHashStore(spark, path)
+    return store.tombstones(
+        manifest if manifest is not None else store.committed()
+    )
 
 
 def read_index_ids(
@@ -202,8 +203,10 @@ def read_index_ids(
     the membership relation for sync planning. One row per stored
     document (appends anti-join committed ids, so generations never
     overlap — no distinct needed)."""
-    m = manifest if manifest is not None else _committed(spark, path)
-    return _read_shingles(spark, path, m).select("id")
+    store = MinHashStore(spark, path)
+    return store.read_ids(
+        manifest if manifest is not None else store.committed()
+    )
 
 
 def build_minhash_index(
@@ -224,6 +227,7 @@ def build_minhash_index(
     next writer."""
     assert num_perm % bands == 0, "bands must divide num_perm"
     spark = corpus.sparkSession
+    store = MinHashStore(spark, path)
     prev = index_fs.read_manifest(spark, path)
     gen = index_fs.fresh_gen(
         spark, [f"{path}/data", f"{path}/sizes"], prev
@@ -232,9 +236,7 @@ def build_minhash_index(
     try:
         wide = _signatures_wide(shingled, num_perm, seed)
         banded = _banded_signatures(wide, bands, num_perm // bands)
-        banded.write.mode("overwrite").parquet(
-            f"{path}/data/{gen}/postings"
-        )
+        store.write(banded, f"data/{gen}/postings")
         # sizes from the postings just WRITTEN, not from the banded
         # plan (r12): re-evaluating `banded` would run the exploded
         # 64-min-aggregate signature shuffle a second time over the
@@ -244,16 +246,12 @@ def build_minhash_index(
         # and at 100 TB it avoids pinning corpus-scale signatures in
         # executor memory that a persist would cost.
         # (schema pinned from the plan just written — no inference job)
-        sizes_df = (
+        sizes_df = _bucket_sizes(
             spark.read.schema(banded.schema)
             .parquet(f"{path}/data/{gen}/postings")
-            .groupBy("band", "band_hash")
-            .agg(F.count(F.lit(1)).cast("long").alias("bucket_size"))
         )
-        sizes_df.write.mode("overwrite").parquet(f"{path}/sizes/{gen}")
-        shingled.write.mode("overwrite").parquet(
-            f"{path}/data/{gen}/shingles"
-        )
+        store.write(sizes_df, f"sizes/{gen}")
+        store.write(shingled, f"data/{gen}/shingles")
         st = index_fs.id_bounds(shingled, "id")
         # reader schemas ride the manifest (like the MERGE tables'
         # ``schema``): every later read plans with ZERO jobs instead
@@ -262,39 +260,32 @@ def build_minhash_index(
             postings=banded, shingles=shingled, sizes=sizes_df,
             tombstones=shingled.select("id"),
         )
-        index_fs.commit_manifest(
-            spark,
-            path,
-            {
-                # unknown manifest keys (sync markers, batch ledger,
-                # future metadata) carry forward verbatim — a rebuild
-                # must never strip another subsystem's state
-                **{k: v for k, v in (prev or {}).items()
-                   if k != "_seq"},
-                "generations": [gen],
-                "sizes": gen,
-                "schemas": schemas,
-                # a rebuild writes exactly its input corpus; the
-                # tombstone set resets (retention boundary)
-                "tombstones": [],
-                # per-generation id range: lets targeted rewrites
-                # (unblock_minhash_ids) prune untouched generations
-                # without reading them
-                "gen_stats": {gen: st} if st else {},
-                # signature params ride IN the manifest: a probe must
-                # band exactly as the generation set it reads was
-                # signed, and the manifest is the only artifact that
-                # changes atomically with that set (a separate meta
-                # file could tear against it on rebuild)
-                "params": {
-                    "num_perm": num_perm,
-                    "bands": bands,
-                    "seed": seed,
-                    "shingle_n": shingle_n,
-                },
+        # unknown manifest keys (sync markers, batch ledger, future
+        # metadata) carry forward verbatim — a rebuild must never
+        # strip another subsystem's state
+        store.commit(prev, {
+            "generations": [gen],
+            "sizes": gen,
+            "schemas": schemas,
+            # a rebuild writes exactly its input corpus; the
+            # tombstone set resets (retention boundary)
+            "tombstones": [],
+            # per-generation id range: lets targeted rewrites
+            # (unblock_minhash_ids) prune untouched generations
+            # without reading them
+            "gen_stats": {gen: st} if st else {},
+            # signature params ride IN the manifest: a probe must
+            # band exactly as the generation set it reads was
+            # signed, and the manifest is the only artifact that
+            # changes atomically with that set (a separate meta
+            # file could tear against it on rebuild)
+            "params": {
+                "num_perm": num_perm,
+                "bands": bands,
+                "seed": seed,
+                "shingle_n": shingle_n,
             },
-            prev["_seq"] if prev else -1,
-        )
+        })
     finally:
         shingled.unpersist()
 
@@ -331,202 +322,70 @@ def append_to_minhash_index(
     callers and for ids trimmed past the retention horizon
     (:func:`~sqltask_spark.operators.index_fs.trim_batches`).
     """
-    spark = batch.sparkSession
-    m = _committed(spark, path)
-    if batch_id is not None and batch_id in m.get("batches", []):
-        return 0
-    # sweep debris of a previously crashed append (uncommitted dirs).
-    # Committed = the UNION over all manifests, not just the newest:
-    # older versions stay time-travel readable until compaction
-    live = index_fs.live_unions(
-        spark, path, ("generations", "sizes", "tombstones")
-    )
-    index_fs.sweep_orphans(
-        spark, f"{path}/data", live["generations"], "g"
-    )
-    index_fs.sweep_orphans(spark, f"{path}/sizes", live["sizes"], "g")
-    index_fs.sweep_orphans(
-        spark, f"{path}/tombstones", live["tombstones"], "g"
-    )
-    meta = m["params"]
-    # SMALL-BATCH fast path (r12 session 3, guide §1.2): a batch
-    # under the collect cap is pulled to the driver ONCE (ids +
-    # filter-bit positions, one narrow job) and everything per-batch
-    # derives from it — generation pruning (no extra stats jobs), the
-    # idempotency check (one bounded membership scan with an isin
-    # pushdown instead of distinct + anti-join exchanges), the novel
-    # count and the manifest stats (driver-side fold, dropping the
-    # count_and_bounds aggregate job). Results identical; larger
-    # batches keep the join formulation below.
-    gens = list(m["generations"])
-    gen_stats = m.get("gen_stats", {})
-    id_rows = index_fs.collect_id_rows(batch, id_col)
-    novel = None
-    st: dict | None = None
-    n_novel = -1
-    if id_rows is not None:
-        if not id_rows:
-            return 0
-        if gen_stats:
-            bounds = index_fs.stats_from_id_rows(id_rows)
-            probe_pos = [
-                (p0, p1)
-                for _, p0, p1 in id_rows
-                if p0 is not None and p1 is not None
-            ]
-            gens = [
-                g
-                for g in gens
-                if not index_fs.generation_prunable(
-                    gen_stats.get(g), bounds, probe_pos
-                )
-            ]
-        hits: set = set()
-        if gens:
-            uniq = list({i for i, _, _ in id_rows if i is not None})
-            if uniq:
-                hits = {
-                    r["id"]
-                    for r in _read_shingles(
-                        spark, path, {**m, "generations": gens}
-                    )
-                    .select("id")
-                    .filter(F.col("id").isin(uniq))
-                    .collect()
-                }
-        novel_rows = [t for t in id_rows if t[0] not in hits]
-        n_novel = len(novel_rows)
-        if n_novel == 0:
-            return 0
-        st = index_fs.stats_from_id_rows(novel_rows)
-        novel = (
-            batch.filter(index_fs.keep_ids_filter(id_col, sorted(hits)))
-            if hits
-            else batch
-        )
-        # size the CPU-spread guard to the KNOWN batch (~256 docs per
+    store = MinHashStore(batch.sparkSession, path)
+
+    def write_generation(m, novel, known, gen):
+        meta = m["params"]
+        # size the CPU-spread guard to a KNOWN batch (~256 docs per
         # task): repartitioning a 1-row window into the session's 32
         # partitions is an exchange + 32-task stages of pure overhead
-        mp = max(
-            1,
-            min(
-                spark.sparkContext.defaultParallelism,
-                -(-n_novel // 256),
-            ),
-        )
-    else:
-        # generation pruning for the idempotency anti-join (r12): the
-        # join exists to drop already-indexed ids, so generations
-        # PROVABLY holding none of the batch ids ([min,max] + id
-        # Bloom — the delete/unblock machinery) need not be read at
-        # all. Gated on generation count like the delete path: two
-        # batch-sized stats jobs buy a pruned corpus-id scan only
-        # once the index has accumulated generations worth skipping.
-        if len(gens) >= index_fs.GEN_PRUNE_MIN and gen_stats:
-            bk = batch.select(
-                F.col(id_col).alias("id")
-            ).distinct().persist()
-            try:
-                _, bounds = index_fs.count_and_bounds(bk, "id")
-                probe_pos = index_fs.filter_probe_positions(bk, "id")
-                gens = [
-                    g
-                    for g in gens
-                    if not index_fs.generation_prunable(
-                        gen_stats.get(g), bounds, probe_pos
-                    )
-                ]
-            finally:
-                bk.unpersist()
-        if gens:
-            stored_ids = (
-                _read_shingles(spark, path, {**m, "generations": gens})
-                .select("id")
-                .distinct()
-            )
-            novel = batch.join(
-                stored_ids, batch[id_col] == stored_ids["id"],
-                "left_anti",
-            )
-        else:
-            # every generation provably disjoint from the batch — the
-            # whole batch is novel
-            novel = batch
         mp = None
-    bsh = shingled_docs(
-        novel, id_col, text_col, meta["shingle_n"],
-        min_partitions=mp if id_rows is not None else None,
-    ).persist()
-    banded = None
-    try:
-        if n_novel < 0:
+        if known is not None:
+            mp = max(
+                1,
+                min(
+                    store.spark.sparkContext.defaultParallelism,
+                    -(-known[0] // 256),
+                ),
+            )
+        bsh = shingled_docs(
+            novel, id_col, text_col, meta["shingle_n"], min_partitions=mp
+        ).persist()
+        banded = None
+        try:
             # large-batch path: the count the append needs anyway +
             # the generation's id bounds in one aggregate action
-            n_novel, st = index_fs.count_and_bounds(bsh, "id")
-        if n_novel == 0:
-            return 0
-        gen = index_fs.next_gen(m)
-        wide = _signatures_wide(bsh, meta["num_perm"], meta["seed"])
-        banded = _banded_signatures(
-            wide, meta["bands"], meta["num_perm"] // meta["bands"]
-        ).persist()
-        banded.write.mode("overwrite").parquet(
-            f"{path}/data/{gen}/postings"
-        )
-        bsh.write.mode("overwrite").parquet(f"{path}/data/{gen}/shingles")
-        new_sizes = banded.groupBy("band", "band_hash").agg(
-            F.count(F.lit(1)).cast("long").alias("bucket_size")
-        )
-        # merged sizes go to a NEW version directory — the committed
-        # one is never touched (the old in-place swap both raced its
-        # own read plan and tore under a crash), and never a driver
-        # collect (the sizes relation is bucket-count-sized —
-        # corpus-scaled at 100 TB)
-        (
-            _read_sizes(spark, path, m)
-            .unionByName(new_sizes)
-            .groupBy("band", "band_hash")
-            .agg(F.sum("bucket_size").cast("long").alias("bucket_size"))
-            .write.mode("overwrite")
-            .parquet(f"{path}/sizes/{gen}")
-        )
-        stats = dict(m.get("gen_stats", {}))
-        if st:
-            stats[gen] = st
-        # reader schemas: carried forward by the **m spread below;
-        # BACKFILLED here for pre-schema manifests (every relation's
-        # schema is in hand), so an old index heals on its next append
-        schemas = m.get("schemas") or index_fs.relation_schemas(
-            postings=banded, shingles=bsh, sizes=new_sizes,
-            tombstones=bsh.select("id"),
-        )
-        # the COMMIT: everything above was invisible until this line.
-        # Unknown manifest keys (sync markers, future metadata) are
-        # carried forward verbatim — a mutation must never strip
-        # another subsystem's state
-        index_fs.commit_manifest(
-            spark,
-            path,
-            {
-                **{k: v for k, v in m.items() if k != "_seq"},
-                "generations": m["generations"] + [gen],
-                "sizes": gen,
-                "schemas": schemas,
-                "gen_stats": stats,
-                "batches": m.get("batches", [])
-                + ([batch_id] if batch_id else []),
-            },
-            m["_seq"],
-        )
-        return n_novel
-    finally:
-        # release BOTH caches on every exit — a crash between the
-        # postings write and the commit must not leak the banded
-        # signatures for the session (the calibration-entry leak
-        # class, ADVICE r8)
-        if banded is not None:
-            banded.unpersist()
-        bsh.unpersist()
+            n_novel, st = known or index_fs.count_and_bounds(bsh, "id")
+            if n_novel == 0:
+                return 0, None, {}
+            wide = _signatures_wide(bsh, meta["num_perm"], meta["seed"])
+            banded = _banded_signatures(
+                wide, meta["bands"], meta["num_perm"] // meta["bands"]
+            ).persist()
+            store.write(banded, f"data/{gen}/postings")
+            store.write(bsh, f"data/{gen}/shingles")
+            new_sizes = _bucket_sizes(banded)
+            # merged sizes go to a NEW version directory — the
+            # committed one is never touched (the old in-place swap
+            # both raced its own read plan and tore under a crash),
+            # and never a driver collect (the sizes relation is
+            # bucket-count-sized — corpus-scaled at 100 TB)
+            store.write(
+                _read_sizes(store.spark, path, m)
+                .unionByName(new_sizes)
+                .groupBy("band", "band_hash")
+                .agg(F.sum("bucket_size").cast("long").alias("bucket_size")),
+                f"sizes/{gen}",
+            )
+            # reader schemas: carried forward from the manifest;
+            # BACKFILLED here for pre-schema manifests (every
+            # relation's schema is in hand), so an old index heals on
+            # its next append
+            schemas = m.get("schemas") or index_fs.relation_schemas(
+                postings=banded, shingles=bsh, sizes=new_sizes,
+                tombstones=bsh.select("id"),
+            )
+            return n_novel, st, {"sizes": gen, "schemas": schemas}
+        finally:
+            # release BOTH caches on every exit — a crash between the
+            # postings write and the commit must not leak the banded
+            # signatures for the session (the calibration-entry leak
+            # class)
+            if banded is not None:
+                banded.unpersist()
+            bsh.unpersist()
+
+    return store.append(batch, id_col, write_generation, batch_id)
 
 
 def delete_from_minhash_index(
@@ -548,145 +407,7 @@ def delete_from_minhash_index(
     re-admitting it earlier would be killed by its own tombstone
     (the classic LSM id-reuse hazard, excluded by construction).
     """
-    spark = ids.sparkSession
-    m = _committed(spark, path)
-    index_fs.sweep_orphans(
-        spark, f"{path}/tombstones",
-        index_fs.live_union(spark, path, "tombstones"), "g",
-    )
-    blocked = ids.select(F.col(id_col).alias("id")).distinct()
-    gens = list(m["generations"])
-    gen_stats = m.get("gen_stats", {})
-    # SMALL-BATCH fast path (r12 session 3): collect the blocked ids
-    # once (one narrow job), prune generations driver-side, confirm
-    # membership with one bounded isin-pushdown scan, subtract prior
-    # tombstones with one bounded filtered read, and write the target
-    # set from a driver-built relation — replacing the distinct/
-    # semi-join/anti-join/count formulation (4-5 AQE stage jobs per
-    # delete, per CDC epoch). Identical results; takedown waves past
-    # the cap keep the join formulation below.
-    id_rows = index_fs.collect_id_rows(blocked, "id")
-    if id_rows is not None:
-        uniq = sorted({i for i, _, _ in id_rows if i is not None})
-        if not uniq:
-            return 0
-        if gen_stats:
-            bounds = index_fs.stats_from_id_rows(id_rows)
-            probe_pos = [
-                (p0, p1)
-                for _, p0, p1 in id_rows
-                if p0 is not None and p1 is not None
-            ]
-            gens = [
-                g
-                for g in gens
-                if not index_fs.generation_prunable(
-                    gen_stats.get(g), bounds, probe_pos
-                )
-            ]
-        if not gens:
-            return 0
-        hits = {
-            r["id"]
-            for r in _read_shingles(
-                spark, path, {**m, "generations": gens}
-            )
-            .select("id")
-            .filter(F.col("id").isin(uniq))
-            .collect()
-        }
-        prior_df = _read_tombstones(spark, path, m)
-        prior: set = set()
-        if prior_df is not None and hits:
-            prior = {
-                r["id"]
-                for r in prior_df.filter(
-                    F.col("id").isin(sorted(hits))
-                ).collect()
-            }
-        target_ids = [i for i in uniq if i in hits and i not in prior]
-        n = len(target_ids)
-        if n == 0:
-            return 0
-        target = spark.createDataFrame(
-            [(i,) for i in target_ids], blocked.schema
-        )
-        gen = index_fs.fresh_gen(spark, [f"{path}/tombstones"], None)
-        index_fs.shard_for_write(target, n).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/tombstones/{gen}")
-        schemas = dict(m.get("schemas", {}))
-        schemas.setdefault("tombstones", target.schema.json())
-        index_fs.commit_manifest(
-            spark,
-            path,
-            {
-                **{k: v for k, v in m.items() if k != "_seq"},
-                "tombstones": m.get("tombstones", []) + [gen],
-                "schemas": schemas,
-            },
-            m["_seq"],
-        )
-        return n
-    # generation pruning for the stored-id semi-join (r12): the join
-    # exists to drop never-indexed ids, so generations PROVABLY
-    # holding none of the batch ids (per-generation [min,max] + id
-    # Bloom filter — the unblock machinery) need not be read at all.
-    # Gated on generation count: two tiny batch-sized stats jobs buy
-    # a pruned corpus scan only once the index has accumulated
-    # generations worth skipping (scale-adaptive, results identical —
-    # a pruned generation contributes nothing to the semi-join).
-    if len(gens) >= index_fs.GEN_PRUNE_MIN and gen_stats:
-        blocked = blocked.persist()
-        n_b, bounds = index_fs.count_and_bounds(blocked, "id")
-        if n_b == 0:
-            blocked.unpersist()
-            return 0
-        probe_pos = index_fs.filter_probe_positions(blocked, "id")
-        gens = [
-            g
-            for g in gens
-            if not index_fs.generation_prunable(
-                gen_stats.get(g), bounds, probe_pos
-            )
-        ]
-        if not gens:
-            blocked.unpersist()
-            return 0
-    stored = _read_shingles(
-        spark, path, {**m, "generations": gens}
-    ).select("id")
-    target = blocked.join(stored, "id", "left_semi")
-    prior = _read_tombstones(spark, path, m)
-    if prior is not None:
-        target = target.join(prior, "id", "left_anti")
-    target = target.persist()
-    try:
-        n = target.count()
-        if n == 0:
-            return 0
-        gen = index_fs.fresh_gen(spark, [f"{path}/tombstones"], None)
-        index_fs.shard_for_write(target, n).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/tombstones/{gen}")
-        # backfill the tombstone reader schema for pre-schema
-        # manifests (carried forward verbatim otherwise)
-        schemas = dict(m.get("schemas", {}))
-        schemas.setdefault("tombstones", target.schema.json())
-        index_fs.commit_manifest(
-            spark,
-            path,
-            {
-                **{k: v for k, v in m.items() if k != "_seq"},
-                "tombstones": m.get("tombstones", []) + [gen],
-                "schemas": schemas,
-            },
-            m["_seq"],
-        )
-        return n
-    finally:
-        target.unpersist()
-        blocked.unpersist()
+    return MinHashStore(ids.sparkSession, path).delete(ids, id_col)
 
 
 def compact_minhash_index(spark: SparkSession, path: str) -> None:
@@ -703,62 +424,7 @@ def compact_minhash_index(spark: SparkSession, path: str) -> None:
     state until the manifest lands, and the superseded directories
     are swept once it has.
     """
-    m = _committed(spark, path)
-    live = index_fs.live_unions(
-        spark, path, ("generations", "sizes", "tombstones")
-    )
-    index_fs.sweep_orphans(
-        spark, f"{path}/data", live["generations"], "g"
-    )
-    index_fs.sweep_orphans(spark, f"{path}/sizes", live["sizes"], "g")
-    index_fs.sweep_orphans(
-        spark, f"{path}/tombstones", live["tombstones"], "g"
-    )
-    gen = index_fs.fresh_gen(
-        spark, [f"{path}/data", f"{path}/sizes"], m
-    )
-    postings = _read_postings(spark, path, m)
-    shingles = _read_shingles(spark, path, m)
-    tombs = _read_tombstones(spark, path, m)
-    if tombs is not None:
-        postings = postings.join(tombs, "id", "left_anti")
-        shingles = shingles.join(tombs, "id", "left_anti")
-    postings.write.mode("overwrite").parquet(
-        f"{path}/data/{gen}/postings"
-    )
-    shingles.write.mode("overwrite").parquet(
-        f"{path}/data/{gen}/shingles"
-    )
-    (
-        _pinned_read(spark, m, "postings", f"{path}/data/{gen}/postings")
-        .groupBy("band", "band_hash")
-        .agg(F.count(F.lit(1)).cast("long").alias("bucket_size"))
-        .write.mode("overwrite")
-        .parquet(f"{path}/sizes/{gen}")
-    )
-    st = index_fs.id_bounds(
-        _pinned_read(spark, m, "shingles", f"{path}/data/{gen}/shingles"),
-        "id",
-    )
-    index_fs.commit_manifest(
-        spark,
-        path,
-        {
-            **{k: v for k, v in m.items() if k != "_seq"},
-            "generations": [gen],
-            "sizes": gen,
-            "tombstones": [],
-            "gen_stats": {gen: st} if st else {},
-        },
-        m["_seq"],
-    )
-    # post-commit cleanup of the superseded state. In-flight probes
-    # that PLANNED against the old manifest may need a retry — the
-    # standard compaction caveat; probes in this module eagerly
-    # materialize, so a returned result is never invalidated.
-    index_fs.sweep_orphans(spark, f"{path}/data", {gen}, "g")
-    index_fs.sweep_orphans(spark, f"{path}/sizes", {gen}, "g")
-    index_fs.sweep_orphans(spark, f"{path}/tombstones", set(), "g")
+    MinHashStore(spark, path).compact()
 
 
 def vacuum_minhash_index(
@@ -780,21 +446,7 @@ def vacuum_minhash_index(
     time travel to a dropped version errors loudly afterwards, the
     newest committed state is untouched (probe-invariance
     pytest-pinned). Writer-context only, like every mutation."""
-    dropped = index_fs.drop_manifests(spark, path, keep_versions)
-    live = index_fs.live_unions(
-        spark, path, ("generations", "sizes", "tombstones")
-    )
-    swept = []
-    swept += index_fs.sweep_orphans(
-        spark, f"{path}/data", live["generations"], "g"
-    )
-    swept += index_fs.sweep_orphans(
-        spark, f"{path}/sizes", live["sizes"], "g"
-    )
-    swept += index_fs.sweep_orphans(
-        spark, f"{path}/tombstones", live["tombstones"], "g"
-    )
-    return {"dropped_versions": dropped, "swept_dirs": swept}
+    return MinHashStore(spark, path).vacuum(keep_versions)
 
 
 def unblock_minhash_ids(
@@ -829,260 +481,7 @@ def unblock_minhash_ids(
     stay readable for time travel until the next compaction sweeps
     them.
     """
-    m = _committed(spark, path)
-    tombs = _read_tombstones(spark, path, m)
-    if tombs is None:
-        return {"unblocked": 0, "rewritten_generations": [],
-                "candidate_generations": 0}
-    # SMALL-BATCH fast path (r12 session 3): collect the incoming ids
-    # once (one narrow job) and intersect with the tombstones via one
-    # bounded isin-filtered read — the blocked set, its count, bounds
-    # and probe positions all derive driver-side, dropping the
-    # distinct+semi-join persist, the count_and_bounds aggregate and
-    # the positions collect (3-4 AQE stage jobs per sync epoch). The
-    # blocked relation the census and rewrites consume is then a
-    # driver-built literal; results identical. Past the cap, the join
-    # formulation below.
-    blocked_ids: list | None = None
-    id_rows = index_fs.collect_id_rows(
-        ids.select(F.col(id_col).alias("id")), "id"
-    )
-    if id_rows is not None:
-        uniq = sorted({i for i, _, _ in id_rows if i is not None})
-        hit = (
-            {
-                r["id"]
-                for r in tombs.filter(F.col("id").isin(uniq)).collect()
-            }
-            if uniq
-            else set()
-        )
-        blocked_ids = [i for i in uniq if i in hit]
-        if not blocked_ids:
-            return {"unblocked": 0, "rewritten_generations": [],
-                    "candidate_generations": 0}
-        blocked = spark.createDataFrame(
-            [(i,) for i in blocked_ids],
-            ids.select(F.col(id_col).alias("id")).schema,
-        ).persist()
-    else:
-        blocked = (
-            ids.select(F.col(id_col).alias("id"))
-            .distinct()
-            .join(tombs, "id", "left_semi")
-            .persist()
-        )
-    try:
-        if blocked_ids is not None:
-            n = len(blocked_ids)
-            rows_b = [
-                t for t in id_rows if t[0] in set(blocked_ids)
-            ]
-            st_b = index_fs.stats_from_id_rows(rows_b)
-            bounds = (
-                {"min_id": st_b["min_id"], "max_id": st_b["max_id"]}
-                if st_b
-                else None
-            )
-            probe_pos = [
-                (p0, p1)
-                for _, p0, p1 in rows_b
-                if p0 is not None and p1 is not None
-            ] or None
-        else:
-            # one action: blocked count + its id bounds + its bitmap
-            # for stats pruning
-            n, bounds = index_fs.count_and_bounds(blocked, "id")
-            if n == 0:
-                return {"unblocked": 0, "rewritten_generations": [],
-                    "candidate_generations": 0}
-            # per-id filter probe: bounded collect of hash positions
-            # (a set past the cap falls back to the
-            # bitmap-intersection test inside generation_prunable).
-            # Under hashed/interleaved ids the [min,max] ranges all
-            # overlap; the CONTENT filter is what keeps the census
-            # off untouched generations then.
-            probe_pos = index_fs.filter_probe_positions(blocked, "id")
-        gen_stats = m.get("gen_stats", {})
-        candidates = [
-            g
-            for g in m["generations"]
-            if not index_fs.generation_prunable(
-                gen_stats.get(g), bounds, probe_pos
-            )
-        ]
-        # ONE job decides, for every candidate generation at once,
-        # whether it holds blocked rows AND whether anything would
-        # survive its rewrite (a per-generation semi-join loop costs
-        # one Spark job per generation — at small window sizes that
-        # fixed job count, not data volume, was the measured cost)
-        from functools import reduce
-
-        affected: list[str] = []
-        fully_blocked: set[str] = set()
-        if candidates:
-            tagged = reduce(
-                DataFrame.unionByName,
-                [
-                    _pinned_read(
-                        spark, m, "shingles",
-                        f"{path}/data/{g}/shingles",
-                    )
-                    .select("id")
-                    .withColumn("_g", F.lit(g))
-                    for g in candidates
-                ],
-            )
-            census = tagged.join(
-                blocked.withColumn("_b", F.lit(1)), "id", "left"
-            ).groupBy("_g").agg(
-                F.count(F.lit(1)).alias("_total"),
-                F.sum(F.coalesce("_b", F.lit(0))).alias("_hit"),
-            ).collect()
-            affected = sorted(
-                r["_g"] for r in census if r["_hit"]
-            )
-            fully_blocked = {
-                r["_g"]
-                for r in census
-                if r["_hit"] and r["_hit"] == r["_total"]
-            }
-        # fresh sequential names past everything committed OR on disk
-        # (the fresh_gen rule, extended to a batch of allocations)
-        import re as _re
-
-        nums = [-1] + [int(g[1:]) for g in m["generations"]]
-        for parent in (f"{path}/data", f"{path}/sizes",
-                       f"{path}/tombstones"):
-            for name in index_fs.list_names(spark, parent):
-                mm = _re.search(r"g(\d{6})$", name)
-                if mm:
-                    nums.append(int(mm.group(1)))
-        counter = 1 + max(nums)
-
-        def alloc() -> str:
-            nonlocal counter
-            g = "g%06d" % counter
-            counter += 1
-            return g
-
-        mapping: dict[str, str | None] = {}
-        for g in affected:
-            # a generation whose every row is blocked REWRITES TO
-            # NOTHING — drop it from the manifest instead of writing
-            # an empty (hence unreadable) parquet directory; decided
-            # by the census above, no extra job
-            if g in fully_blocked:
-                mapping[g] = None
-                continue
-            gnew = alloc()
-            for rel in ("postings", "shingles"):
-                src_rel = _pinned_read(
-                    spark, m, rel, f"{path}/data/{g}/{rel}"
-                )
-                kept = (
-                    src_rel.filter(
-                        index_fs.keep_ids_filter("id", blocked_ids)
-                    )
-                    if blocked_ids is not None
-                    else src_rel.join(blocked, "id", "left_anti")
-                )
-                kept.write.mode("overwrite").parquet(
-                    f"{path}/data/{gnew}/{rel}"
-                )
-            mapping[g] = gnew
-        # sizes: subtract exactly the dropped postings' bucket counts
-        # (never a full recount — the sizes relation stays the same
-        # conservative as-built census compaction would refresh).
-        # No affected generation (a phantom tombstone whose rows are
-        # already gone) drops no postings — the committed sizes
-        # version carries over unchanged.
-        sizes_gen = m["sizes"]
-        if affected:
-            dropped_src = _pinned_read(
-                spark, m, "postings",
-                *[f"{path}/data/{g}/postings" for g in affected],
-            )
-            dropped = (
-                dropped_src.filter(F.col("id").isin(blocked_ids))
-                if blocked_ids is not None
-                else dropped_src.join(blocked, "id", "left_semi")
-            ).groupBy("band", "band_hash").agg(
-                F.count(F.lit(1)).cast("long").alias("c")
-            )
-            sizes_gen = alloc()
-            (
-                _read_sizes(spark, path, m)
-                .join(dropped, ["band", "band_hash"], "left")
-                .select(
-                    "band",
-                    "band_hash",
-                    (
-                        F.col("bucket_size")
-                        - F.coalesce(F.col("c"), F.lit(0))
-                    ).cast("long").alias("bucket_size"),
-                )
-                .filter(F.col("bucket_size") > 0)
-                .write.mode("overwrite")
-                .parquet(f"{path}/sizes/{sizes_gen}")
-            )
-        # tombstones minus the freed ids, as ONE fresh set
-        remaining = (
-            tombs.filter(index_fs.keep_ids_filter("id", blocked_ids))
-            if blocked_ids is not None
-            else tombs.join(blocked, "id", "left_anti")
-        ).persist()
-        try:
-            new_tombs: list[str] = []
-            n_rem = remaining.count()
-            if n_rem:
-                tg = alloc()
-                index_fs.shard_for_write(remaining, n_rem).write.mode(
-                    "overwrite"
-                ).parquet(f"{path}/tombstones/{tg}")
-                new_tombs = [tg]
-            new_gens = [
-                mapping.get(g, g)
-                for g in m["generations"]
-                if mapping.get(g, g) is not None
-            ]
-            if not new_gens:
-                raise ValueError(
-                    f"unblock would leave {path} with zero"
-                    " generations (every stored row is blocked) —"
-                    " rebuild the index instead"
-                )
-            # rewritten generations keep their OLD bounds — a
-            # conservative superset range stays valid for pruning
-            stats = {
-                mapping.get(g, g): gen_stats[g]
-                for g in m["generations"]
-                if g in gen_stats and mapping.get(g, g) is not None
-            }
-            index_fs.commit_manifest(
-                spark,
-                path,
-                {
-                    **{k: v for k, v in m.items() if k != "_seq"},
-                    "generations": new_gens,
-                    "sizes": sizes_gen,
-                    "tombstones": new_tombs,
-                    "gen_stats": stats,
-                },
-                m["_seq"],
-            )
-        finally:
-            remaining.unpersist()
-        return {
-            "unblocked": n,
-            "rewritten_generations": affected,
-            # observability for the pruning claim: how many
-            # generations survived stats+filter pruning and were
-            # actually read by the census job
-            "candidate_generations": len(candidates),
-        }
-    finally:
-        blocked.unpersist()
+    return MinHashStore(spark, path).unblock(ids, id_col)
 
 
 def probe_minhash_index(
@@ -1108,9 +507,12 @@ def probe_minhash_index(
     audit of an earlier screening decision); versions reclaimed by
     compaction error loudly.
     """
+    from collections import Counter
+
     from sqltask_spark.data import materialize_and_release
 
-    m = _committed(spark, path, as_of)
+    store = MinHashStore(spark, path)
+    m = store.committed(as_of)
     meta = m["params"]
     # TINY-BATCH serving fast path (r13, VERDICT r12 next #5, guide
     # §1.2/§6): a probe of a handful of documents — the CDC sync
@@ -1128,9 +530,18 @@ def probe_minhash_index(
     # equi-join conditions stay on top of every prefilter, so a
     # prefilter only removes rows that provably cannot match; results
     # are identical, and larger batches keep the join formulation
-    # (their probe work is corpus-shaped anyway).
-    fast_ids = max(1, index_fs.SMALL_BATCH_CAP // int(meta["bands"]))
-    id_rows = index_fs.collect_id_rows(batch, id_col, cap=fast_ids)
+    # (their probe work is corpus-shaped anyway). An index with more
+    # bands than the cap never takes the arm: even one document's
+    # literals would pass the measured isin-vs-join crossover, and a
+    # cap of 0 disables the arm outright.
+    bands = int(meta["bands"])
+    id_rows = (
+        index_fs.collect_id_rows(
+            batch, id_col, cap=index_fs.SMALL_BATCH_CAP // bands
+        )
+        if bands <= index_fs.SMALL_BATCH_CAP
+        else None
+    )
     sizes = _read_sizes(spark, path, m).filter(
         F.col("bucket_size") <= F.lit(max_bucket_size)
     )
@@ -1138,7 +549,7 @@ def probe_minhash_index(
     corpus_sh = _read_shingles(spark, path, m).select(
         F.col("id").alias("corpus_id"), F.col("h").alias("h_c")
     )
-    tombs = _read_tombstones(spark, path, m)
+    tombs = store.tombstones(m)
     bsh = shingled_docs(
         batch, id_col, text_col, meta["shingle_n"],
         min_partitions=1 if id_rows is not None else None,
@@ -1176,30 +587,38 @@ def probe_minhash_index(
         postings = postings.join(
             sizes.select("band", "band_hash"), ["band", "band_hash"]
         )
-        cand = (
+        pairs = (
             (F.broadcast(banded) if cand_hint else banded)
             .join(postings, ["band", "band_hash"])
             .filter(F.col("batch_id") != F.col("id"))
-            .groupBy(
-                "batch_id", F.col("id").alias("corpus_id")
-            )
-            .agg(F.count(F.lit(1)).alias("n_shared_bands"))
+            .select("batch_id", F.col("id").alias("corpus_id"))
+        )
+        cand = pairs.groupBy("batch_id", "corpus_id").agg(
+            F.count(F.lit(1)).alias("n_shared_bands")
         )
         if id_rows is not None:
-            # bounded candidate collect → pushdown on the shingle
-            # verify scan; an adversarial bucket blowup (> cap pairs)
-            # keeps the join formulation on the already-prefiltered
-            # postings
-            crows = cand.limit(index_fs.SMALL_BATCH_CAP + 1).collect()
-            if len(crows) <= index_fs.SMALL_BATCH_CAP:
-                cids = sorted({r["corpus_id"] for r in crows})
+            # bounded collect of the JOINED pair rows, counted into
+            # candidates driver-side → pushdown on the shingle verify
+            # scan. A pair shares at most ``bands`` bands, so ≤ cap
+            # candidates arrive as ≤ cap·bands rows; past either bound
+            # (an adversarial bucket blowup) the aggregate above runs
+            # in Spark over the already-prefiltered postings — once:
+            # the bounded scan aggregated nothing and stops early
+            bound = index_fs.SMALL_BATCH_CAP * bands
+            prows = pairs.limit(bound + 1).collect()
+            shared = Counter((r["batch_id"], r["corpus_id"]) for r in prows)
+            if len(prows) <= bound and len(shared) <= index_fs.SMALL_BATCH_CAP:
+                cids = sorted({c for _, c in shared})
                 corpus_sh = corpus_sh.filter(
                     F.col("corpus_id").isin(cids)
                     if cids
                     else F.lit(False)
                 )
                 cand = F.broadcast(
-                    spark.createDataFrame(crows, cand.schema)
+                    spark.createDataFrame(
+                        [(b, c, n) for (b, c), n in shared.items()],
+                        cand.schema,
+                    )
                 )
         b = bsh.select(F.col("id").alias("batch_id"), F.col("h").alias("h_b"))
         jac = F.size(F.array_intersect("h_b", "h_c")).cast("double") / F.size(

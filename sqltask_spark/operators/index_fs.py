@@ -21,6 +21,10 @@ this problem:
   by the newest manifest) are detectable mechanically and swept by
   the next writer before it starts.
 
+The indexes share ONE implementation of the mutation protocol built on
+these pieces, :class:`GenerationStore` (end of this module); each index
+kind subclasses it with its layout and payload writers only.
+
 All filesystem access goes through the Hadoop ``FileSystem`` API of
 the live SparkSession — NOT ``os``/``shutil`` — so the identical code
 path serves ``file:``, ``hdfs:``, and object stores. Manifests are
@@ -34,9 +38,13 @@ exactly as the table formats do.)
 
 from __future__ import annotations
 
+import itertools
 import json
+import re
+from functools import reduce
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 MANIFEST_DIR = "manifests"
 _MANIFEST_FMT = "manifest-%012d.json"
@@ -449,14 +457,19 @@ SMALL_BATCH_CAP = 512
 
 
 def collect_id_rows(
-    df, id_col: str, cap: int = SMALL_BATCH_CAP
+    df, id_col: str, cap: int | None = None
 ) -> "list[tuple] | None":
     """Bounded collect of ``(id, p0, p1)`` per batch row (duplicates
     kept, order preserved; positions are Spark-computed xxhash64 —
     identical bits to the aggregate formulation), or ``None`` past
-    ``cap``."""
+    ``cap``. ``cap`` defaults to :data:`SMALL_BATCH_CAP` read at CALL
+    time, so patching the module cap to 0 really forces every caller
+    onto its join arm (a default bound at definition time never
+    saw the patch)."""
     from pyspark.sql import functions as F
 
+    if cap is None:
+        cap = SMALL_BATCH_CAP
     p0, p1 = filter_pos_cols(id_col)
     rows = (
         df.select(
@@ -687,3 +700,688 @@ def seq_at_timestamp(
         f"no version of {path} committed at or before {ts_millis}"
         " (older manifests may be vacuumed or predate commit stamps)"
     )
+
+
+def pinned_read(spark: SparkSession, m: dict, rel: str, *paths: str):
+    """Parquet read with the manifest-recorded schema for ``rel``
+    when present — planning then costs ZERO Spark jobs, where schema
+    inference over a multi-file relation runs a distributed
+    footer-read job per ``spark.read.parquet`` call (measured: one
+    job per unpinned read site; at 100 TB the footer sweep is real
+    work, repeated on every probe/mutation). Falls back to inference
+    for manifests committed before schemas were recorded — mutations
+    backfill the entry, so old indexes heal on their next write."""
+    from pyspark.sql.types import StructType
+
+    s = m.get("schemas", {}).get(rel)
+    reader = spark.read
+    if s:
+        reader = reader.schema(StructType.fromJson(json.loads(s)))
+    return reader.parquet(*paths)
+
+
+def _pruned(gens: list, gen_stats: dict, id_rows: "list[tuple]") -> list:
+    """``gens`` minus the generations whose stats PROVABLY hold none
+    of the collected ``(id, p0, p1)`` rows — the small-batch arm's
+    pruning, derived driver-side with no job."""
+    if not gen_stats:
+        return gens
+    bounds = stats_from_id_rows(id_rows)
+    probe_pos = [
+        (p0, p1) for _, p0, p1 in id_rows if p0 is not None and p1 is not None
+    ]
+    return [
+        g for g in gens
+        if not generation_prunable(gen_stats.get(g), bounds, probe_pos)
+    ]
+
+
+class GenerationStore:
+    """The manifest-protocol mutation layer of a generation-structured
+    index, written ONCE for every index kind (the MinHash-LSH index
+    and the IVF index are its two subclasses).
+
+    A store at ``path`` is laid out as::
+
+        manifests/manifest-*.json         the commit points (above)
+        {gen_dir}/{gen_prefix}g000001     one generation per append
+        {aux}/g000001                     the kind's one versioned side
+                                          relation, named by m[aux]
+        tombstones/g000001                committed logical deletes
+
+    and owns everything the kinds share: committed and ``as_of``
+    reads, pinned-schema reads, the tombstone relation, orphan sweeps
+    over the live union of all manifests, the ledgered idempotent
+    "which batch ids are novel" step (generation pruning by
+    ``gen_stats`` [min,max] + id filter, the small-batch arm and its
+    join arm), delete, unblock, the sweep-and-commit shells of
+    compact and vacuum, and the health/maintain policy.
+
+    A kind supplies only data and its own callables: the layout (the
+    four class attributes), the physical id relation of a generation
+    set (:meth:`read_ids`), how one generation is rewritten minus a
+    set of ids (:meth:`rewrite_generation`, plus :meth:`rewrite_aux`
+    for a side relation that must follow), how the compacted
+    generation is written (:meth:`write_compacted`), and — per
+    append call — how a new generation's payload is written. Every
+    parquet file a mutation produces goes through :meth:`write`.
+    """
+
+    #: stored id column of the generations and the tombstone relation
+    id_col: str = ""
+    #: parent directory of the generations, and each generation
+    #: directory's name prefix before ``g%06d``
+    gen_dir: str = ""
+    gen_prefix: str = ""
+    #: manifest key AND directory of the versioned side relation
+    aux: str = ""
+
+    def __init__(self, spark: SparkSession, path: str) -> None:
+        self.spark, self.path = spark, path
+
+    # -- layout and reads --------------------------------------------
+
+    def gen_rel(self, g: str) -> str:
+        """Generation ``g``'s directory relative to the store root."""
+        return f"{self.gen_dir}/{self.gen_prefix}{g}"
+
+    def gen_path(self, g: str) -> str:
+        return f"{self.path}/{self.gen_rel(g)}"
+
+    def _dirs(self) -> "tuple[str, str, str]":
+        return (
+            f"{self.path}/{self.gen_dir}",
+            f"{self.path}/{self.aux}",
+            f"{self.path}/tombstones",
+        )
+
+    def committed(self, as_of: int | None = None) -> dict:
+        """The newest committed manifest, or — time travel — the exact
+        version ``as_of``. Every version committed since the last
+        compaction stays readable (mutations write only new files and
+        sweeps respect the union of ALL manifests' references);
+        compaction (or a rebuild's sweep) is the retention boundary,
+        and travelling past it errors loudly instead of serving a
+        partial index."""
+        if as_of is None:
+            m = read_manifest(self.spark, self.path)
+            if m is None:
+                raise ValueError(f"no committed manifest under {self.path}")
+            return m
+        m = read_manifest_at(self.spark, self.path, as_of)
+        if m is None:
+            raise ValueError(
+                f"version {as_of} of {self.path} does not exist (never"
+                f" committed, or torn); available:"
+                f" {list_manifest_seqs(self.spark, self.path)}"
+            )
+        rels = [self.gen_rel(g) for g in m["generations"]]
+        rels.append(f"{self.aux}/{m[self.aux]}")
+        missing = [
+            r for r in rels
+            if not path_exists(self.spark, f"{self.path}/{r}")
+        ]
+        if missing:
+            raise ValueError(
+                f"version {as_of} of {self.path} is no longer readable —"
+                f" compaction/rebuild reclaimed {missing}; time travel"
+                f" reaches back only to the last compaction"
+            )
+        return m
+
+    def tombstones(self, m: dict):
+        """Union of the committed tombstone sets (``(id_col)``), or
+        ``None`` when none is committed."""
+        gens = m.get("tombstones", [])
+        if not gens:
+            return None
+        return pinned_read(
+            self.spark, m, "tombstones",
+            *[f"{self.path}/tombstones/{g}" for g in gens],
+        )
+
+    def read_ids(self, m: dict, gens: "list[str] | None" = None):
+        """KIND HOOK: the physical ``(id_col)`` relation of generations
+        ``gens`` (default: all committed), tombstoned rows included.
+        One row per stored id (appends anti-join committed ids, so
+        generations never overlap)."""
+        raise NotImplementedError
+
+    def _members(self, rel, ids: list) -> set:
+        """The subset of ``ids`` present in ``rel`` — one bounded
+        collect over an isin filter that pushes down to parquet."""
+        return {
+            r[self.id_col]
+            for r in rel.filter(F.col(self.id_col).isin(ids)).collect()
+        }
+
+    def _pruned_by(self, rel, gens: list, gen_stats: dict):
+        """``(n, gens)`` — the count of the id relation ``rel`` and
+        ``gens`` minus the generations PROVABLY disjoint from it: one
+        count+bounds+filter aggregate, then a bounded collect of the
+        ids' filter positions (past its cap the bitmap-intersection
+        test needs no collect). Under hashed/interleaved ids the
+        [min,max] ranges all overlap; the CONTENT filter is what keeps
+        the scans off untouched generations then."""
+        n, bounds = count_and_bounds(rel, self.id_col)
+        if n == 0:
+            return 0, []
+        probe_pos = filter_probe_positions(rel, self.id_col)
+        return n, [
+            g for g in gens
+            if not generation_prunable(gen_stats.get(g), bounds, probe_pos)
+        ]
+
+    # -- the write path and commits ----------------------------------
+
+    def write(self, df, rel: str, partition_by: str | None = None) -> None:
+        """The store's ONE parquet write path: every file a build or
+        mutation produces lands under ``rel`` (relative to the store
+        root) through here — new directories only, never visible
+        before the manifest that names them."""
+        w = df.write.mode("overwrite")
+        if partition_by is not None:
+            w = w.partitionBy(partition_by)
+        w.parquet(f"{self.path}/{rel}")
+
+    def commit(self, m: dict | None, updates: dict) -> None:
+        """Publish ``m`` with ``updates`` as the next manifest. Unknown
+        manifest keys (sync markers, batch ledger, future metadata)
+        carry forward verbatim — a mutation must never strip another
+        subsystem's state."""
+        commit_manifest(
+            self.spark,
+            self.path,
+            {**{k: v for k, v in (m or {}).items() if k != "_seq"},
+             **updates},
+            m["_seq"] if m else -1,
+        )
+
+    def sweep(self) -> list[str]:
+        """Delete generation, side-relation and tombstone directories
+        no manifest names — the debris of a crashed mutation. Committed
+        = the UNION over all manifests, not just the newest: older
+        versions stay time-travel readable until compaction."""
+        live = live_unions(
+            self.spark, self.path, ("generations", self.aux, "tombstones")
+        )
+        gen_dir, aux_dir, tomb_dir = self._dirs()
+        p = self.gen_prefix
+        return (
+            sweep_orphans(
+                self.spark, gen_dir, {p + g for g in live["generations"]},
+                p + "g",
+            )
+            + sweep_orphans(self.spark, aux_dir, live[self.aux], "g")
+            + sweep_orphans(self.spark, tomb_dir, live["tombstones"], "g")
+        )
+
+    # -- append ------------------------------------------------------
+
+    def _novel(self, m: dict, batch, id_col: str):
+        """``(novel, known)`` — the batch rows whose ids no committed
+        generation holds (tombstoned ones included: a deleted id stays
+        unavailable until compaction, the LSM id-reuse hazard), or
+        ``None`` when nothing is novel. ``known`` is ``(count, stats)``
+        when the small-batch arm derived them, else ``None``.
+
+        SMALL-BATCH arm (r12): a batch under the
+        collect cap is pulled to the driver ONCE (ids + filter-bit
+        positions, one narrow job) and everything per-batch derives
+        from it — generation pruning (no extra stats jobs), the
+        idempotency check (one bounded membership scan with an isin
+        pushdown instead of anti-join exchanges), the novel count and
+        the manifest stats (driver-side fold, no aggregate job).
+        Larger batches take the JOIN arm: an anti-join against the
+        stored ids of the generations that pruning cannot rule out.
+        Results identical."""
+        gens = list(m["generations"])
+        gen_stats = m.get("gen_stats", {})
+        id_rows = collect_id_rows(batch, id_col)
+        if id_rows is not None:
+            if not id_rows:
+                return None
+            gens = _pruned(gens, gen_stats, id_rows)
+            uniq = list({i for i, _, _ in id_rows if i is not None})
+            hits = (
+                self._members(self.read_ids(m, gens), uniq)
+                if gens and uniq
+                else set()
+            )
+            novel_rows = [t for t in id_rows if t[0] not in hits]
+            if not novel_rows:
+                return None
+            novel = (
+                batch.filter(keep_ids_filter(id_col, sorted(hits)))
+                if hits
+                else batch
+            )
+            return novel, (len(novel_rows), stats_from_id_rows(novel_rows))
+        # generation pruning for the idempotency anti-join (r12): gated
+        # on generation count — two batch-sized stats jobs buy a pruned
+        # corpus-id scan only once the index has accumulated
+        # generations worth skipping
+        if len(gens) >= GEN_PRUNE_MIN and gen_stats:
+            bk = batch.select(F.col(id_col).alias(self.id_col)).distinct()
+            bk = bk.persist()
+            try:
+                _, gens = self._pruned_by(bk, gens, gen_stats)
+            finally:
+                bk.unpersist()
+        if not gens:
+            # every generation provably disjoint — the whole batch is
+            # novel
+            return batch, None
+        stored = self.read_ids(m, gens)
+        return (
+            batch.join(stored, batch[id_col] == stored[self.id_col],
+                       "left_anti"),
+            None,
+        )
+
+    def append(
+        self, batch, id_col: str, write_generation,
+        batch_id: str | None = None,
+    ) -> int:
+        """Add the batch rows whose ``id_col`` no committed generation
+        holds as ONE new generation; returns how many were added (0 for
+        a retried batch). ``write_generation(m, novel, known, gen)``
+        is the kind's payload writer: it writes generation ``gen`` from
+        the ``novel`` rows and returns ``(count, stats, updates)`` —
+        ``known`` carries ``(count, stats)`` when the small-batch arm
+        already derived them, else the writer measures its own input
+        (count 0 means nothing was written), and ``updates`` are the
+        kind's manifest fields.
+
+        A ``batch_id`` already in the manifest's ``batches`` ledger
+        makes the whole retried append ONE manifest read; the anti-join
+        recheck stays the correctness backstop for un-ledgered callers
+        and for ids trimmed past the ledger's horizon. Crash-atomic:
+        nothing is visible before the commit, and the next writer's
+        sweep removes the debris."""
+        m = self.committed()
+        if batch_id is not None and batch_id in m.get("batches", []):
+            return 0
+        self.sweep()
+        found = self._novel(m, batch, id_col)
+        if found is None:
+            return 0
+        gen = next_gen(m)
+        n, st, updates = write_generation(m, *found, gen)
+        if n == 0:
+            return 0
+        stats = dict(m.get("gen_stats", {}))
+        if st:
+            stats[gen] = st
+        # the COMMIT: everything above was invisible until this line
+        self.commit(m, {
+            **updates,
+            "generations": m["generations"] + [gen],
+            "gen_stats": stats,
+            "batches": m.get("batches", []) + ([batch_id] if batch_id else []),
+        })
+        return n
+
+    # -- delete ------------------------------------------------------
+
+    def _add_tombstones(self, m: dict, target, n: int) -> int:
+        gen = fresh_gen(self.spark, [f"{self.path}/tombstones"], None)
+        self.write(shard_for_write(target, n), f"tombstones/{gen}")
+        # backfill the tombstone reader schema for pre-schema
+        # manifests (carried forward verbatim otherwise)
+        schemas = dict(m.get("schemas", {}))
+        schemas.setdefault("tombstones", target.schema.json())
+        self.commit(m, {
+            "tombstones": m.get("tombstones", []) + [gen],
+            "schemas": schemas,
+        })
+        return n
+
+    def delete(self, ids, id_col: str) -> int:
+        """Tombstone the stored ids among ``ids[id_col]``; returns how
+        many were newly tombstoned. Never-indexed and already-tombstoned
+        ids filter out, so a re-run returns 0.
+
+        SMALL-BATCH arm (r12): collect the ids once (one
+        narrow job), prune generations driver-side, confirm membership
+        with one bounded isin-pushdown scan, subtract prior tombstones
+        with one bounded filtered read, and write the target set from a
+        driver-built relation — replacing the distinct/semi-join/
+        anti-join/count formulation (4-5 AQE stage jobs per delete, per
+        CDC epoch). Takedown waves past the cap take the JOIN arm, whose
+        stored-id semi-join skips generations PROVABLY holding none of
+        the ids — gated on generation count: two tiny stats jobs buy a
+        pruned corpus scan only once the index has accumulated
+        generations worth skipping. Results identical."""
+        spark = self.spark
+        m = self.committed()
+        sweep_orphans(
+            spark, f"{self.path}/tombstones",
+            live_union(spark, self.path, "tombstones"), "g",
+        )
+        blocked = ids.select(F.col(id_col).alias(self.id_col)).distinct()
+        gens = list(m["generations"])
+        gen_stats = m.get("gen_stats", {})
+        id_rows = collect_id_rows(blocked, self.id_col)
+        if id_rows is not None:
+            uniq = sorted({i for i, _, _ in id_rows if i is not None})
+            if not uniq:
+                return 0
+            gens = _pruned(gens, gen_stats, id_rows)
+            if not gens:
+                return 0
+            hits = self._members(self.read_ids(m, gens), uniq)
+            prior_df = self.tombstones(m)
+            prior = (
+                self._members(prior_df, sorted(hits))
+                if prior_df is not None and hits
+                else set()
+            )
+            target_ids = [i for i in uniq if i in hits and i not in prior]
+            if not target_ids:
+                return 0
+            target = spark.createDataFrame(
+                [(i,) for i in target_ids], blocked.schema
+            )
+            return self._add_tombstones(m, target, len(target_ids))
+        try:
+            if len(gens) >= GEN_PRUNE_MIN and gen_stats:
+                blocked = blocked.persist()
+                _, gens = self._pruned_by(blocked, gens, gen_stats)
+                if not gens:
+                    return 0
+            target = blocked.join(
+                self.read_ids(m, gens), self.id_col, "left_semi"
+            )
+            prior = self.tombstones(m)
+            if prior is not None:
+                target = target.join(prior, self.id_col, "left_anti")
+            target = target.persist()
+            try:
+                n = target.count()
+                return self._add_tombstones(m, target, n) if n else 0
+            finally:
+                target.unpersist()
+        finally:
+            blocked.unpersist()
+
+    # -- unblock -----------------------------------------------------
+
+    def rewrite_generation(self, m: dict, g: str, gnew: str, keep) -> None:
+        """KIND HOOK: write generation ``g``'s rows that survive
+        ``keep`` (a DataFrame → DataFrame filter dropping the blocked
+        ids) as the new generation ``gnew``."""
+        raise NotImplementedError
+
+    def rewrite_aux(self, m: dict, affected: list, drop, alloc) -> dict:
+        """KIND HOOK: bring the side relation in line with the rows the
+        unblock drops from the ``affected`` generations (``drop``
+        selects them; ``alloc()`` names any new directory). Returns
+        the manifest updates; the default has nothing to follow."""
+        return {}
+
+    def _census(self, m: dict, candidates: list, blocked):
+        """``(affected, fully_blocked)`` over the candidate generations
+        in ONE job: which hold blocked rows, and which hold nothing
+        else (a per-generation semi-join loop costs one Spark job per
+        generation — at small window sizes that fixed job count, not
+        data volume, was the measured cost)."""
+        if not candidates:
+            return [], set()
+        tagged = reduce(
+            DataFrame.unionByName,
+            [
+                self.read_ids(m, [g]).withColumn("_g", F.lit(g))
+                for g in candidates
+            ],
+        )
+        census = tagged.join(
+            blocked.withColumn("_b", F.lit(1)), self.id_col, "left"
+        ).groupBy("_g").agg(
+            F.count(F.lit(1)).alias("_total"),
+            F.sum(F.coalesce("_b", F.lit(0))).alias("_hit"),
+        ).collect()
+        affected = sorted(r["_g"] for r in census if r["_hit"])
+        fully = {
+            r["_g"] for r in census if r["_hit"] and r["_hit"] == r["_total"]
+        }
+        return affected, fully
+
+    def _allocator(self, m: dict):
+        """Fresh sequential generation names past everything committed
+        OR on disk under any of the store's directories (the
+        :func:`fresh_gen` rule, extended to a batch of allocations)."""
+        nums = [-1] + [int(g[1:]) for g in m["generations"]]
+        for parent in self._dirs():
+            for name in list_names(self.spark, parent):
+                mm = re.search(r"g(\d{6})$", name)
+                if mm:
+                    nums.append(int(mm.group(1)))
+        counter = itertools.count(1 + max(nums))
+        return lambda: "g%06d" % next(counter)
+
+    def unblock(self, ids, id_col: str) -> dict:
+        """Free the tombstoned ids among ``ids[id_col]`` for
+        re-admission by rewriting ONLY the generations that physically
+        hold their rows. Candidates are pruned first against
+        ``gen_stats`` ([min,max] + id filter — no read at all when
+        provably disjoint), then confirmed by ONE census job; confirmed
+        generations are rewritten minus the blocked ids (a generation
+        with nothing left is dropped from the manifest instead of
+        written empty), the side relation follows (:meth:`rewrite_aux`),
+        and the tombstone set is rewritten without the freed ids.
+        Untouched generations keep their directories AND their
+        manifest names — the Iceberg-style partial-rewrite shape.
+
+        SMALL-BATCH arm (r12): collect the incoming ids once
+        and intersect with the tombstones via one bounded isin-filtered
+        read — the blocked set, its count, bounds and probe positions
+        all derive driver-side, and the census and rewrites consume a
+        driver-built literal relation / plain filters. Past the cap,
+        the JOIN arm. Results identical.
+
+        Returns ``{"unblocked", "rewritten_generations",
+        "candidate_generations"}``; idempotent (ids not currently
+        tombstoned are ignored) and crash-atomic."""
+        none = {"unblocked": 0, "rewritten_generations": [],
+                "candidate_generations": 0}
+        spark = self.spark
+        m = self.committed()
+        tombs = self.tombstones(m)
+        if tombs is None:
+            return none
+        incoming = ids.select(F.col(id_col).alias(self.id_col))
+        gen_stats = m.get("gen_stats", {})
+        blocked_ids: list | None = None
+        id_rows = collect_id_rows(incoming, self.id_col)
+        if id_rows is not None:
+            uniq = sorted({i for i, _, _ in id_rows if i is not None})
+            hit = self._members(tombs, uniq) if uniq else set()
+            blocked_ids = [i for i in uniq if i in hit]
+            if not blocked_ids:
+                return none
+            blocked = spark.createDataFrame(
+                [(i,) for i in blocked_ids], incoming.schema
+            ).persist()
+        else:
+            blocked = (
+                incoming.distinct()
+                .join(tombs, self.id_col, "left_semi")
+                .persist()
+            )
+        try:
+            if blocked_ids is not None:
+                n = len(blocked_ids)
+                candidates = _pruned(
+                    m["generations"], gen_stats,
+                    [t for t in id_rows if t[0] in hit],
+                )
+
+                def keep(df):
+                    return df.filter(keep_ids_filter(self.id_col, blocked_ids))
+
+                def drop(df):
+                    return df.filter(F.col(self.id_col).isin(blocked_ids))
+            else:
+                n, candidates = self._pruned_by(
+                    blocked, m["generations"], gen_stats
+                )
+                if n == 0:
+                    return none
+
+                def keep(df):
+                    return df.join(blocked, self.id_col, "left_anti")
+
+                def drop(df):
+                    return df.join(blocked, self.id_col, "left_semi")
+            affected, fully_blocked = self._census(m, candidates, blocked)
+            alloc = self._allocator(m)
+            mapping: dict[str, str | None] = {}
+            for g in affected:
+                mapping[g] = None if g in fully_blocked else alloc()
+                if mapping[g] is not None:
+                    self.rewrite_generation(m, g, mapping[g], keep)
+            updates = self.rewrite_aux(m, affected, drop, alloc)
+            new_gens = [
+                mapping.get(g, g) for g in m["generations"]
+                if mapping.get(g, g) is not None
+            ]
+            if not new_gens:
+                raise ValueError(
+                    f"unblock would leave {self.path} with zero"
+                    " generations (every stored row is blocked) —"
+                    " rebuild the index instead"
+                )
+            # tombstones minus the freed ids, as ONE fresh set
+            remaining = keep(tombs).persist()
+            try:
+                new_tombs: list[str] = []
+                n_rem = remaining.count()
+                if n_rem:
+                    new_tombs = [alloc()]
+                    self.write(
+                        shard_for_write(remaining, n_rem),
+                        f"tombstones/{new_tombs[0]}",
+                    )
+                # rewritten generations keep their OLD stats — a
+                # conservative superset stays valid for pruning
+                self.commit(m, {
+                    **updates,
+                    "generations": new_gens,
+                    "tombstones": new_tombs,
+                    "gen_stats": {
+                        mapping.get(g, g): gen_stats[g]
+                        for g in m["generations"]
+                        if g in gen_stats and mapping.get(g, g) is not None
+                    },
+                })
+            finally:
+                remaining.unpersist()
+            return {
+                "unblocked": n,
+                "rewritten_generations": affected,
+                # observability for the pruning claim: how many
+                # generations survived stats+filter pruning and were
+                # actually read by the census job
+                "candidate_generations": len(candidates),
+            }
+        finally:
+            blocked.unpersist()
+
+    # -- compact / vacuum --------------------------------------------
+
+    def write_compacted(self, m: dict, gen: str, keep) -> dict:
+        """KIND HOOK: write every committed generation's rows that
+        survive ``keep`` (the tombstone anti-join) as the ONE
+        generation ``gen``. Returns the manifest updates."""
+        raise NotImplementedError
+
+    def compact(self) -> None:
+        """Rewrite the committed state as ONE generation minus the
+        tombstoned rows, clear the tombstone set, and sweep the
+        superseded directories once the manifest has landed."""
+        m = self.committed()
+        self.sweep()
+        gen_dir, aux_dir, tomb_dir = self._dirs()
+        gen = fresh_gen(self.spark, [gen_dir, aux_dir], m)
+        tombs = self.tombstones(m)
+
+        def keep(df):
+            if tombs is None:
+                return df
+            return df.join(tombs, self.id_col, "left_anti")
+
+        updates = self.write_compacted(m, gen, keep)
+        st = id_bounds(self.read_ids(m, [gen]), self.id_col)
+        self.commit(m, {
+            **updates,
+            "generations": [gen],
+            "tombstones": [],
+            "gen_stats": {gen: st} if st else {},
+        })
+        # post-commit cleanup of the superseded state. An in-flight
+        # probe PLANNED against the old manifest may need a retry —
+        # the standard compaction caveat.
+        p = self.gen_prefix
+        sweep_orphans(self.spark, gen_dir, {p + gen}, p + "g")
+        if self.aux in updates:
+            sweep_orphans(self.spark, aux_dir, {updates[self.aux]}, "g")
+        sweep_orphans(self.spark, tomb_dir, set(), "g")
+
+    def vacuum(self, keep_versions: int = 1) -> dict:
+        """Drop all but the newest ``keep_versions`` manifests, then
+        sweep every directory no surviving manifest references."""
+        dropped = drop_manifests(self.spark, self.path, keep_versions)
+        return {"dropped_versions": dropped, "swept_dirs": self.sweep()}
+
+    # -- health / maintain -------------------------------------------
+
+    def health(self) -> dict:
+        """Generation count (manifest-only), tombstone count and ratio
+        over physical ids (skinny id-column reads, skipped entirely
+        when no tombstone set is committed), version count."""
+        m = self.committed()
+        tombs = self.tombstones(m)
+        n_tombstoned, ratio = 0, 0.0
+        if tombs is not None:
+            n_tombstoned = tombs.count()
+            n_ids = self.read_ids(m).count()
+            ratio = n_tombstoned / n_ids if n_ids else 0.0
+        return {
+            "n_generations": len(m["generations"]),
+            "n_tombstone_sets": len(m.get("tombstones", [])),
+            "n_tombstoned": n_tombstoned,
+            "tombstone_ratio": ratio,
+            "n_versions": len(list_manifest_seqs(self.spark, self.path)),
+        }
+
+    def maintain(
+        self,
+        max_generations: int,
+        max_tombstone_ratio: float,
+        vacuum_keep_versions: int | None,
+        ledger_keep_batches: int | None,
+    ) -> dict:
+        """Compact when generation count or tombstone ratio crosses
+        its threshold, trim the batch ledger, vacuum old versions;
+        returns the health snapshot plus what was done."""
+        h = self.health()
+        compact = (
+            h["n_generations"] > max_generations
+            or h["tombstone_ratio"] > max_tombstone_ratio
+        )
+        if compact:
+            self.compact()
+        trimmed = 0
+        if ledger_keep_batches is not None:
+            trimmed = trim_batches(self.spark, self.path, ledger_keep_batches)
+        vac: dict = {}
+        if (
+            vacuum_keep_versions is not None
+            and h["n_versions"] > vacuum_keep_versions
+        ):
+            vac = self.vacuum(vacuum_keep_versions)
+        return {
+            **h, "compacted": compact, "vacuum": vac,
+            "ledger_trimmed": trimmed,
+        }

@@ -39,27 +39,9 @@ def minhash_index_health(spark: SparkSession, path: str) -> dict:
     count (manifest-only), tombstone count and ratio over physical
     ids (skinny id-column reads, skipped entirely when no tombstone
     set is committed)."""
-    from sqltask_spark.operators import dedup_index as di
+    from sqltask_spark.operators.dedup_index import MinHashStore
 
-    from sqltask_spark.operators import index_fs
-
-    m = di.committed_manifest(spark, path)
-    n_generations = len(m["generations"])
-    tombs = di.read_tombstones(spark, path, m)
-    if tombs is None:
-        n_tombstoned = 0
-        ratio = 0.0
-    else:
-        n_tombstoned = tombs.count()
-        n_ids = di.read_index_ids(spark, path, m).count()
-        ratio = n_tombstoned / n_ids if n_ids else 0.0
-    return {
-        "n_generations": n_generations,
-        "n_tombstone_sets": len(m.get("tombstones", [])),
-        "n_tombstoned": n_tombstoned,
-        "tombstone_ratio": ratio,
-        "n_versions": len(index_fs.list_manifest_seqs(spark, path)),
-    }
+    return MinHashStore(spark, path).health()
 
 
 def maintain_minhash_index(
@@ -85,67 +67,21 @@ def maintain_minhash_index(
     travel. ``ledger_keep_batches`` (r12) bounds the append batch
     ledger — safe at any horizon here exactly as for the IVF index:
     the anti-join backstop no-ops replays trimmed past the tail."""
-    from sqltask_spark.operators import index_fs
-    from sqltask_spark.operators.dedup_index import (
-        compact_minhash_index,
-        vacuum_minhash_index,
-    )
+    from sqltask_spark.operators.dedup_index import MinHashStore
 
-    h = minhash_index_health(spark, path)
-    compact = (
-        h["n_generations"] > max_generations
-        or h["tombstone_ratio"] > max_tombstone_ratio
+    return MinHashStore(spark, path).maintain(
+        max_generations, max_tombstone_ratio, vacuum_keep_versions,
+        ledger_keep_batches,
     )
-    if compact:
-        compact_minhash_index(spark, path)
-    trimmed = 0
-    if ledger_keep_batches is not None:
-        trimmed = index_fs.trim_batches(
-            spark, path, ledger_keep_batches
-        )
-    vac: dict = {}
-    if (
-        vacuum_keep_versions is not None
-        and h["n_versions"] > vacuum_keep_versions
-    ):
-        vac = vacuum_minhash_index(
-            spark, path, keep_versions=vacuum_keep_versions
-        )
-    return {
-        **h, "compacted": compact, "vacuum": vac,
-        "ledger_trimmed": trimmed,
-    }
 
 
 def ivf_index_health(spark: SparkSession, path: str) -> dict:
     """Health snapshot of a committed IVF index: generation count
     (manifest-only), tombstone ratio (skinny id reads, only when
     tombstone sets exist)."""
-    from sqltask_spark.operators import ann_index as ai
+    from sqltask_spark.operators.ann_index import IvfStore
 
-    from sqltask_spark.operators import index_fs
-
-    m = ai.committed_manifest(spark, path)
-    n_generations = len(m["generations"])
-    tombs = ai.read_tombstones(spark, path, m)
-    if tombs is None:
-        n_tombstoned = 0
-        ratio = 0.0
-    else:
-        n_tombstoned = tombs.count()
-        n_ids = (
-            ai.read_vectors(spark, path, m, include_tombstoned=True)
-            .select("neighbor_id")
-            .count()
-        )
-        ratio = n_tombstoned / n_ids if n_ids else 0.0
-    return {
-        "n_generations": n_generations,
-        "n_tombstone_sets": len(m.get("tombstones", [])),
-        "n_tombstoned": n_tombstoned,
-        "tombstone_ratio": ratio,
-        "n_versions": len(index_fs.list_manifest_seqs(spark, path)),
-    }
+    return IvfStore(spark, path).health()
 
 
 def maintain_ivf_index(
@@ -168,36 +104,12 @@ def maintain_ivf_index(
     tail falls back to the anti-join idempotency backstop, which
     no-ops it (pytest-pinned), unlike the merge tables' content
     convergence or the histogram store's fold."""
-    from sqltask_spark.operators import index_fs
-    from sqltask_spark.operators.ann_index import (
-        compact_ivf_index,
-        vacuum_ivf_index,
-    )
+    from sqltask_spark.operators.ann_index import IvfStore
 
-    h = ivf_index_health(spark, path)
-    compact = (
-        h["n_generations"] > max_generations
-        or h["tombstone_ratio"] > max_tombstone_ratio
+    return IvfStore(spark, path).maintain(
+        max_generations, max_tombstone_ratio, vacuum_keep_versions,
+        ledger_keep_batches,
     )
-    if compact:
-        compact_ivf_index(spark, path)
-    trimmed = 0
-    if ledger_keep_batches is not None:
-        trimmed = index_fs.trim_batches(
-            spark, path, ledger_keep_batches
-        )
-    vac: dict = {}
-    if (
-        vacuum_keep_versions is not None
-        and h["n_versions"] > vacuum_keep_versions
-    ):
-        vac = vacuum_ivf_index(
-            spark, path, keep_versions=vacuum_keep_versions
-        )
-    return {
-        **h, "compacted": compact, "vacuum": vac,
-        "ledger_trimmed": trimmed,
-    }
 
 
 def parquet_table_health(spark: SparkSession, path: str) -> dict:
