@@ -38,7 +38,11 @@ SKIPPING: when the table declares ``stats_col``, every commit
 records per-file [min, max] of that column in the manifest, and a
 merge first drops files whose range cannot intersect the batch —
 on a range-clustered table the key-column scan reads only the files
-the batch can actually touch, not the whole table.
+the batch can actually touch, not the whole table. Every MERGE
+generation and compaction writes as many files as Spark would split a
+scan of its estimated size into (:func:`_right_sized`), so a small
+merge adds one file instead of one per task and no compaction has to
+clean up after it, while a large rewrite keeps its parallelism.
 """
 
 from __future__ import annotations
@@ -88,6 +92,49 @@ def _list_gen_files(spark: SparkSession, path: str, gen: str) -> list[str]:
 
 def _abs_files(path: str, rels: list[str]) -> list[str]:
     return [f"{_data_dir(path)}/{rel}" for rel in rels]
+
+
+def _rel_of(uri: str) -> str:
+    """The committed-relative name (``g…/part-….parquet``) of a data
+    file URI such as ``_metadata.file_path``: its last two path parts.
+    Generation and part names are plain ASCII, so only the parent
+    directories of the URI can be percent-encoded."""
+    return "/".join(uri.rsplit("/", 2)[-2:])
+
+
+def _right_sized(df: DataFrame) -> DataFrame:
+    """``df`` narrowed to as many partitions as Spark would split a file
+    scan of its estimated size into, so a rewrite writes about one file
+    per read split instead of one (tiny) file per task. The split size
+    is Spark's own (``FilePartition.maxSplitBytes``): ``min(
+    maxPartitionBytes, max(openCostInBytes, size / minPartitionNum))``,
+    ``minPartitionNum`` defaulting to the leaf-node parallelism. A
+    relation under the open cost becomes one file; a medium one, one
+    file per slot; one past ``maxPartitionBytes`` per slot, files of
+    ``maxPartitionBytes``. The estimate is Catalyst's ``sizeInBytes`` of the optimized plan:
+    the touched files' size for a file scan, the in-memory size for a
+    materialized persisted relation. The narrowing is a ``coalesce``
+    (no shuffle, no extra job); an unknown estimate (the plan's
+    default size, e.g. an unmaterialized RDD-backed relation) leaves
+    ``df`` as it is."""
+    session = df.sparkSession._jsparkSession
+    conf = session.sessionState().conf()
+    size = int(
+        str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    )
+    if size >= conf.defaultSizeInBytes():
+        return df
+    min_parts = conf.filesMinPartitionNum()
+    slots = (
+        min_parts.get()
+        if min_parts.isDefined()
+        else session.leafNodeDefaultParallelism()
+    )
+    split = min(
+        conf.filesMaxPartitionBytes(),
+        max(conf.filesOpenCostInBytes(), size // slots),
+    )
+    return df.coalesce(max(1, -(-size // split)))
 
 
 def _schema_of(manifest: dict):
@@ -169,12 +216,11 @@ def _file_stats(
     by_file: dict[str, list] = {}
     for r in rows:
         by_file.setdefault(r["__file"], []).append(r)
+    wanted = set(rels)
     out = {}
     for fpath, grp in by_file.items():
-        rel = next(
-            (x for x in rels if fpath.endswith("/" + x)), None
-        )
-        if rel is None:
+        rel = _rel_of(fpath)
+        if rel not in wanted:
             continue
         words = [0] * index_fs.ID_FILTER_WORDS
         for r in grp:
@@ -351,7 +397,17 @@ def read_parquet_table_keys(
     key_df = spark.createDataFrame(
         [(k,) for k in keys], f"{stats_col} {key_type}"
     )
-    probe_pos = index_fs.filter_probe_positions(key_df, stats_col)
+    # the keys are driver-side already: under the cap, collect their
+    # positions in one job (a limit-capped collect runs as an
+    # incremental take — a one-partition job, then the rest)
+    probe_pos = None
+    if len(keys) <= _KEYS_CAP:
+        probe_pos = [
+            (int(r[0]), int(r[1]))
+            for r in key_df.select(
+                *index_fs.filter_pos_cols(stats_col)
+            ).collect()
+        ]
 
     def _skippable(rel: str) -> bool:
         ent = stats.get(rel)
@@ -725,12 +781,8 @@ def merge_into_parquet(
                     if r[kc] not in matched_keys and r["__d"]
                 ),
             }
-            touched_uris = {r["__file"] for r in hit_rows}
-            touched_rels = [
-                rel
-                for rel in candidates
-                if any(u.endswith("/" + rel) for u in touched_uris)
-            ]
+            touched = {_rel_of(r["__file"]) for r in hit_rows}
+            touched_rels = [rel for rel in candidates if rel in touched]
         elif candidates:
             # ONE decide job (r12, guide §2.4): the matched-file
             # search and the insert/update/delete counts both derive
@@ -773,12 +825,8 @@ def merge_into_parquet(
                     F.when(matched, F.col("__file"))
                 ).alias("touched"),
             ).collect()[0]
-            touched_uris = set(counts_row["touched"] or [])
-            touched_rels = [
-                rel
-                for rel in candidates
-                if any(u.endswith("/" + rel) for u in touched_uris)
-            ]
+            touched = {_rel_of(u) for u in counts_row["touched"] or []}
+            touched_rels = [rel for rel in candidates if rel in touched]
         elif inline_keys is not None:
             # everything stats-pruned + keys in hand: zero jobs
             counts_row = {
@@ -802,7 +850,8 @@ def merge_into_parquet(
                     "noop_deletes"
                 ),
             ).collect()[0]
-        untouched = [rel for rel in files if rel not in set(touched_rels)]
+        touched = set(touched_rels)
+        untouched = [rel for rel in files if rel not in touched]
 
         if touched_rels:
             touched_df = spark.read.schema(_schema_of(m)).parquet(
@@ -841,7 +890,7 @@ def merge_into_parquet(
         gen = None
         if n_new:
             gen = index_fs.fresh_gen(spark, [_data_dir(path)], None)
-            new_data.write.mode("overwrite").parquet(
+            _right_sized(new_data).write.mode("overwrite").parquet(
                 f"{_data_dir(path)}/{gen}"
             )
             new_files = _list_gen_files(spark, path, gen)
@@ -1109,9 +1158,10 @@ def table_changes_classified(
 
 
 def compact_parquet_table(spark: SparkSession, path: str) -> int:
-    """Rewrite the current state as ONE fresh generation (the
-    small-files compaction merges accumulate); row-identical,
-    committed atomically. Returns the new file count."""
+    """Rewrite the current state as ONE fresh generation of
+    read-split-sized files (the small-files compaction merges
+    accumulate); row-identical, committed atomically. Returns the new
+    file count."""
     m = index_fs.read_manifest(spark, path)
     if m is None:
         raise ValueError(f"no committed table at {path}")
@@ -1119,8 +1169,10 @@ def compact_parquet_table(spark: SparkSession, path: str) -> int:
     files = m.get("files", [])
     gen = index_fs.fresh_gen(spark, [_data_dir(path)], None)
     if files:
-        spark.read.schema(_schema_of(m)).parquet(
-            *_abs_files(path, files)
+        _right_sized(
+            spark.read.schema(_schema_of(m)).parquet(
+                *_abs_files(path, files)
+            )
         ).write.mode("overwrite").parquet(f"{_data_dir(path)}/{gen}")
         new_files = _list_gen_files(spark, path, gen)
     else:
