@@ -320,7 +320,7 @@ def append_to_minhash_index(
     — the streaming sink's exactly-once fast path — while the
     anti-join recheck stays the correctness backstop for un-ledgered
     callers and for ids trimmed past the retention horizon
-    (:func:`~sqltask_spark.operators.index_fs.trim_batches`).
+    (:meth:`~sqltask_spark.operators.index_fs.GenerationStore.trim`).
     """
     store = MinHashStore(batch.sparkSession, path)
 

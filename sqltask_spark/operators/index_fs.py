@@ -1,4 +1,5 @@
-"""Versioned-manifest plumbing shared by the persistent indexes.
+"""Versioned-manifest plumbing shared by the persistent indexes and
+the MERGE tables.
 
 No reference counterpart (north-star extension; the reference,
 ``/root/reference/sqltask``, has no index artifacts at all). Both
@@ -21,9 +22,14 @@ this problem:
   by the newest manifest) are detectable mechanically and swept by
   the next writer before it starts.
 
-The indexes share ONE implementation of the mutation protocol built on
-these pieces, :class:`GenerationStore` (end of this module); each index
-kind subclasses it with its layout and payload writers only.
+The indexes and the MERGE tables share ONE implementation of the
+mutation protocol built on these pieces, :class:`GenerationStore` (end
+of this module); each index kind subclasses it with its payload writers
+only, and the tables' :class:`~sqltask_spark.operators.merge.TableStore`
+with its file-list layout (the store's layout hooks). Their size caps
+are one policy here: :data:`SMALL_BATCH_CAP` bounds the driver-side
+fast arms of the index mutations and probe, the MERGE decide and the
+change feed; :data:`PROBE_CAP` bounds every filter-probe collect.
 
 All filesystem access goes through the Hadoop ``FileSystem`` API of
 the live SparkSession — NOT ``os``/``shutil`` — so the identical code
@@ -126,36 +132,6 @@ def read_all_manifests(spark: SparkSession, path: str) -> list[dict]:
         data = read_manifest_at(spark, path, seq)
         if data is not None:
             out.append(data)
-    return out
-
-
-def live_union(spark: SparkSession, path: str, key: str) -> set[str]:
-    """Union of manifest field ``key`` (a name or list of names)
-    over ALL parseable manifests — the set a writer's orphan sweep
-    must treat as committed when older versions stay time-travel
-    readable. Names referenced only by pre-compaction manifests may
-    already be gone from disk; a sweep against this set simply never
-    resurrects or deletes them."""
-    out: set[str] = set()
-    for m in read_all_manifests(spark, path):
-        v = m.get(key, [])
-        out |= {v} if isinstance(v, str) else set(v)
-    return out
-
-
-def live_unions(
-    spark: SparkSession, path: str, keys: "tuple[str, ...]"
-) -> "dict[str, set[str]]":
-    """:func:`live_union` for several fields with ONE manifest-history
-    read. The orphan sweeps at the head of every mutation need the
-    live set of three different directories; reading the (possibly
-    hundreds-long) manifest chain once instead of once per field cuts
-    the py4j/filesystem round trips threefold."""
-    out: dict[str, set[str]] = {k: set() for k in keys}
-    for m in read_all_manifests(spark, path):
-        for k in keys:
-            v = m.get(k, [])
-            out[k] |= {v} if isinstance(v, str) else set(v)
     return out
 
 
@@ -380,7 +356,7 @@ def explode_pos_rows(df, id_col: str, keep: "tuple[str, ...]" = ()):
     )
 
 
-def _stats_agg(df, id_col: str) -> "tuple[int, dict | None]":
+def _stats_agg(df, id_col: str, by: str | None = None):
     """(row_count, stats) in ONE aggregate action: count, [min,max]
     id bounds, and the generation id filter's words. Sparse
     formulation — positions explode to (word, mask) rows grouped by
@@ -389,28 +365,47 @@ def _stats_agg(df, id_col: str) -> "tuple[int, dict | None]":
     row contributes exactly one; bounds fold across groups on the
     driver). Values are identical to the former wide 131-expression
     aggregate, whose codegen compile dominated small-batch mutations.
+
+    With ``by`` (a column of ``df``) the same action groups by it as
+    well and returns ``{value: stats}`` — the MERGE tables' per-file
+    statistics, grouped by data file. The row count is left out there:
+    no caller reads it, and its aggregate adds ~30 ms of CPU per
+    action (measured on a 4-vCPU host, C1-only JVM).
     """
     from pyspark.sql import functions as F
 
+    keys = (by,) if by else ()
+    aggs = [
+        F.bit_or("m").alias("bits"),
+        F.min("_id").alias("lo"),
+        F.max("_id").alias("hi"),
+    ]
+    if by is None:
+        aggs.append(F.sum((F.col("j") == 0).cast("long")).alias("n"))
     rows = (
-        explode_pos_rows(df, id_col)
-        .groupBy("w")
-        .agg(
-            F.bit_or("m").alias("bits"),
-            F.sum((F.col("j") == 0).cast("long")).alias("n"),
-            F.min("_id").alias("lo"),
-            F.max("_id").alias("hi"),
-        )
+        explode_pos_rows(df, id_col, keep=keys)
+        .groupBy(*keys, "w")
+        .agg(*aggs)
         .collect()
     )
-    n = sum(int(r["n"]) for r in rows)
+    if by is None:
+        return sum(int(r["n"]) for r in rows), _fold_stats(rows)
+    groups: dict = {}
+    for r in rows:
+        groups.setdefault(r[by], []).append(r)
+    return {g: _fold_stats(rs) for g, rs in groups.items()}
+
+
+def _fold_stats(rows) -> dict | None:
+    """Driver-side fold of one group's per-word aggregate rows into
+    the generation stats dict (``None`` without int/str ids)."""
     los = [r["lo"] for r in rows if r["lo"] is not None]
     if not los:
-        return n, None
+        return None
     lo = min(los)
     hi = max(r["hi"] for r in rows if r["hi"] is not None)
     if isinstance(lo, bool) or not isinstance(lo, (int, str)):
-        return n, None
+        return None
     words = [0] * ID_FILTER_WORDS
     for r in rows:
         words[int(r["w"])] = int(r["bits"])
@@ -429,7 +424,7 @@ def _stats_agg(df, id_col: str) -> "tuple[int, dict | None]":
             "bits": ID_FILTER_WORDS * 64,
             "words": words,
         }
-    return n, stats
+    return stats
 
 
 def count_and_bounds(df, id_col: str) -> "tuple[int, dict | None]":
@@ -448,12 +443,22 @@ def count_and_bounds(df, id_col: str) -> "tuple[int, dict | None]":
 # distinct/anti-join/aggregate formulations that cost 3-5 AQE stage
 # jobs per mutation. Bounded by construction (≤ cap ids on the
 # driver, isin literals ≤ cap); larger batches keep the join
-# formulation. Sized at the measured isin-vs-join crossover (r12
-# session 4, see merge._INLINE_CAP): N-literal isin analysis/codegen
-# grows superlinearly in N and overtakes the join arm's flat ~2.6s
-# past ~512 literals, so a bigger cap makes the "fast" path slower
-# than the exchange it avoids.
+# formulation. The same cap bounds the MERGE decide arm's inlined
+# keys and each side of the change feed's window arm; every caller
+# reads it at call time, so patching it to 0 forces every join arm.
+# Sized at the measured isin-vs-join crossover (r12 session 4):
+# N-literal isin analysis/codegen grows superlinearly in N — per-merge
+# min-of-3 walls on a 100k-row table were 64 keys 1.8s / 512 keys
+# 2.2s / 2048 keys 5.2s / 4096 keys 10.8s against a flat ~2.6s for the
+# join arm — so a bigger cap makes the "fast" path slower than the
+# exchange it avoids.
 SMALL_BATCH_CAP = 512
+
+# Collect cap for filter-probe positions (and MERGE's per-key rows,
+# which carry them): at most this many rows reach the driver; past it
+# the callers take their collect-free formulations. It bounds driver
+# memory, not literal counts, hence far above SMALL_BATCH_CAP.
+PROBE_CAP = 65536
 
 
 def collect_id_rows(
@@ -528,16 +533,18 @@ def keep_ids_filter(id_col: str, drop_ids: "list"):
 
 
 def filter_probe_positions(
-    df, id_col: str, cap: int = 65536
+    df, id_col: str, cap: int | None = None
 ) -> "list[tuple[int, int]] | None":
     """The blocked ids' hash-bit position pairs for per-id filter
-    probing, or ``None`` when the set exceeds ``cap`` (a takedown
-    wave of millions of ids touches every generation anyway — the
-    caller falls back to the bitmap-intersection test, which needs
-    no collect). Bounded: at most ``cap`` (int, int) rows reach the
-    driver."""
+    probing, or ``None`` when the set exceeds ``cap`` (default
+    :data:`PROBE_CAP`; a takedown wave of millions of ids touches
+    every generation anyway — the caller falls back to the
+    bitmap-intersection test, which needs no collect). Bounded: at
+    most ``cap`` (int, int) rows reach the driver."""
     from pyspark.sql import functions as F
 
+    if cap is None:
+        cap = PROBE_CAP
     p0, p1 = filter_pos_cols(id_col)
     rows = (
         df.select(p0.alias("p0"), p1.alias("p1"))
@@ -547,34 +554,6 @@ def filter_probe_positions(
     if len(rows) > cap:
         return None
     return [(int(r["p0"]), int(r["p1"])) for r in rows]
-
-
-def trim_batches(spark: SparkSession, path: str, keep: int) -> int:
-    """Truncate the newest manifest's ``batches`` ledger to its
-    newest ``keep`` ids with one manifest-only commit (everything
-    else carried forward); no-op without a commit when already
-    within bound. Shared by the merge tables and the IVF index —
-    see :func:`sqltask_spark.operators.merge.trim_batch_ledger` for
-    the correctness contract (``keep`` must exceed the source's
-    redelivery horizon)."""
-    if keep < 1:
-        raise ValueError(f"keep must be >= 1, got {keep}")
-    m = read_manifest(spark, path)
-    if m is None:
-        raise ValueError(f"no committed state at {path}")
-    batches = m.get("batches", [])
-    if len(batches) <= keep:
-        return 0
-    commit_manifest(
-        spark,
-        path,
-        {
-            **{k: v for k, v in m.items() if k != "_seq"},
-            "batches": batches[-keep:],
-        },
-        m["_seq"],
-    )
-    return len(batches) - keep
 
 
 # Generation-pruning gate for the DELETE paths (r12): pruning the
@@ -659,21 +638,6 @@ def bounds_disjoint(stats: dict | None, bounds: dict | None) -> bool:
     return a_hi < b_lo or a_lo > b_hi
 
 
-def sweep_orphans(
-    spark: SparkSession, parent: str, committed: set[str], prefix: str
-) -> list[str]:
-    """Delete child dirs of ``parent`` matching ``prefix`` that no
-    committed manifest names — the debris of a crashed append. Returns
-    the swept names. Safe under the single-writer contract (only the
-    next WRITER sweeps, never a reader)."""
-    swept = []
-    for name in list_names(spark, parent):
-        if name.startswith(prefix) and name not in committed:
-            delete_path(spark, f"{parent}/{name}")
-            swept.append(name)
-    return swept
-
-
 def seq_at_timestamp(
     spark: SparkSession, path: str, ts_millis: int
 ) -> int:
@@ -737,9 +701,9 @@ def _pruned(gens: list, gen_stats: dict, id_rows: "list[tuple]") -> list:
 
 
 class GenerationStore:
-    """The manifest-protocol mutation layer of a generation-structured
-    index, written ONCE for every index kind (the MinHash-LSH index
-    and the IVF index are its two subclasses).
+    """The manifest-protocol mutation layer, written ONCE for every
+    store kind: the MinHash-LSH index and the IVF index, and the MERGE
+    tables (:class:`~sqltask_spark.operators.merge.TableStore`).
 
     A store at ``path`` is laid out as::
 
@@ -765,6 +729,13 @@ class GenerationStore:
     generation is written (:meth:`write_compacted`), and — per
     append call — how a new generation's payload is written. Every
     parquet file a mutation produces goes through :meth:`write`.
+
+    The LAYOUT HOOKS (:meth:`dirs`, :meth:`referenced`,
+    :meth:`unreadable`, :meth:`compacted`, :meth:`retire`,
+    :meth:`census`) default to the index layout above; a store of
+    another layout — the tables' file lists — overrides them and
+    keeps every protocol step: reads, the write path, the commit, the
+    sweep, the compact/vacuum shells and the health/maintain policy.
     """
 
     #: stored id column of the generations and the tombstone relation
@@ -788,21 +759,48 @@ class GenerationStore:
     def gen_path(self, g: str) -> str:
         return f"{self.path}/{self.gen_rel(g)}"
 
-    def _dirs(self) -> "tuple[str, str, str]":
-        return (
-            f"{self.path}/{self.gen_dir}",
-            f"{self.path}/{self.aux}",
-            f"{self.path}/tombstones",
-        )
+    def dirs(self) -> "tuple[str, ...]":
+        """LAYOUT HOOK: the store directories (relative to the root)
+        whose children are generation-named (``…g%06d``) — what the
+        sweeps and the name allocation scan."""
+        return (self.gen_dir, self.aux, "tombstones")
 
-    def committed(self, as_of: int | None = None) -> dict:
-        """The newest committed manifest, or — time travel — the exact
-        version ``as_of``. Every version committed since the last
-        compaction stays readable (mutations write only new files and
-        sweeps respect the union of ALL manifests' references);
-        compaction (or a rebuild's sweep) is the retention boundary,
-        and travelling past it errors loudly instead of serving a
-        partial index."""
+    def referenced(self, m: dict) -> set:
+        """LAYOUT HOOK: the store-relative paths manifest ``m``
+        references — here directories: its generations, its side
+        relation's version and its tombstone sets."""
+        refs = {self.gen_rel(g) for g in m.get("generations", [])}
+        refs |= {f"tombstones/{g}" for g in m.get("tombstones", [])}
+        if self.aux in m:
+            refs.add(f"{self.aux}/{m[self.aux]}")
+        return refs
+
+    def unreadable(self, m: dict) -> list:
+        """LAYOUT HOOK: the relations of the surviving version ``m``
+        that are gone from disk — compaction (or a rebuild's sweep)
+        reclaims generations while older manifests stay. One
+        existence check per generation and side relation."""
+        rels = [self.gen_rel(g) for g in m["generations"]]
+        rels.append(f"{self.aux}/{m[self.aux]}")
+        return [
+            r for r in rels
+            if not path_exists(self.spark, f"{self.path}/{r}")
+        ]
+
+    def committed(
+        self, as_of: int | None = None, as_of_ts: int | None = None
+    ) -> dict:
+        """The newest committed manifest, the exact version ``as_of``
+        (time travel), or the newest version committed at or before
+        ``as_of_ts`` (epoch millis, :func:`seq_at_timestamp`). Every
+        version stays readable until its retention boundary
+        (mutations write only new files and sweeps respect the union
+        of ALL manifests' references); travelling past it errors
+        loudly instead of serving a partial state."""
+        if as_of is not None and as_of_ts is not None:
+            raise ValueError("pass as_of or as_of_ts, not both")
+        if as_of_ts is not None:
+            as_of = seq_at_timestamp(self.spark, self.path, as_of_ts)
         if as_of is None:
             m = read_manifest(self.spark, self.path)
             if m is None:
@@ -811,16 +809,11 @@ class GenerationStore:
         m = read_manifest_at(self.spark, self.path, as_of)
         if m is None:
             raise ValueError(
-                f"version {as_of} of {self.path} does not exist (never"
-                f" committed, or torn); available:"
+                f"version {as_of} of {self.path} does not exist (vacuumed,"
+                f" torn, or never committed); available:"
                 f" {list_manifest_seqs(self.spark, self.path)}"
             )
-        rels = [self.gen_rel(g) for g in m["generations"]]
-        rels.append(f"{self.aux}/{m[self.aux]}")
-        missing = [
-            r for r in rels
-            if not path_exists(self.spark, f"{self.path}/{r}")
-        ]
+        missing = self.unreadable(m)
         if missing:
             raise ValueError(
                 f"version {as_of} of {self.path} is no longer readable —"
@@ -897,24 +890,40 @@ class GenerationStore:
             m["_seq"] if m else -1,
         )
 
-    def sweep(self) -> list[str]:
-        """Delete generation, side-relation and tombstone directories
-        no manifest names — the debris of a crashed mutation. Committed
-        = the UNION over all manifests, not just the newest: older
-        versions stay time-travel readable until compaction."""
-        live = live_unions(
-            self.spark, self.path, ("generations", self.aux, "tombstones")
-        )
-        gen_dir, aux_dir, tomb_dir = self._dirs()
-        p = self.gen_prefix
-        return (
-            sweep_orphans(
-                self.spark, gen_dir, {p + g for g in live["generations"]},
-                p + "g",
-            )
-            + sweep_orphans(self.spark, aux_dir, live[self.aux], "g")
-            + sweep_orphans(self.spark, tomb_dir, live["tombstones"], "g")
-        )
+    def sweep(self, files: bool = False) -> list[str]:
+        """Delete what no manifest references — the debris of a
+        crashed mutation. Committed = the UNION over all manifests,
+        not just the newest: older versions stay time-travel readable
+        until their retention boundary. ``files`` (the vacuum) also
+        reclaims the unreferenced data files inside referenced
+        directories. Returns the swept store-relative paths."""
+        live: set = set()
+        for m in read_all_manifests(self.spark, self.path):
+            live |= self.referenced(m)
+        return self._sweep(live, files)
+
+    def _sweep(self, live: set, files: bool = False) -> list[str]:
+        """Delete every generation-named child of :meth:`dirs` with no
+        ``live`` path at or under it; with ``files``, also the data
+        files (not ``_``/``.`` metadata) of the partly live ones."""
+        parents = {r.rsplit("/", 1)[0] for r in live}
+        swept = []
+        for d in self.dirs():
+            for name in list_names(self.spark, f"{self.path}/{d}"):
+                rel = f"{d}/{name}"
+                if not name.startswith("g") or rel in live:
+                    continue
+                if rel not in parents:
+                    swept.append(rel)
+                elif files:
+                    swept += [
+                        f"{rel}/{n}"
+                        for n in list_names(self.spark, f"{self.path}/{rel}")
+                        if n[0] not in "_." and f"{rel}/{n}" not in live
+                    ]
+        for rel in swept:
+            delete_path(self.spark, f"{self.path}/{rel}")
+        return swept
 
     # -- append ------------------------------------------------------
 
@@ -1055,10 +1064,7 @@ class GenerationStore:
         generations worth skipping. Results identical."""
         spark = self.spark
         m = self.committed()
-        sweep_orphans(
-            spark, f"{self.path}/tombstones",
-            live_union(spark, self.path, "tombstones"), "g",
-        )
+        self.sweep()
         blocked = ids.select(F.col(id_col).alias(self.id_col)).distinct()
         gens = list(m["generations"])
         gen_stats = m.get("gen_stats", {})
@@ -1151,9 +1157,9 @@ class GenerationStore:
         """Fresh sequential generation names past everything committed
         OR on disk under any of the store's directories (the
         :func:`fresh_gen` rule, extended to a batch of allocations)."""
-        nums = [-1] + [int(g[1:]) for g in m["generations"]]
-        for parent in self._dirs():
-            for name in list_names(self.spark, parent):
+        nums = [-1] + [int(g[1:]) for g in m.get("generations", [])]
+        for d in self.dirs():
+            for name in list_names(self.spark, f"{self.path}/{d}"):
                 mm = re.search(r"g(\d{6})$", name)
                 if mm:
                     nums.append(int(mm.group(1)))
@@ -1296,14 +1302,11 @@ class GenerationStore:
         generation ``gen``. Returns the manifest updates."""
         raise NotImplementedError
 
-    def compact(self) -> None:
-        """Rewrite the committed state as ONE generation minus the
-        tombstoned rows, clear the tombstone set, and sweep the
-        superseded directories once the manifest has landed."""
-        m = self.committed()
-        self.sweep()
-        gen_dir, aux_dir, tomb_dir = self._dirs()
-        gen = fresh_gen(self.spark, [gen_dir, aux_dir], m)
+    def compacted(self, m: dict, gen: str) -> dict:
+        """LAYOUT HOOK: write the committed state of ``m`` as the ONE
+        generation ``gen`` and return the manifest updates — here the
+        kind's :meth:`write_compacted` minus the tombstoned rows, with
+        the tombstone set cleared."""
         tombs = self.tombstones(m)
 
         def keep(df):
@@ -1313,34 +1316,68 @@ class GenerationStore:
 
         updates = self.write_compacted(m, gen, keep)
         st = id_bounds(self.read_ids(m, [gen]), self.id_col)
-        self.commit(m, {
+        return {
             **updates,
             "generations": [gen],
             "tombstones": [],
             "gen_stats": {gen: st} if st else {},
-        })
-        # post-commit cleanup of the superseded state. An in-flight
-        # probe PLANNED against the old manifest may need a retry —
-        # the standard compaction caveat.
-        p = self.gen_prefix
-        sweep_orphans(self.spark, gen_dir, {p + gen}, p + "g")
-        if self.aux in updates:
-            sweep_orphans(self.spark, aux_dir, {updates[self.aux]}, "g")
-        sweep_orphans(self.spark, tomb_dir, set(), "g")
+        }
 
-    def vacuum(self, keep_versions: int = 1) -> dict:
-        """Drop all but the newest ``keep_versions`` manifests, then
-        sweep every directory no surviving manifest references."""
-        dropped = drop_manifests(self.spark, self.path, keep_versions)
-        return {"dropped_versions": dropped, "swept_dirs": self.sweep()}
+    def retire(self, m: dict) -> None:
+        """LAYOUT HOOK: cleanup once compaction committed ``m``. Here
+        compaction is the retention boundary: everything ``m`` does
+        not reference is swept. An in-flight probe PLANNED against the
+        old manifest may need a retry — the standard compaction
+        caveat."""
+        self._sweep(self.referenced(m))
+
+    def compact(self) -> dict:
+        """Rewrite the committed state as ONE generation
+        (:meth:`compacted`), commit it, then :meth:`retire` what it
+        superseded. Returns the committed manifest updates."""
+        m = self.committed()
+        self.sweep()
+        updates = self.compacted(m, self._allocator(m)())
+        self.commit(m, updates)
+        self.retire({**m, **updates})
+        return updates
+
+    def vacuum(
+        self, keep_versions: int = 1, min_keep_seq: int | None = None
+    ) -> dict:
+        """Drop all but the newest ``keep_versions`` manifests (never
+        one at or past ``min_keep_seq``, :func:`drop_manifests`), then
+        sweep every directory and data file no surviving manifest
+        references."""
+        dropped = drop_manifests(
+            self.spark, self.path, keep_versions, min_keep_seq=min_keep_seq
+        )
+        return {"dropped_versions": dropped, "swept": self.sweep(files=True)}
+
+    def trim(self, keep: int) -> int:
+        """Truncate the committed ``batches`` ledger to its newest
+        ``keep`` ids with one manifest-only commit (everything else
+        carried forward); no-op without a commit when already within
+        bound. Returns the number trimmed. See
+        :func:`sqltask_spark.operators.merge.trim_batch_ledger` for
+        the correctness contract (``keep`` must exceed the source's
+        redelivery horizon)."""
+        if keep < 1:
+            raise ValueError(f"keep must be >= 1, got {keep}")
+        m = self.committed()
+        batches = m.get("batches", [])
+        if len(batches) <= keep:
+            return 0
+        self.commit(m, {"batches": batches[-keep:]})
+        return len(batches) - keep
 
     # -- health / maintain -------------------------------------------
 
-    def health(self) -> dict:
-        """Generation count (manifest-only), tombstone count and ratio
-        over physical ids (skinny id-column reads, skipped entirely
-        when no tombstone set is committed), version count."""
-        m = self.committed()
+    def census(self, m: dict) -> dict:
+        """LAYOUT HOOK: the health figures of ``m`` — here generation
+        count (manifest-only), tombstone count and ratio over physical
+        ids (skinny id-column reads, skipped entirely when no
+        tombstone set is committed)."""
         tombs = self.tombstones(m)
         n_tombstoned, ratio = 0, 0.0
         if tombs is not None:
@@ -1352,35 +1389,43 @@ class GenerationStore:
             "n_tombstone_sets": len(m.get("tombstones", [])),
             "n_tombstoned": n_tombstoned,
             "tombstone_ratio": ratio,
+        }
+
+    def health(self) -> dict:
+        """The committed state's :meth:`census` plus its version
+        count."""
+        return {
+            **self.census(self.committed()),
             "n_versions": len(list_manifest_seqs(self.spark, self.path)),
         }
 
     def maintain(
         self,
-        max_generations: int,
-        max_tombstone_ratio: float,
+        compact_when,
         vacuum_keep_versions: int | None,
         ledger_keep_batches: int | None,
+        vacuum_min_keep_seq: int | None = None,
     ) -> dict:
-        """Compact when generation count or tombstone ratio crosses
-        its threshold, trim the batch ledger, vacuum old versions;
-        returns the health snapshot plus what was done."""
+        """Compact when ``compact_when(health)`` holds, trim the batch
+        ledger, then vacuum when the versions now committed exceed
+        ``vacuum_keep_versions``; returns the health snapshot plus
+        what was done."""
         h = self.health()
-        compact = (
-            h["n_generations"] > max_generations
-            or h["tombstone_ratio"] > max_tombstone_ratio
-        )
+        compact = bool(compact_when(h))
         if compact:
             self.compact()
         trimmed = 0
         if ledger_keep_batches is not None:
-            trimmed = trim_batches(self.spark, self.path, ledger_keep_batches)
+            # trim BEFORE the vacuum so the pre-trim manifest it
+            # supersedes is immediately reclaimable
+            trimmed = self.trim(ledger_keep_batches)
         vac: dict = {}
         if (
             vacuum_keep_versions is not None
-            and h["n_versions"] > vacuum_keep_versions
+            and h["n_versions"] + compact + bool(trimmed)
+            > vacuum_keep_versions
         ):
-            vac = self.vacuum(vacuum_keep_versions)
+            vac = self.vacuum(vacuum_keep_versions, vacuum_min_keep_seq)
         return {
             **h, "compacted": compact, "vacuum": vac,
             "ledger_trimmed": trimmed,

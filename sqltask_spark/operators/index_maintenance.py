@@ -34,6 +34,15 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 
+def _over(max_generations: int, max_tombstone_ratio: float):
+    """The index compaction trigger: generation count or tombstone
+    ratio past its threshold."""
+    return lambda h: (
+        h["n_generations"] > max_generations
+        or h["tombstone_ratio"] > max_tombstone_ratio
+    )
+
+
 def minhash_index_health(spark: SparkSession, path: str) -> dict:
     """Health snapshot of a committed MinHash index: generation
     count (manifest-only), tombstone count and ratio over physical
@@ -70,7 +79,7 @@ def maintain_minhash_index(
     from sqltask_spark.operators.dedup_index import MinHashStore
 
     return MinHashStore(spark, path).maintain(
-        max_generations, max_tombstone_ratio, vacuum_keep_versions,
+        _over(max_generations, max_tombstone_ratio), vacuum_keep_versions,
         ledger_keep_batches,
     )
 
@@ -107,7 +116,7 @@ def maintain_ivf_index(
     from sqltask_spark.operators.ann_index import IvfStore
 
     return IvfStore(spark, path).maintain(
-        max_generations, max_tombstone_ratio, vacuum_keep_versions,
+        _over(max_generations, max_tombstone_ratio), vacuum_keep_versions,
         ledger_keep_batches,
     )
 
@@ -118,39 +127,9 @@ def parquet_table_health(spark: SparkSession, path: str) -> dict:
     copy-on-write accumulates generation fragments) plus version
     count since the retention boundary. Manifest + file-status reads
     only; no data is scanned."""
-    from sqltask_spark.operators import index_fs
-    from sqltask_spark.operators.merge import _data_dir
+    from sqltask_spark.operators.merge import TableStore
 
-    m = index_fs.read_manifest(spark, path)
-    if m is None:
-        raise ValueError(f"no committed table at {path}")
-    files = m.get("files", [])
-    total = 0
-    if files:
-        # ONE listStatus per generation directory, not one
-        # getFileStatus RPC per file — on object stores the per-file
-        # form costs tens of ms × n_files per maintenance check,
-        # which would contradict the cheap-no-op contract
-        by_gen: dict[str, set[str]] = {}
-        for rel in files:
-            gen, _, name = rel.partition("/")
-            by_gen.setdefault(gen, set()).add(name)
-        fs, _ = index_fs._fs(spark, path)
-        jvm = spark._jvm
-        for gen, names in by_gen.items():
-            for st in fs.listStatus(
-                jvm.org.apache.hadoop.fs.Path(
-                    f"{_data_dir(path)}/{gen}"
-                )
-            ):
-                if st.getPath().getName() in names:
-                    total += st.getLen()
-    return {
-        "n_files": len(files),
-        "total_bytes": total,
-        "mean_file_bytes": total // len(files) if files else 0,
-        "n_versions": len(index_fs.list_manifest_seqs(spark, path)),
-    }
+    return TableStore(spark, path).health()
 
 
 def maintain_parquet_table(
@@ -174,34 +153,15 @@ def maintain_parquet_table(
     ``ledger_keep_batches`` (r12) bounds the batch LEDGER — size it
     past the source's redelivery horizon
     (:func:`~sqltask_spark.operators.merge.trim_batch_ledger`)."""
-    from sqltask_spark.operators.merge import (
-        compact_parquet_table,
-        trim_batch_ledger,
-        vacuum_parquet_table,
-    )
+    from sqltask_spark.operators.merge import TableStore
 
-    h = parquet_table_health(spark, path)
-    compact = (
-        h["n_files"] > max_files
-        and h["mean_file_bytes"] < min_mean_file_bytes
+    return TableStore(spark, path).maintain(
+        lambda h: (
+            h["n_files"] > max_files
+            and h["mean_file_bytes"] < min_mean_file_bytes
+        ),
+        vacuum_keep_versions, ledger_keep_batches, vacuum_min_keep_seq,
     )
-    if compact:
-        compact_parquet_table(spark, path)
-    trimmed = 0
-    if ledger_keep_batches is not None:
-        # trim BEFORE the vacuum so the pre-trim manifest it
-        # supersedes is immediately reclaimable
-        trimmed = trim_batch_ledger(spark, path, ledger_keep_batches)
-    vac: dict = {}
-    if vacuum_keep_versions is not None:
-        vac = vacuum_parquet_table(
-            spark, path, keep_versions=vacuum_keep_versions,
-            min_keep_seq=vacuum_min_keep_seq,
-        )
-    return {
-        **h, "compacted": compact, "vacuum": vac,
-        "ledger_trimmed": trimmed,
-    }
 
 
 def maintain_bloom_store(

@@ -44,34 +44,28 @@ from pyspark.sql import functions as F
 def _resolve_window(
     spark: SparkSession,
     table_path: str,
-    index_path: str,
+    store,
     from_seq: int | None,
     to_seq: int | None,
-    committed_manifest,
 ) -> "tuple[int, int]":
     """(from, to) for this sync. ``from_seq=None`` resumes from the
     index manifest's ``synced`` marker; a marker-less index must be
     seeded with an explicit ``from_seq`` (the table version the index
     was built from) exactly once."""
-    from sqltask_spark.operators import index_fs
+    from sqltask_spark.operators.merge import TableStore
 
     if from_seq is None:
-        marker = committed_manifest(spark, index_path).get(
-            "synced", {}
-        )
+        marker = store.committed().get("synced", {})
         if table_path not in marker:
             raise ValueError(
-                f"index {index_path} has no synced marker for"
+                f"index {store.path} has no synced marker for"
                 f" {table_path} — pass from_seq explicitly on the"
                 " first sync (the table version the index was built"
                 " from); subsequent syncs may omit it"
             )
         from_seq = int(marker[table_path])
     if to_seq is None:
-        tm = index_fs.read_manifest(spark, table_path)
-        if tm is None:
-            raise ValueError(f"no committed table at {table_path}")
-        to_seq = int(tm["_seq"])
+        to_seq = int(TableStore(spark, table_path).committed()["_seq"])
     return from_seq, to_seq
 
 
@@ -85,17 +79,11 @@ def _commit_synced_marker(
     """Persist ``synced[table_path] = to_seq`` as one manifest-only
     commit (no data files change — every mutation carries unknown
     keys forward, so the marker survives appends/deletes/unblocks)."""
-    from sqltask_spark.operators import index_fs
+    from sqltask_spark.operators.index_fs import GenerationStore
 
     m = committed_manifest(spark, index_path)
-    synced = dict(m.get("synced", {}))
-    synced[table_path] = int(to_seq)
-    index_fs.commit_manifest(
-        spark,
-        index_path,
-        {**{k: v for k, v in m.items() if k != "_seq"},
-         "synced": synced},
-        m["_seq"],
+    GenerationStore(spark, index_path).commit(
+        m, {"synced": {**m.get("synced", {}), table_path: int(to_seq)}}
     )
 
 
@@ -136,11 +124,8 @@ def _sync(
     append."""
     from sqltask_spark.operators.merge import table_changes_classified
 
-    def committed(*_):
-        return store.committed()
-
     from_seq, to_seq = _resolve_window(
-        spark, table_path, index_path, from_seq, to_seq, committed,
+        spark, table_path, store, from_seq, to_seq
     )
     if to_seq <= from_seq:
         return {
@@ -212,7 +197,8 @@ def _sync(
             else 0
         )
         _commit_synced_marker(
-            spark, index_path, table_path, to_seq, committed,
+            spark, index_path, table_path, to_seq,
+            lambda *_: store.committed(),
         )
         return {
             "tombstoned": n_tombstoned,

@@ -1,5 +1,8 @@
 """MERGE INTO for parquet tables — copy-on-write upserts under the
-versioned-manifest commit protocol of :mod:`.index_fs`.
+versioned-manifest commit protocol of :mod:`.index_fs`, run by the
+same :class:`~.index_fs.GenerationStore` as the persistent indexes:
+:class:`TableStore` supplies only the table layout, and every table
+function reads, writes, commits and sweeps through the store.
 
 No reference counterpart (north-star extension): the reference's only
 write repair is batch-scoped DELETE + INSERT against a live database
@@ -24,7 +27,9 @@ primitive the way Delta/Iceberg/Hudi do:
   batch-idempotency principle applied to file tables;
 - every committed version stays readable (``read_parquet_table(...,
   as_of=seq)`` — time travel) until :func:`vacuum_parquet_table`
-  reclaims it.
+  reclaims it;
+- manifest keys this module does not own (sync markers, future
+  metadata) carry forward through every mutation.
 
 Scale notes: the only driver-side materializations are the
 touched-file list (bounded by the table's file count, the same thing
@@ -42,7 +47,9 @@ the batch can actually touch, not the whole table. Every MERGE
 generation and compaction writes as many files as Spark would split a
 scan of its estimated size into (:func:`_right_sized`), so a small
 merge adds one file instead of one per task and no compaction has to
-clean up after it, while a large rewrite keeps its parallelism.
+clean up after it, while a large rewrite keeps its parallelism. The
+driver-side fast paths are bounded by :data:`~.index_fs.SMALL_BATCH_CAP`
+and :data:`~.index_fs.PROBE_CAP`, read at call time.
 """
 
 from __future__ import annotations
@@ -55,43 +62,6 @@ from pyspark.sql import functions as F
 from sqltask_spark.operators import index_fs
 
 _DATA = "data"
-
-# Bounded-collect caps for the driver-side fast paths (module level
-# so tests can force the join formulations and pin fast ≡ join).
-# _KEYS_CAP bounds the per-key collect MERGE always does; _INLINE_CAP
-# additionally bounds the keys inlined into isin literals (decide
-# fast path); _CHANGES_CAP bounds each manifest-diff side of the
-# change-feed window fast path.
-#
-# The isin caps sit at the MEASURED isin-vs-join crossover (r12
-# session 4): an N-literal isin costs analysis/codegen time that grows
-# superlinearly in N — per-merge min-of-3 walls on a 100k-row table
-# were 64 keys 1.8s / 512 keys 2.2s / 2048 keys 5.2s / 4096 keys 10.8s
-# against a FLAT ~2.6s for the join arm — so past ~512 literals the
-# "fast" path loses to the exchange it avoids. The caps bound the
-# literal count, not correctness: bigger batches take the join
-# formulation, which is also the right shape at 100 TB.
-_KEYS_CAP = 65536
-_INLINE_CAP = 512
-_CHANGES_CAP = 512
-
-
-def _data_dir(path: str) -> str:
-    return f"{path.rstrip('/')}/{_DATA}"
-
-
-def _list_gen_files(spark: SparkSession, path: str, gen: str) -> list[str]:
-    """Committed-relative file names (``gen/part-*.parquet``) under a
-    generation directory."""
-    return [
-        f"{gen}/{n}"
-        for n in index_fs.list_names(spark, f"{_data_dir(path)}/{gen}")
-        if n.endswith(".parquet")
-    ]
-
-
-def _abs_files(path: str, rels: list[str]) -> list[str]:
-    return [f"{_data_dir(path)}/{rel}" for rel in rels]
 
 
 def _rel_of(uri: str) -> str:
@@ -163,86 +133,138 @@ def _nullable_norm(dt):
     return dt
 
 
-def _sweep_uncommitted_gens(spark: SparkSession, path: str) -> None:
-    """Delete generation dirs no PARSEABLE manifest references — the
-    debris of a crashed merge. Time travel keeps OLD manifests'
-    generations live, so the live set is the union over all of them,
-    not just the newest."""
-    live: set[str] = set()
-    for m in index_fs.read_all_manifests(spark, path):
-        live |= {rel.split("/", 1)[0] for rel in m.get("files", [])}
-    index_fs.sweep_orphans(spark, _data_dir(path), live, "g")
+def stats_prunable(ent, bounds: dict | None, probe_pos) -> bool:
+    """True iff the data file whose manifest ``stats`` entry is
+    ``ent`` (``[lo, hi]``, or ``[lo, hi, filter words]``) PROVABLY
+    holds none of the looked-up keys: the entry read as generation
+    stats by :func:`~.index_fs.generation_prunable`, against the keys'
+    ``{"min_id", "max_id"}`` ``bounds`` and their filter ``probe_pos``
+    (either may be ``None``). A file without an entry stays a
+    candidate — correctness never depends on the stats."""
+    if not ent or ent[0] is None:
+        return False
+    st = {"min_id": ent[0], "max_id": ent[1]}
+    if len(ent) > 2:
+        st["filter"] = {
+            "k": index_fs.ID_FILTER_K,
+            "bits": index_fs.ID_FILTER_WORDS * 64,
+            "words": ent[2],
+        }
+    return index_fs.generation_prunable(st, bounds, probe_pos)
 
 
-def _file_stats(
-    spark: SparkSession, path: str, rels: list[str], stats_col: str,
-    schema=None,
-) -> dict:
-    """Per-file data-skipping statistics of ``stats_col`` over the
-    given committed files — ``[min, max, filter_words]``, the stats
-    Delta/Iceberg keep per data file plus the same tiny key Bloom
-    filter the index generations carry (k=2, 8192 bits, ~1 KB of
-    manifest per file; a 100 TB deployment would move the per-file
-    blocks to Avro/puffin sidecars exactly as Iceberg does — the
-    JSON manifest is this repo's honest stand-in). [min,max] prunes
-    range-clustered tables; the filter prunes by CONTENT, so a merge
-    of hashed/interleaved keys still touches only the files that
-    hold them. One skinny scan of the stats column grouped by file,
-    file-count-bounded collect — same job count as before."""
-    if not rels:
-        return {}
-    # sparse shape (index_fs.explode_pos_rows): positions as rows
-    # grouped by (file, word) with ONE bit_or — the former per-file
-    # 128-expression aggregate paid ~1.4s of codegen compile per
-    # merge commit. Collect is rels × ≤129 group rows.
-    # Schema pinned by every caller (the table schema both already
-    # hold) — an unpinned multi-file read pays a distributed
-    # footer-inference JOB per commit (guide §6 planning cost).
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    src = reader.parquet(*_abs_files(path, rels)).select(
-        F.col("_metadata.file_path").alias("__file"),
-        F.col(stats_col).alias("__k"),
-    )
-    rows = (
-        index_fs.explode_pos_rows(src, "__k", keep=("__file",))
-        .groupBy("__file", "w")
-        .agg(
-            F.bit_or("m").alias("bits"),
-            F.min("_id").alias("lo"),
-            F.max("_id").alias("hi"),
+class TableStore(index_fs.GenerationStore):
+    """A versioned table on the shared generation protocol. Layout::
+
+        manifests/manifest-*.json       the commit points
+        data/g000001/part-*.parquet     the files one create, merge or
+                                        compaction wrote
+
+    The manifest keys are the table's own: ``files`` (the committed
+    file names relative to ``data/``), ``schema``, and — with a
+    declared ``stats_col`` — the per-file ``stats`` ``[min, max(,
+    key filter words)]``: the stats Delta/Iceberg keep per data file
+    plus the same tiny key Bloom filter the index generations carry.
+    The layout hooks reference data FILES, so a merge's untouched
+    files stay committed while its touched ones drop out. Every
+    version stays readable until a vacuum drops its manifest:
+    compaction is no retention boundary here, and no time-travel read
+    checks a file's existence."""
+
+    gen_dir = _DATA
+
+    def dirs(self):
+        return (_DATA,)
+
+    def referenced(self, m):
+        return {f"{_DATA}/{rel}" for rel in m.get("files", [])}
+
+    def unreadable(self, m):
+        return []
+
+    def retire(self, m):
+        pass
+
+    def census(self, m):
+        files = m.get("files", [])
+        by_gen: dict[str, set[str]] = {}
+        for rel in files:
+            gen, _, name = rel.partition("/")
+            by_gen.setdefault(gen, set()).add(name)
+        # ONE listStatus per generation directory, not one
+        # getFileStatus RPC per file — on object stores the per-file
+        # form costs tens of ms × n_files per maintenance check,
+        # which would contradict the cheap-no-op contract
+        fs, _ = index_fs._fs(self.spark, self.path)
+        hpath = self.spark._jvm.org.apache.hadoop.fs.Path
+        total = sum(
+            st.getLen()
+            for gen, names in by_gen.items()
+            for st in fs.listStatus(hpath(self.gen_path(gen)))
+            if st.getPath().getName() in names
         )
-        .collect()
-    )
-    by_file: dict[str, list] = {}
-    for r in rows:
-        by_file.setdefault(r["__file"], []).append(r)
-    wanted = set(rels)
-    out = {}
-    for fpath, grp in by_file.items():
-        rel = _rel_of(fpath)
-        if rel not in wanted:
-            continue
-        words = [0] * index_fs.ID_FILTER_WORDS
-        for r in grp:
-            words[int(r["w"])] = int(r["bits"])
-        los = [r["lo"] for r in grp if r["lo"] is not None]
-        lo = min(los) if los else None
-        hi = (
-            max(r["hi"] for r in grp if r["hi"] is not None)
-            if los
-            else None
+        return {
+            "n_files": len(files),
+            "total_bytes": total,
+            "mean_file_bytes": total // len(files) if files else 0,
+        }
+
+    def compacted(self, m, gen):
+        files, stats = [], {}
+        if m.get("files"):
+            files, stats = self.write_files(m, _right_sized(self.read(m)), gen)
+        return self.files_update(m, files, stats)
+
+    def read(self, m: dict, rels: "list[str] | None" = None) -> DataFrame:
+        """The rows of the committed files ``rels`` (default: every
+        file of ``m``), planned with the manifest schema — zero
+        jobs."""
+        rels = m.get("files", []) if rels is None else rels
+        if not rels:
+            return self.spark.createDataFrame([], _schema_of(m))
+        return self.spark.read.schema(_schema_of(m)).parquet(
+            *[f"{self.path}/{_DATA}/{rel}" for rel in rels]
         )
-        set_bits = sum(
-            bin(w & 0xFFFFFFFFFFFFFFFF).count("1") for w in words
+
+    def write_files(
+        self, m: dict, df: DataFrame, gen: str | None = None
+    ) -> "tuple[list[str], dict]":
+        """Write ``df`` as the fresh generation ``gen`` through the
+        store's write path. Returns its committed file names and, when
+        ``m`` declares ``stats_col``, their stats entries: ONE skinny
+        aggregate over the new files, :func:`~.index_fs._stats_agg`
+        grouped by data file."""
+        gen = gen or self._allocator(m)()
+        self.write(df, self.gen_rel(gen))
+        files = [
+            f"{gen}/{n}"
+            for n in index_fs.list_names(self.spark, self.gen_path(gen))
+            if n.endswith(".parquet")
+        ]
+        col = m.get("stats_col")
+        if col is None or not files:
+            return files, {}
+        per_file = index_fs._stats_agg(
+            self.read(m, files).select(
+                F.col("_metadata.file_path").alias("__file"), col
+            ),
+            col,
+            by="__file",
         )
-        # saturated filters never prune — store the 2-element
-        # range-only form instead of ~1 KB of all-ones per file
-        # (same cut as index_fs._stats_agg)
-        if set_bits < int(0.9 * index_fs.ID_FILTER_WORDS * 64):
-            out[rel] = [lo, hi, words]
-        else:
-            out[rel] = [lo, hi]
-    return out
+        return files, {
+            _rel_of(uri): [st["min_id"], st["max_id"]]
+            + ([st["filter"]["words"]] if "filter" in st else [])
+            for uri, st in per_file.items()
+            if st
+        }
+
+    @staticmethod
+    def files_update(m: dict, files: list, stats: dict) -> dict:
+        """The manifest updates that commit ``files`` (with their
+        ``stats`` when ``m`` declares ``stats_col``)."""
+        if m.get("stats_col") is None:
+            return {"files": files}
+        return {"files": files, "stats": stats}
 
 
 def create_parquet_table(
@@ -270,7 +292,7 @@ def create_parquet_table(
     loud error MERGE raises for a duplicate-key source.
     """
     spark = df.sparkSession
-    if index_fs.read_manifest(spark, path) is not None:
+    if index_fs.list_manifest_seqs(spark, path):
         raise ValueError(f"table already exists at {path}")
     if stats_col is not None:
         dup = (
@@ -287,20 +309,15 @@ def create_parquet_table(
                 f" stats/merge key must be unique (MERGE, the change"
                 f" feed, and file pruning all assume one row per key)"
             )
-    gen = index_fs.fresh_gen(spark, [_data_dir(path)], None)
-    df.write.mode("overwrite").parquet(f"{_data_dir(path)}/{gen}")
-    files = _list_gen_files(spark, path, gen)
-    manifest = {
-        "files": files,
+    store = TableStore(spark, path)
+    head = {
         "batches": [batch_id] if batch_id else [],
         "schema": df.schema.json(),
     }
     if stats_col is not None:
-        manifest["stats_col"] = stats_col
-        manifest["stats"] = _file_stats(
-            spark, path, files, stats_col, schema=df.schema
-        )
-    index_fs.commit_manifest(spark, path, manifest, -1)
+        head["stats_col"] = stats_col
+    files, stats = store.write_files(head, df)
+    store.commit(None, {**head, **store.files_update(head, files, stats)})
 
 
 def read_parquet_table(
@@ -314,28 +331,8 @@ def read_parquet_table(
     never existed), or TIMESTAMP AS OF ``as_of_ts`` (epoch millis —
     resolved to the newest version committed at or before that wall
     time via the manifests' ``_committed_at`` stamps)."""
-    if as_of is not None and as_of_ts is not None:
-        raise ValueError("pass as_of or as_of_ts, not both")
-    if as_of_ts is not None:
-        as_of = index_fs.seq_at_timestamp(spark, path, as_of_ts)
-    if as_of is None:
-        m = index_fs.read_manifest(spark, path)
-        if m is None:
-            raise ValueError(f"no committed table at {path}")
-    else:
-        m = index_fs.read_manifest_at(spark, path, as_of)
-        if m is None:
-            raise ValueError(
-                f"version {as_of} of {path} does not exist (vacuumed,"
-                f" torn, or never committed); available:"
-                f" {index_fs.list_manifest_seqs(spark, path)}"
-            )
-    files = m.get("files", [])
-    if not files:
-        return spark.createDataFrame([], _schema_of(m))
-    return spark.read.schema(_schema_of(m)).parquet(
-        *_abs_files(path, files)
-    )
+    store = TableStore(spark, path)
+    return store.read(store.committed(as_of, as_of_ts))
 
 
 def read_parquet_table_keys(
@@ -364,22 +361,8 @@ def read_parquet_table_keys(
     ``as_of`` / ``as_of_ts`` time-travel exactly as in
     :func:`read_parquet_table` ("what was this user's row yesterday"
     — the wall-clock axis matters most on serving state)."""
-    if as_of is not None and as_of_ts is not None:
-        raise ValueError("pass as_of or as_of_ts, not both")
-    if as_of_ts is not None:
-        as_of = index_fs.seq_at_timestamp(spark, path, as_of_ts)
-    if as_of is None:
-        m = index_fs.read_manifest(spark, path)
-        if m is None:
-            raise ValueError(f"no committed table at {path}")
-    else:
-        m = index_fs.read_manifest_at(spark, path, as_of)
-        if m is None:
-            raise ValueError(
-                f"version {as_of} of {path} does not exist (vacuumed,"
-                f" torn, or never committed); available:"
-                f" {index_fs.list_manifest_seqs(spark, path)}"
-            )
+    store = TableStore(spark, path)
+    m = store.committed(as_of, as_of_ts)
     stats_col = m.get("stats_col")
     if stats_col is None:
         raise ValueError(
@@ -387,13 +370,10 @@ def read_parquet_table_keys(
             " need the per-file key statistics recorded at write"
             " time (create_parquet_table(..., stats_col=...))"
         )
-    schema = _schema_of(m)
     files = m.get("files", [])
     if not files or not keys:
-        return spark.createDataFrame([], schema)
-    stats = m.get("stats", {})
-    lo_k, hi_k = min(keys), max(keys)
-    key_type = schema[stats_col].dataType.simpleString()
+        return store.read(m, [])
+    key_type = _schema_of(m)[stats_col].dataType.simpleString()
     key_df = spark.createDataFrame(
         [(k,) for k in keys], f"{stats_col} {key_type}"
     )
@@ -401,44 +381,20 @@ def read_parquet_table_keys(
     # positions in one job (a limit-capped collect runs as an
     # incremental take — a one-partition job, then the rest)
     probe_pos = None
-    if len(keys) <= _KEYS_CAP:
+    if len(keys) <= index_fs.PROBE_CAP:
         probe_pos = [
             (int(r[0]), int(r[1]))
             for r in key_df.select(
                 *index_fs.filter_pos_cols(stats_col)
             ).collect()
         ]
-
-    def _skippable(rel: str) -> bool:
-        ent = stats.get(rel)
-        if not ent or ent[0] is None:
-            return False
-        if ent[1] < lo_k or ent[0] > hi_k:
-            return True
-        if len(ent) < 3 or probe_pos is None:
-            return False
-        return index_fs.generation_prunable(
-            {
-                "min_id": ent[0],
-                "max_id": ent[1],
-                "filter": {
-                    "k": index_fs.ID_FILTER_K,
-                    "bits": index_fs.ID_FILTER_WORDS * 64,
-                    "words": ent[2],
-                },
-            },
-            None,
-            probe_pos,
-        )
-
-    candidates = [rel for rel in files if not _skippable(rel)]
-    if not candidates:
-        return spark.createDataFrame([], schema)
-    return (
-        spark.read.schema(schema)
-        .parquet(*_abs_files(path, candidates))
-        .filter(F.col(stats_col).isin(keys))
-    )
+    bounds = {"min_id": min(keys), "max_id": max(keys)}
+    stats = m.get("stats", {})
+    candidates = [
+        rel for rel in files
+        if not stats_prunable(stats.get(rel), bounds, probe_pos)
+    ]
+    return store.read(m, candidates).filter(F.col(stats_col).isin(keys))
 
 
 def trim_batch_ledger(
@@ -461,7 +417,7 @@ def trim_batch_ledger(
     the anti-join backstop) but DOUBLE-COUNTS a non-idempotent SUM
     fold (the histogram store) — size ``keep`` accordingly there.
     One manifest-only commit, everything else carried forward."""
-    return index_fs.trim_batches(spark, path, keep)
+    return TableStore(spark, path).trim(keep)
 
 
 def table_history(spark: SparkSession, path: str) -> list[dict]:
@@ -478,10 +434,7 @@ def table_history(spark: SparkSession, path: str) -> list[dict]:
 
 def table_schema(spark: SparkSession, path: str):
     """The committed schema of the table at ``path``."""
-    m = index_fs.read_manifest(spark, path)
-    if m is None:
-        raise ValueError(f"no committed table at {path}")
-    return _schema_of(m)
+    return _schema_of(TableStore(spark, path).committed())
 
 
 def merge_into_parquet(
@@ -511,9 +464,8 @@ def merge_into_parquet(
     search by the manifest's per-file [min, max] statistics without
     being read at all (see :func:`create_parquet_table`).
     """
-    m = index_fs.read_manifest(spark, path)
-    if m is None:
-        raise ValueError(f"no committed table at {path}")
+    store = TableStore(spark, path)
+    m = store.committed()
     if batch_id is not None and batch_id in m.get("batches", []):
         return {
             "inserted": 0,
@@ -525,7 +477,7 @@ def merge_into_parquet(
             "total_files": len(m.get("files", [])),
             "skipped": True,
         }
-    _sweep_uncommitted_gens(spark, path)
+    store.sweep()
 
     is_del = (
         F.coalesce(F.col(delete_col).cast("boolean"), F.lit(False))
@@ -597,10 +549,10 @@ def merge_into_parquet(
             extra = [p0.alias("__p0"), p1.alias("__p1")]
         key_rows = (
             per_key.select(*key_cols, "__c", "__d", *extra)
-            .limit(_KEYS_CAP + 1)
+            .limit(index_fs.PROBE_CAP + 1)
             .collect()
         )
-        capped = len(key_rows) > _KEYS_CAP
+        capped = len(key_rows) > index_fs.PROBE_CAP
         if capped:
             dup = (
                 per_key.filter(F.col("__c") > 1).limit(1).collect()
@@ -636,18 +588,15 @@ def merge_into_parquet(
                     F.min(stats_col).alias("lo"),
                     F.max(stats_col).alias("hi"),
                 ).collect()[0]
-                bounds = {"lo": b["lo"], "hi": b["hi"]}
+                lo, hi = b["lo"], b["hi"]
             else:
                 ks = [
                     r[stats_col]
                     for r in key_rows
                     if r[stats_col] is not None
                 ]
-                bounds = {
-                    "lo": min(ks) if ks else None,
-                    "hi": max(ks) if ks else None,
-                }
-            if bounds["lo"] is None:
+                lo, hi = (min(ks), max(ks)) if ks else (None, None)
+            if lo is None:
                 candidates = []
             else:
                 # content pruning: per-file key Bloom filters (third
@@ -668,46 +617,13 @@ def merge_into_parquet(
                         if r[stats_col] is not None
                     ]
                 )
-
-                def _skippable(rel: str) -> bool:
-                    ent = stats.get(rel)
-                    if not ent or ent[0] is None:
-                        return False
-                    if (ent[1] < bounds["lo"]
-                            or ent[0] > bounds["hi"]):
-                        return True
-                    if len(ent) < 3 or probe_pos is None:
-                        return False
-                    return index_fs.generation_prunable(
-                        {
-                            "min_id": ent[0],
-                            "max_id": ent[1],
-                            "filter": {
-                                "k": index_fs.ID_FILTER_K,
-                                "bits": index_fs.ID_FILTER_WORDS * 64,
-                                "words": ent[2],
-                            },
-                        },
-                        None,
-                        probe_pos,
-                    )
-
+                bounds = {"min_id": lo, "max_id": hi}
                 candidates = [
-                    rel for rel in files if not _skippable(rel)
+                    rel for rel in files
+                    if not stats_prunable(stats.get(rel), bounds, probe_pos)
                 ]
             stats_pruned = len(files) - len(candidates)
 
-        # ONE decide job (r12, guide §2.4): the matched-file search
-        # and the insert/update/delete counts both derive from the
-        # same key-level src ⋈ target relation, so compute them in a
-        # single full-outer join + aggregate instead of a semi-join
-        # collect followed by a second flagged aggregate over a
-        # re-scan of the touched files' key column. src rows carry a
-        # non-null __is_del (coalesced at entry), target rows a
-        # non-null _metadata.file_path — null-ness of the opposite
-        # side classifies every row exactly as the two former jobs
-        # did; the touched-file set rides the same aggregate as a
-        # file-count-bounded collect_set.
         # SMALL-BATCH decide fast path (r12 session 3, guide §1.2 +
         # §2.4): with every source key already collected (single key
         # column, int/str keys, under the inline cap), the matched-row
@@ -727,7 +643,7 @@ def merge_into_parquet(
         if (
             not capped
             and len(key_cols) == 1
-            and len(key_rows) <= _INLINE_CAP
+            and len(key_rows) <= index_fs.SMALL_BATCH_CAP
             and all(
                 r[kc] is None
                 or (
@@ -742,9 +658,7 @@ def merge_into_parquet(
             ]
         touched_rels: list[str] = []
         if candidates and inline_keys is not None:
-            tgt = spark.read.schema(_schema_of(m)).parquet(
-                *_abs_files(path, candidates)
-            )
+            tgt = store.read(m, candidates)
             hit_rows = (
                 tgt.select(
                     F.col(kc).alias("__k"),
@@ -793,9 +707,7 @@ def merge_into_parquet(
             # of the opposite side classifies every row; the
             # touched-file set rides the same aggregate as a
             # file-count-bounded collect_set.
-            tgt = spark.read.schema(_schema_of(m)).parquet(
-                *_abs_files(path, candidates)
-            )
+            tgt = store.read(m, candidates)
             j = tgt.select(
                 *key_cols, F.col("_metadata.file_path").alias("__file")
             ).join(
@@ -854,9 +766,7 @@ def merge_into_parquet(
         untouched = [rel for rel in files if rel not in touched]
 
         if touched_rels:
-            touched_df = spark.read.schema(_schema_of(m)).parquet(
-                *_abs_files(path, touched_rels)
-            )
+            touched_df = store.read(m, touched_rels)
             if inline_keys is not None:
                 # exact anti-join semantics as a FILTER: null target
                 # keys never match (kept, as the anti-join kept them);
@@ -886,32 +796,22 @@ def merge_into_parquet(
             or (counts_row["updated"] or 0)
             else new_data.limit(1).count()
         )
-        new_files: list[str] = []
-        gen = None
-        if n_new:
-            gen = index_fs.fresh_gen(spark, [_data_dir(path)], None)
-            _right_sized(new_data).write.mode("overwrite").parquet(
-                f"{_data_dir(path)}/{gen}"
-            )
-            new_files = _list_gen_files(spark, path, gen)
-
-        manifest = {
-            "files": untouched + new_files,
+        new_files, new_stats = (
+            store.write_files(m, _right_sized(new_data))
+            if n_new
+            else ([], {})
+        )
+        # THE commit — everything above is invisible until this line
+        store.commit(m, {
+            **store.files_update(
+                m,
+                untouched + new_files,
+                {**{r: stats[r] for r in untouched if r in stats},
+                 **new_stats},
+            ),
             "batches": m.get("batches", [])
             + ([batch_id] if batch_id else []),
-            "schema": m["schema"],
-        }
-        if stats_col is not None:
-            manifest["stats_col"] = stats_col
-            manifest["stats"] = {
-                **{r: stats[r] for r in untouched if r in stats},
-                **_file_stats(
-                    spark, path, new_files, stats_col,
-                    schema=_schema_of(m),
-                ),
-            }
-        # THE commit — everything above is invisible until this line
-        index_fs.commit_manifest(spark, path, manifest, m["_seq"])
+        })
         return {
             "inserted": int(counts_row["inserted"] or 0),
             "updated": int(counts_row["updated"] or 0),
@@ -924,6 +824,20 @@ def merge_into_parquet(
         }
     finally:
         src.unpersist()
+
+
+_NAN = object()
+
+
+def _exact(v):
+    """``v`` normalised so that Python ``==`` is Spark's ``<=>``:
+    NaN equals NaN, through arrays and structs (``Row`` is a tuple).
+    Nulls (``None``) and -0.0 == 0.0 already compare so."""
+    if isinstance(v, float):
+        return _NAN if v != v else v
+    if isinstance(v, (list, tuple)):
+        return tuple(_exact(x) for x in v)
+    return v
 
 
 def table_changes(
@@ -968,17 +882,15 @@ def table_changes_classified(
     caller counts).
 
     WINDOW fast path (r12 session 3): when both manifest-diff sides
-    fit a bounded collect (single int/str key, no null keys), each
-    side's ``(key, h1, h2)`` rows — two independently-seeded
-    xxhash64 row digests with per-column null indicators, 128
-    collision bits, the :func:`~sqltask_spark.data.
-    content_fingerprint` trust class — are pulled driver-side and
-    classified there; the returned relation is then four FILTERED
-    reads of the window files (no exchange at all) instead of the
-    full-outer join + 4-way union, which cost 3-4 AQE stage jobs per
-    CDC epoch. Row-identical output (hash equality stands in for the
-    all-columns ``<=>`` conjunction; the null indicators break
-    xxhash64's null-skip symmetry so column shifts cannot collide).
+    fit a bounded collect (single int/str key, no null keys, at most
+    :data:`~.index_fs.SMALL_BATCH_CAP` rows a side), each side's
+    ``(key, *values)`` rows are pulled driver-side and classified
+    there by EXACT value comparison with the all-columns ``<=>``
+    semantics (nulls equal, NaN equals NaN, -0.0 equals 0.0, nested
+    through arrays and structs); the returned relation is then
+    four FILTERED reads of the window files (no exchange at all)
+    instead of the full-outer join + 4-way union, which cost 3-4 AQE
+    stage jobs per CDC epoch. Row-identical output.
 
     Precondition: ``key_cols`` uniquely identify rows in every
     compared version. MERGE enforces this for every merged source,
@@ -987,82 +899,43 @@ def table_changes_classified(
     duplicate keys outside that path would make the pre/post
     full-outer join explode rows and misclassify changes.
     """
-    m_from = index_fs.read_manifest_at(spark, path, from_seq)
-    if m_from is None:
-        raise ValueError(
-            f"version {from_seq} of {path} does not exist (vacuumed,"
-            f" torn, or never committed); available:"
-            f" {index_fs.list_manifest_seqs(spark, path)}"
-        )
-    if to_seq is None:
-        m_to = index_fs.read_manifest(spark, path)
-        if m_to is None:
-            raise ValueError(f"no committed table at {path}")
-    else:
-        m_to = index_fs.read_manifest_at(spark, path, to_seq)
-        if m_to is None:
-            raise ValueError(
-                f"version {to_seq} of {path} does not exist; available:"
-                f" {index_fs.list_manifest_seqs(spark, path)}"
-            )
-    schema = _schema_of(m_to)
-    cols = [f.name for f in schema.fields]
+    store = TableStore(spark, path)
+    m_from = store.committed(from_seq)
+    m_to = store.committed(to_seq)
+    cols = [f.name for f in _schema_of(m_to).fields]
     val_cols = [c for c in cols if c not in key_cols]
     removed = sorted(set(m_from.get("files", [])) - set(m_to.get("files", [])))
     added = sorted(set(m_to.get("files", [])) - set(m_from.get("files", [])))
 
-    def _read(rels):
-        if not rels:
-            return spark.createDataFrame([], schema)
-        return spark.read.schema(schema).parquet(*_abs_files(path, rels))
-
     # ---- WINDOW fast path: bounded collect + driver classification
     kc = key_cols[0]
-
-    def _digest(seed: int):
-        if not val_cols:
-            return F.lit(seed).cast("long")
-        parts = []
-        for c in val_cols:
-            parts.append(F.isnull(F.col(c)))
-            parts.append(F.col(c))
-        return F.xxhash64(F.lit(seed), *parts)
+    cap = index_fs.SMALL_BATCH_CAP
 
     def _side(rels):
         if not rels:
             return []
         rows = (
-            _read(rels)
-            .select(
-                F.col(kc).alias("_k"),
-                _digest(11).alias("_h1"),
-                _digest(23).alias("_h2"),
-            )
-            .limit(_CHANGES_CAP + 1)
+            store.read(m_to, rels)
+            .select(kc, *val_cols)
+            .limit(cap + 1)
             .collect()
         )
-        if len(rows) > _CHANGES_CAP:
-            return None
-        return rows
+        return None if len(rows) > cap else rows
 
     if len(key_cols) == 1:
         pre_rows = _side(removed)
         post_rows = _side(added) if pre_rows is not None else None
         if pre_rows is not None and post_rows is not None:
             ok = all(
-                r["_k"] is not None
-                and isinstance(r["_k"], (int, str))
-                and not isinstance(r["_k"], bool)
+                r[0] is not None
+                and isinstance(r[0], (int, str))
+                and not isinstance(r[0], bool)
                 for rows in (pre_rows, post_rows)
                 for r in rows
             )
             if ok:
-                pre_map = {
-                    r["_k"]: (r["_h1"], r["_h2"]) for r in pre_rows
-                }
-                post_map = {
-                    r["_k"]: (r["_h1"], r["_h2"]) for r in post_rows
-                }
+                pre_map = {r[0]: _exact(r[1:]) for r in pre_rows}
+                post_map = {r[0]: _exact(r[1:]) for r in post_rows}
                 ins_keys = sorted(
                     k for k in post_map if k not in pre_map
                 )
@@ -1074,8 +947,8 @@ def table_changes_classified(
                     for k in pre_map
                     if k in post_map and pre_map[k] != post_map[k]
                 )
-                pre_df = _read(removed)
-                post_df = _read(added)
+                pre_df = store.read(m_to, removed)
+                post_df = store.read(m_to, added)
 
                 def _arm(df, keys, tag):
                     return df.filter(
@@ -1104,12 +977,12 @@ def table_changes_classified(
                 }
                 return out, by_type
 
-    pre = _read(removed).select(
+    pre = store.read(m_to, removed).select(
         *key_cols,
         *[F.col(c).alias(f"__pre_{c}") for c in val_cols],
         F.lit(1).alias("__in_pre"),
     )
-    post = _read(added).select(
+    post = store.read(m_to, added).select(
         *key_cols,
         *[F.col(c).alias(f"__post_{c}") for c in val_cols],
         F.lit(1).alias("__in_post"),
@@ -1162,34 +1035,7 @@ def compact_parquet_table(spark: SparkSession, path: str) -> int:
     read-split-sized files (the small-files compaction merges
     accumulate); row-identical, committed atomically. Returns the new
     file count."""
-    m = index_fs.read_manifest(spark, path)
-    if m is None:
-        raise ValueError(f"no committed table at {path}")
-    _sweep_uncommitted_gens(spark, path)
-    files = m.get("files", [])
-    gen = index_fs.fresh_gen(spark, [_data_dir(path)], None)
-    if files:
-        _right_sized(
-            spark.read.schema(_schema_of(m)).parquet(
-                *_abs_files(path, files)
-            )
-        ).write.mode("overwrite").parquet(f"{_data_dir(path)}/{gen}")
-        new_files = _list_gen_files(spark, path, gen)
-    else:
-        new_files = []
-    manifest = {
-        "files": new_files,
-        "batches": m.get("batches", []),
-        "schema": m["schema"],
-    }
-    if m.get("stats_col") is not None:
-        manifest["stats_col"] = m["stats_col"]
-        manifest["stats"] = _file_stats(
-            spark, path, new_files, m["stats_col"],
-            schema=_schema_of(m),
-        )
-    index_fs.commit_manifest(spark, path, manifest, m["_seq"])
-    return len(new_files)
+    return len(TableStore(spark, path).compact()["files"])
 
 
 def add_table_column(
@@ -1214,9 +1060,8 @@ def add_table_column(
     """
     from pyspark.sql import types as T
 
-    m = index_fs.read_manifest(spark, path)
-    if m is None:
-        raise ValueError(f"no committed table at {path}")
+    store = TableStore(spark, path)
+    m = store.committed()
     schema = _schema_of(m)
     if name in [f.name for f in schema.fields]:
         raise ValueError(f"column {name!r} already exists at {path}")
@@ -1225,13 +1070,7 @@ def add_table_column(
         list(schema.fields)
         + [T.StructField(added.name, added.dataType, True)]
     )
-    index_fs.commit_manifest(
-        spark,
-        path,
-        {**{k: v for k, v in m.items() if k != "_seq"},
-         "schema": new_schema.json()},
-        m["_seq"],
-    )
+    store.commit(m, {"schema": new_schema.json()})
 
 
 def vacuum_parquet_table(
@@ -1245,23 +1084,4 @@ def vacuum_parquet_table(
     formats define it). ``min_keep_seq`` floors retention so
     incremental consumers (CDC sync markers) keep their resume
     version readable — see :func:`index_fs.drop_manifests`."""
-    drop = index_fs.drop_manifests(
-        spark, path, keep_versions, min_keep_seq=min_keep_seq
-    )
-    live: set[str] = set()
-    for m in index_fs.read_all_manifests(spark, path):
-        live |= set(m.get("files", []))
-    removed = 0
-    for gen in index_fs.list_names(spark, _data_dir(path)):
-        gen_dir = f"{_data_dir(path)}/{gen}"
-        kept_any = False
-        for n in index_fs.list_names(spark, gen_dir):
-            rel = f"{gen}/{n}"
-            if n.endswith(".parquet") and rel not in live:
-                index_fs.delete_path(spark, f"{gen_dir}/{n}")
-                removed += 1
-            elif n.endswith(".parquet"):
-                kept_any = True
-        if not kept_any:
-            index_fs.delete_path(spark, gen_dir)
-    return {"dropped_versions": drop, "removed_files": removed}
+    return TableStore(spark, path).vacuum(keep_versions, min_keep_seq)

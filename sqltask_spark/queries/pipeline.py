@@ -3219,6 +3219,7 @@ def table_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sqltask_spark.operators.merge import (
         create_parquet_table,
         read_parquet_table_keys,
+        stats_prunable,
     )
 
     # FIXED doc_id slice (the corpus_merge_upsert convention): the
@@ -3246,19 +3247,7 @@ def table_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         pruned = sum(
             1
             for rel in m["files"]
-            if index_fs.generation_prunable(
-                {
-                    "min_id": m["stats"][rel][0],
-                    "max_id": m["stats"][rel][1],
-                    "filter": {
-                        "k": index_fs.ID_FILTER_K,
-                        "bits": index_fs.ID_FILTER_WORDS * 64,
-                        "words": m["stats"][rel][2],
-                    },
-                },
-                None,
-                probe_pos,
-            )
+            if stats_prunable(m["stats"].get(rel), None, probe_pos)
         )
         if pruned == 0:
             raise AssertionError(

@@ -4,10 +4,12 @@
   to 0 makes every bounded id collect decline, so every mutation runs
   its join arm (the fast ≡ join suite relies on this).
 - Crash atomicity at EVERY write step, for both index kinds and every
-  mutation: a failure injected at each parquet write the mutation
+  mutation, and for the MERGE tables' upsert, delete-only merge and
+  compaction: a failure injected at each parquet write the mutation
   makes (through the store's one write path) leaves the committed
   manifest and a probe exactly at the pre-mutation state, and the
   re-run heals to the result and state of an uninterrupted run.
+- Manifest keys a mutation does not own survive every table mutation.
 """
 
 from __future__ import annotations
@@ -19,6 +21,7 @@ import pytest
 from sqltask_spark.operators import ann_index as ai
 from sqltask_spark.operators import dedup_index as di
 from sqltask_spark.operators import index_fs
+from sqltask_spark.operators import merge as mg
 
 
 def _text(i):
@@ -152,6 +155,52 @@ def _state(store):
     )
 
 
+# The table's base state: a 3-file seed with key stats, then one merge
+# (a second generation).
+def _table_base(spark, path):
+    mg.create_parquet_table(
+        spark.createDataFrame(
+            [(i, f"v{i}") for i in range(30)], "k long, v string"
+        ).repartition(3, "k"),
+        path, stats_col="k",
+    )
+    mg.merge_into_parquet(
+        spark, path, spark.createDataFrame([(40, "v40")], "k long, v string"),
+        ["k"], batch_id="b0",
+    )
+
+
+def _table_rows(spark, path):
+    return sorted(tuple(r) for r in mg.read_parquet_table(spark, path).collect())
+
+
+def _table_state(spark, path):
+    """(rows, file count) of the committed table."""
+    return (
+        _table_rows(spark, path),
+        len(index_fs.read_manifest(spark, path)["files"]),
+    )
+
+
+def _table_merge(spark, path, rows):
+    src = spark.createDataFrame(rows, "k long, v string, d boolean")
+    return mg.merge_into_parquet(
+        spark, path, src, ["k"], batch_id="b1", delete_col="d"
+    )
+
+
+TABLE_MUTATIONS = {
+    "upsert": lambda s, p: _table_merge(
+        s, p, [(3, "new3", False), (100, "v100", False)]
+    ),
+    # deletes two keys; their files keep survivors that get rewritten
+    "delete": lambda s, p: _table_merge(
+        s, p, [(5, None, True), (6, None, True)]
+    ),
+    "compact": lambda s, p: mg.compact_parquet_table(s, p),
+}
+
+
 KINDS = {
     "minhash": (_mh_base, _mh_probe, di.MinHashStore, {
         "append": lambda s, p: di.append_to_minhash_index(
@@ -201,8 +250,8 @@ def _expected(mutation, manifest, state):
 
 @pytest.fixture(scope="module")
 def bases(spark, tmp_path_factory):
-    """Per kind: (base index path, its committed manifest, its probe,
-    its state) — built once, copied per test."""
+    """Per kind: (base path, its committed manifest, its probe, its
+    state) — built once, copied per test."""
     root = tmp_path_factory.mktemp("genstore")
     out = {}
     for kind, (build, probe, store, _) in KINDS.items():
@@ -210,6 +259,10 @@ def bases(spark, tmp_path_factory):
         build(spark, path)
         out[kind] = (path, index_fs.read_manifest(spark, path),
                      probe(spark, path), _state(store(spark, path)))
+    path = str(root / "table")
+    _table_base(spark, path)
+    out["table"] = (path, index_fs.read_manifest(spark, path),
+                    _table_rows(spark, path), _table_state(spark, path))
     return out
 
 
@@ -217,14 +270,30 @@ class _Injected(RuntimeError):
     pass
 
 
-@pytest.mark.parametrize("mutation", ["append", "delete", "unblock", "compact"])
-@pytest.mark.parametrize("kind", ["minhash", "ivf"])
+CRASH_CASES = [
+    (kind, mutation)
+    for kind in ("minhash", "ivf")
+    for mutation in ("append", "delete", "unblock", "compact")
+] + [("table", mutation) for mutation in TABLE_MUTATIONS]
+
+
+@pytest.mark.parametrize(
+    "kind,mutation", CRASH_CASES, ids=[f"{k}-{m}" for k, m in CRASH_CASES]
+)
 def test_crash_at_every_write_keeps_committed_state(
     spark, bases, tmp_path, monkeypatch, kind, mutation
 ):
     base, pre_manifest, pre_probe, pre_state = bases[kind]
-    _, probe, store, mutations = KINDS[kind]
-    mutate = mutations[mutation]
+    if kind == "table":
+        probe, state = _table_rows, _table_state
+        mutate = TABLE_MUTATIONS[mutation]
+    else:
+        _, probe, store, mutations = KINDS[kind]
+        mutate = mutations[mutation]
+
+        def state(s, p):
+            return _state(store(s, p))
+
     path = str(tmp_path / kind)
     shutil.copytree(base, path)
 
@@ -258,6 +327,42 @@ def test_crash_at_every_write_keeps_committed_state(
     # result and state
     assert crash_at == len(writes) + 1 > 1
     assert index_fs.read_manifest(spark, path)["_seq"] == pre_manifest["_seq"] + 1
-    assert (result, _state(store(spark, path))) == _expected(
-        mutation, pre_manifest, pre_state
+    if kind == "table":
+        clean = str(tmp_path / "uninterrupted")
+        shutil.copytree(base, clean)
+        expected = (mutate(spark, clean), state(spark, clean))
+        # the swept debris left exactly the committed generations
+        assert set(index_fs.list_names(spark, f"{path}/data")) == {
+            rel.split("/", 1)[0]
+            for m in index_fs.read_all_manifests(spark, path)
+            for rel in m["files"]
+        }
+    else:
+        expected = _expected(mutation, pre_manifest, pre_state)
+    assert (result, state(spark, path)) == expected
+
+
+def test_table_mutations_carry_unknown_manifest_keys(spark, tmp_path):
+    """A key another subsystem commits on a table (a sync marker,
+    future metadata) survives a merge, a compaction, an add-column and
+    a ledger trim."""
+    path = str(tmp_path / "t")
+    _table_base(spark, path)
+    m = index_fs.read_manifest(spark, path)
+    extra = {"synced_by": {"consumer": 7}}
+    index_fs.commit_manifest(
+        spark, path, {**{k: v for k, v in m.items() if k != "_seq"}, **extra},
+        m["_seq"],
     )
+    mutations = [
+        lambda: TABLE_MUTATIONS["upsert"](spark, path),
+        lambda: mg.compact_parquet_table(spark, path),
+        lambda: mg.add_table_column(spark, path, "tag", "string"),
+        lambda: mg.trim_batch_ledger(spark, path, 1),
+    ]
+    for mutate in mutations:
+        seq = index_fs.read_manifest(spark, path)["_seq"]
+        mutate()
+        m = index_fs.read_manifest(spark, path)
+        assert m["_seq"] == seq + 1  # every step committed
+        assert m["synced_by"] == extra["synced_by"]

@@ -73,7 +73,7 @@ def test_merge_decide_fast_matches_join(spark, tmpdir, monkeypatch):
     _mk_table(spark, pa)
     _mk_table(spark, pb)
     res_fast = _merge_batch(spark, pa, delete_keys=(5, 7, 999))
-    monkeypatch.setattr(mg, "_INLINE_CAP", 0)
+    monkeypatch.setattr(index_fs, "SMALL_BATCH_CAP", 0)
     res_join = _merge_batch(spark, pb, delete_keys=(5, 7, 999))
     assert res_fast == res_join
     assert _rows(mg.read_parquet_table(spark, pa)) == _rows(
@@ -91,7 +91,7 @@ def test_table_changes_fast_matches_join(spark, tmpdir, monkeypatch):
     )
     assert by_type is not None  # the window fast path fired
     rows_fast = _rows(df_fast)
-    monkeypatch.setattr(mg, "_CHANGES_CAP", 0)
+    monkeypatch.setattr(index_fs, "SMALL_BATCH_CAP", 0)
     df_join, by_join = mg.table_changes_classified(
         spark, path, ["k"], v0
     )
@@ -270,3 +270,48 @@ def test_ivf_mutations_fast_match_join(spark, tmpdir, monkeypatch):
     assert outcomes[0][0] == 1
     assert outcomes[0][1] == 1
     assert outcomes[0][2] == 1
+
+
+def test_table_changes_exact_float_compare_matches_join(
+    spark, tmpdir, monkeypatch
+):
+    """The window arm compares value columns exactly with ``<=>``
+    semantics, like the join arm: NaN→NaN, 0.0→-0.0 and null→null are
+    unchanged, 1.0→NaN is an update — in a double column and inside an
+    array<double>."""
+    nan = float("nan")
+    schema = "k long, d double, a array<double>"
+    path = f"{tmpdir}/f"
+    mg.create_parquet_table(
+        spark.createDataFrame(
+            [(1, nan, [nan]), (2, 0.0, [0.0]), (3, None, None),
+             (4, 1.0, [1.0]), (5, 2.0, [2.0])],
+            schema,
+        ).coalesce(1),
+        path, stats_col="k",
+    )
+    v0 = index_fs.read_manifest(spark, path)["_seq"]
+    mg.merge_into_parquet(
+        spark, path,
+        spark.createDataFrame(
+            [(1, nan, [nan]), (2, -0.0, [-0.0]), (3, None, None),
+             (4, nan, [1.0]), (5, 2.0, [nan])],
+            schema,
+        ),
+        ["k"],
+    )
+
+    def feed():
+        df, by_type = mg.table_changes_classified(spark, path, ["k"], v0)
+        rows = {(r["_change_type"], r["k"]) for r in df.collect()}
+        return rows, by_type
+
+    fast, by_type = feed()
+    assert by_type is not None  # the window arm ran
+    monkeypatch.setattr(index_fs, "SMALL_BATCH_CAP", 0)
+    join, by_join = feed()
+    assert by_join is None
+    assert fast == join == {
+        (t, k) for k in (4, 5)
+        for t in ("update_preimage", "update_postimage")
+    }
