@@ -277,10 +277,8 @@ def build_ivf_index(
     cents = _spherical_kmeans(sample, n_cells, 8)
     spark = corpus.sparkSession
     store = IvfStore(spark, path)
-    prev = index_fs.read_manifest(spark, path)
-    gen = index_fs.fresh_gen(
-        spark, [f"{path}/vectors", f"{path}/quantizer"], prev
-    )
+    prev = store.head()
+    gen = store._allocator(prev or {})()
     codebooks = cb_df = None
     if m is not None:
         norms = np.linalg.norm(sample, axis=1)

@@ -228,10 +228,8 @@ def build_minhash_index(
     assert num_perm % bands == 0, "bands must divide num_perm"
     spark = corpus.sparkSession
     store = MinHashStore(spark, path)
-    prev = index_fs.read_manifest(spark, path)
-    gen = index_fs.fresh_gen(
-        spark, [f"{path}/data", f"{path}/sizes"], prev
-    )
+    prev = store.head()
+    gen = store._allocator(prev or {})()
     shingled = shingled_docs(corpus, id_col, text_col, shingle_n).persist()
     try:
         wide = _signatures_wide(shingled, num_perm, seed)

@@ -190,27 +190,6 @@ def next_gen(manifest: dict | None) -> str:
     return "g%06d" % (1 + max(int(g[1:]) for g in gens))
 
 
-def fresh_gen(
-    spark: SparkSession, parents: list[str], manifest: dict | None
-) -> str:
-    """Generation name unused by the committed manifest AND by any
-    directory on disk under ``parents`` — so an atomic REBUILD of an
-    existing index writes only new files (a committed reader keeps
-    scanning the old generation untouched until the new manifest
-    lands) instead of overwriting in place."""
-    import re
-
-    nums = [-1]
-    for g in (manifest or {}).get("generations", []):
-        nums.append(int(g[1:]))
-    for parent in parents:
-        for n in list_names(spark, parent):
-            mm = re.search(r"g(\d{6})$", n)
-            if mm:
-                nums.append(int(mm.group(1)))
-    return "g%06d" % (1 + max(nums))
-
-
 def drop_manifests(
     spark: SparkSession, path: str, keep_versions: int,
     min_keep_seq: int | None = None,
@@ -787,6 +766,11 @@ class GenerationStore:
             if not path_exists(self.spark, f"{self.path}/{r}")
         ]
 
+    def head(self) -> dict | None:
+        """The newest committed manifest, or ``None`` before the first
+        commit — the base a build commits against."""
+        return read_manifest(self.spark, self.path)
+
     def committed(
         self, as_of: int | None = None, as_of_ts: int | None = None
     ) -> dict:
@@ -802,7 +786,7 @@ class GenerationStore:
         if as_of_ts is not None:
             as_of = seq_at_timestamp(self.spark, self.path, as_of_ts)
         if as_of is None:
-            m = read_manifest(self.spark, self.path)
+            m = self.head()
             if m is None:
                 raise ValueError(f"no committed manifest under {self.path}")
             return m
@@ -1034,7 +1018,7 @@ class GenerationStore:
     # -- delete ------------------------------------------------------
 
     def _add_tombstones(self, m: dict, target, n: int) -> int:
-        gen = fresh_gen(self.spark, [f"{self.path}/tombstones"], None)
+        gen = self._allocator(m)()
         self.write(shard_for_write(target, n), f"tombstones/{gen}")
         # backfill the tombstone reader schema for pre-schema
         # manifests (carried forward verbatim otherwise)
@@ -1155,8 +1139,10 @@ class GenerationStore:
 
     def _allocator(self, m: dict):
         """Fresh sequential generation names past everything committed
-        OR on disk under any of the store's directories (the
-        :func:`fresh_gen` rule, extended to a batch of allocations)."""
+        OR on disk under any of the store's directories — so an atomic
+        rebuild or rewrite writes only new directories (a committed
+        reader keeps scanning the old ones untouched until the new
+        manifest lands) instead of overwriting in place."""
         nums = [-1] + [int(g[1:]) for g in m.get("generations", [])]
         for d in self.dirs():
             for name in list_names(self.spark, f"{self.path}/{d}"):

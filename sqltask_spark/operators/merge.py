@@ -29,7 +29,11 @@ primitive the way Delta/Iceberg/Hudi do:
   as_of=seq)`` — time travel) until :func:`vacuum_parquet_table`
   reclaims it;
 - manifest keys this module does not own (sync markers, future
-  metadata) carry forward through every mutation.
+  metadata) carry forward through every mutation;
+- a table whose every update recomputes its whole state (the sketch
+  stores) commits that state as one snapshot write under the same
+  ledger and manifest protocol (:func:`fold_parquet_table`), with no
+  keyed MERGE of the state into itself.
 
 Scale notes: the only driver-side materializations are the
 touched-file list (bounded by the table's file count, the same thing
@@ -55,6 +59,7 @@ and :data:`~.index_fs.PROBE_CAP`, read at call time.
 from __future__ import annotations
 
 import json
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -86,7 +91,8 @@ def _right_sized(df: DataFrame) -> DataFrame:
     materialized persisted relation. The narrowing is a ``coalesce``
     (no shuffle, no extra job); an unknown estimate (the plan's
     default size, e.g. an unmaterialized RDD-backed relation) leaves
-    ``df`` as it is."""
+    ``df`` as it is, and so does one scaled down from it (an aggregate
+    over such a relation) past any real partition count."""
     session = df.sparkSession._jsparkSession
     conf = session.sessionState().conf()
     size = int(
@@ -104,7 +110,8 @@ def _right_sized(df: DataFrame) -> DataFrame:
         conf.filesMaxPartitionBytes(),
         max(conf.filesOpenCostInBytes(), size // slots),
     )
-    return df.coalesce(max(1, -(-size // split)))
+    parts = -(-size // split)
+    return df if parts >= 1 << 31 else df.coalesce(max(1, parts))
 
 
 def _schema_of(manifest: dict):
@@ -131,6 +138,38 @@ def _nullable_norm(dt):
             _nullable_norm(dt.keyType), _nullable_norm(dt.valueType), True
         )
     return dt
+
+
+def _check_columns(m: dict, fields: list, what: str) -> None:
+    """Raise unless ``fields`` are the columns of the table whose
+    manifest is ``m``, with its types — zero jobs. Name match is not
+    enough: a mistyped column (int where the table holds long/string)
+    would survive unionByName widening and publish a generation whose
+    parquet physical types conflict with the manifest schema —
+    committed, then unreadable for every reader. So fail loudly
+    BEFORE any work (nullability is a property of the data, not the
+    type — ignored)."""
+    want = {f.name: _nullable_norm(f.dataType) for f in _schema_of(m).fields}
+    have = [f.name for f in fields]
+    if sorted(have) != sorted(want):
+        raise ValueError(
+            f"{what} columns {sorted(have)} do not match the table"
+            f" schema {sorted(want)} — project it onto the table's"
+            f" columns first"
+        )
+    bad = [
+        (f.name, f.dataType.simpleString(), want[f.name].simpleString())
+        for f in fields
+        if _nullable_norm(f.dataType) != want[f.name]
+    ]
+    if bad:
+        raise ValueError(
+            f"{what} column types do not match the table schema:"
+            + "; ".join(
+                f" {n} is {got}, table has {exp}" for n, got, exp in bad
+            )
+            + " — cast it first"
+        )
 
 
 def stats_prunable(ent, bounds: dict | None, probe_pos) -> bool:
@@ -487,39 +526,10 @@ def merge_into_parquet(
     src = source.withColumn("__is_del", is_del)
     if delete_col is not None:
         src = src.drop(delete_col)
-    want = [f.name for f in _schema_of(m).fields]
-    have = [c for c in src.columns if c != "__is_del"]
-    if sorted(have) != sorted(want):
-        raise ValueError(
-            f"MERGE source columns {sorted(have)} do not match the"
-            f" table schema {sorted(want)} — project the source onto"
-            f" the table's columns first (updates replace whole rows)"
-        )
-    # Name match is not enough: a mistyped source column (int where
-    # the table holds long/string) would survive unionByName widening
-    # and publish a generation whose parquet physical types conflict
-    # with the manifest schema — committed, then unreadable for every
-    # reader. Fail loudly BEFORE any work instead (nullability is a
-    # property of the data, not the type — ignore it).
-    want_types = {
-        f.name: _nullable_norm(f.dataType)
-        for f in _schema_of(m).fields
-    }
-    bad = [
-        (f.name, f.dataType.simpleString(),
-         want_types[f.name].simpleString())
-        for f in src.schema.fields
-        if f.name != "__is_del"
-        and _nullable_norm(f.dataType) != want_types[f.name]
-    ]
-    if bad:
-        raise ValueError(
-            "MERGE source column types do not match the table schema:"
-            + "; ".join(
-                f" {n} is {got}, table has {exp}" for n, got, exp in bad
-            )
-            + " — cast the source before merging"
-        )
+    _check_columns(
+        m, [f for f in src.schema.fields if f.name != "__is_del"],
+        "MERGE source",
+    )
     src = src.persist()
     try:
         files = m.get("files", [])
@@ -824,6 +834,53 @@ def merge_into_parquet(
         }
     finally:
         src.unpersist()
+
+
+def fold_parquet_table(
+    spark: SparkSession,
+    path: str,
+    fold: Callable[[DataFrame], DataFrame],
+    batch_id: str | None = None,
+) -> dict:
+    """Replace the state of the table at ``path`` with ``fold(rows)``,
+    ``rows`` being its committed rows: the snapshot commit of a table
+    whose every update recomputes the whole state (the sketch stores'
+    lattice folds, :mod:`.sketch_store`). ``fold`` returns the
+    COMPLETE next state in the table's columns — with a declared
+    ``stats_col``, one row per key. Nothing is matched, counted or
+    carried over, so an update costs the fold's own plan plus one
+    write, not a keyed MERGE of the full state into itself.
+
+    The ledger check, the read, the write and the commit all run
+    against ONE manifest read: a writer that commits in between takes
+    the next manifest slot, and this commit then fails loudly on the
+    create-exclusive slot instead of overwriting that writer's state.
+
+    Returns ``{"skipped", "rewritten_files", "total_files"}``:
+    ``skipped=True`` means the batch ledger already holds
+    ``batch_id`` (nothing was read, written or committed);
+    ``rewritten_files`` counts the committed files the new state
+    replaces, ``total_files`` the files it was written to."""
+    store = TableStore(spark, path)
+    m = store.committed()
+    files = m.get("files", [])
+    if batch_id is not None and batch_id in m.get("batches", []):
+        return {"skipped": True, "rewritten_files": 0,
+                "total_files": len(files)}
+    store.sweep()
+    state = fold(store.read(m))
+    _check_columns(m, state.schema.fields, "fold state")
+    cols = [f.name for f in _schema_of(m).fields]
+    new_files, new_stats = store.write_files(
+        m, _right_sized(state.select(*cols))
+    )
+    # THE commit — everything above is invisible until this line
+    store.commit(m, {
+        **store.files_update(m, new_files, new_stats),
+        "batches": m.get("batches", []) + ([batch_id] if batch_id else []),
+    })
+    return {"skipped": False, "rewritten_files": len(files),
+            "total_files": len(new_files)}
 
 
 _NAN = object()

@@ -19,12 +19,20 @@ scale:
 - **reads are O(state)**, never O(corpus): estimates come from the
   register rows alone.
 
-Storage reuses the versioned merge-table format
-(:mod:`sqltask_spark.operators.merge`) keyed on (g, idx): atomic
-commits, time travel over past sketch states, and the batch ledger
-as a free FAST-PATH (a ledgered batch id skips the read-merge-write;
-correctness never depends on it). The full-state rewrite per update
-is deliberate and bounded: the state is at most groups × 256 rows.
+Storage reuses the versioned table format of
+:mod:`sqltask_spark.operators.merge`: atomic commits, time travel
+over past sketch states, and the batch ledger (a ledgered batch id
+skips the fold before anything is read: a free fast path for the
+lattice folds, mandatory for the sum folds). The element-wise folds — HLL max,
+Count-Min and histogram sum, Bloom OR — compute the complete next
+state as ONE keyed aggregate over stored ∪ batch, unique per key by
+construction, and commit it as one snapshot write
+(:func:`~sqltask_spark.operators.merge.fold_parquet_table`): no keyed
+MERGE of the state into itself, no match search, no counts. The
+heavy-hitter and KMV stores delete evicted rows, so they stay on
+:func:`~sqltask_spark.operators.merge.merge_into_parquet`. The
+full-state rewrite per update is deliberate and bounded: the HLL
+state is at most groups × 256 rows.
 
 Same register/estimator discipline as the oracled
 ``source_distinct_hll`` catalog entry (integer-only: rank from
@@ -84,30 +92,26 @@ def update_hll_store(
     batch_id: str | None = None,
 ) -> dict:
     """Fold a batch's register rows into the persisted state:
-    element-wise MAX via one full-outer join on (g, idx), committed
-    through MERGE. Idempotent and commutative by the lattice algebra
-    — replaying any batch (or applying batches out of order) cannot
-    change the converged state; ``batch_id`` only short-circuits the
-    work for exact redeliveries."""
-    from sqltask_spark.operators.merge import (
-        merge_into_parquet,
-        read_parquet_table,
-    )
+    element-wise MAX via one (g, idx)-keyed aggregate over the stored
+    and batch registers, committed as the store's next snapshot
+    (:func:`~sqltask_spark.operators.merge.fold_parquet_table`).
+    Idempotent and commutative by the lattice algebra — replaying any
+    batch (or applying batches out of order) cannot change the
+    converged state; ``batch_id`` only short-circuits the work for
+    exact redeliveries."""
+    from sqltask_spark.operators.merge import fold_parquet_table
 
-    # MAX-fold via ONE (g, idx)-keyed aggregate instead of the former
-    # full-outer join (r12 session 4, guide §2.4): max over the union
-    # is the identical element-wise lattice join (register ranks are
-    # ≥ 1, so the old coalesce-to-0 never decided a value), one
-    # exchange on ≤ groups × m rows per side.
-    stored = read_parquet_table(spark, path).select("g", "idx", "r")
-    merged = (
-        stored.unionByName(regs.select("g", "idx", "r"))
-        .groupBy("g", "idx")
-        .agg(F.max("r").cast("int").alias("r"))
-    )
-    return merge_into_parquet(
-        spark, path, merged, ["g", "idx"], batch_id=batch_id
-    )
+    # max over the union is the element-wise lattice join (register
+    # ranks are >= 1, so an absent side never decides a value): one
+    # exchange on <= groups x m rows per side
+    def fold(stored):
+        return (
+            stored.unionByName(regs.select("g", "idx", "r"))
+            .groupBy("g", "idx")
+            .agg(F.max("r").cast("int").alias("r"))
+        )
+
+    return fold_parquet_table(spark, path, fold, batch_id=batch_id)
 
 
 CM_D = 2
@@ -188,24 +192,18 @@ def update_cm_store(
             "update_cm_store requires a batch_id: the sum fold is not"
             " idempotent — an unledgered redelivery double-counts"
         )
-    from sqltask_spark.operators.merge import (
-        merge_into_parquet,
-        read_parquet_table,
-    )
+    from sqltask_spark.operators.merge import fold_parquet_table
 
-    # SUM-fold via ONE (g, j, p)-keyed aggregate instead of the former
-    # full-outer join (r12 session 4, guide §2.4): sum over the union
-    # is the identical element-wise addition (absent side ≡ the old
-    # coalesce-to-0), one exchange on ≤ groups × d × w rows per side.
-    stored = read_parquet_table(spark, path).select("g", "j", "p", "cnt")
-    merged = (
-        stored.unionByName(cells.select("g", "j", "p", "cnt"))
-        .groupBy("g", "j", "p")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-    )
-    return merge_into_parquet(
-        spark, path, merged, ["g", "j", "p"], batch_id=batch_id
-    )
+    # sum over the union is the element-wise addition (an absent side
+    # adds 0): one exchange on <= groups x d x w rows per side
+    def fold(stored):
+        return (
+            stored.unionByName(cells.select("g", "j", "p", "cnt"))
+            .groupBy("g", "j", "p")
+            .agg(F.sum("cnt").cast("long").alias("cnt"))
+        )
+
+    return fold_parquet_table(spark, path, fold, batch_id=batch_id)
 
 
 def read_cm_estimates(
@@ -325,11 +323,13 @@ def create_bloom_store(
 def read_bloom_capacity(spark: SparkSession, path: str) -> int:
     from sqltask_spark.operators.merge import read_parquet_table
 
-    row = (
-        read_parquet_table(spark, path)
-        .filter(F.col("word") == _BLOOM_META_WORD)
-        .collect()
-    )
+    return _bloom_capacity(read_parquet_table(spark, path), path)
+
+
+def _bloom_capacity(words: DataFrame, path: str) -> int:
+    """The frozen capacity from the meta row of the store rows
+    ``words`` — one collect."""
+    row = words.filter(F.col("word") == _BLOOM_META_WORD).collect()
     if not row:
         raise ValueError(f"no Bloom meta row in store at {path}")
     return int(row[0]["bits"])
@@ -344,28 +344,24 @@ def update_bloom_store(
     (contrast :func:`update_cm_store`). Positions use the store's
     FROZEN capacity; saturation (fp-rate drift) is the monitored
     quantity — see :func:`bloom_saturation`."""
-    from sqltask_spark.operators.merge import (
-        merge_into_parquet,
-        read_parquet_table,
-    )
+    from sqltask_spark.operators.merge import fold_parquet_table
 
-    m_bits = read_bloom_capacity(spark, path)
-    stored = read_parquet_table(spark, path).select("word", "bits")
-    batch = bloom_word_rows(values, value_col, m_bits).select(
-        F.col("word").cast("long"), "bits"
-    )
-    # OR-fold via ONE (word)-keyed aggregate instead of the former
-    # full-outer join (r12 session 4, guide §2.4): bit_or over the
-    # union is the identical element-wise OR, one exchange on the
-    # ≤ m_bits/63-row state. The meta row is safe unkeyed: the batch
-    # cannot produce word = -1 (positions are non-negative), so its
-    # group holds only the stored row and bit_or returns it verbatim.
-    merged = (
-        stored.unionByName(batch)
-        .groupBy("word")
-        .agg(F.bit_or("bits").alias("bits"))
-    )
-    return merge_into_parquet(spark, path, merged, ["word"])
+    # bit_or over the union is the element-wise OR: one exchange on
+    # the <= m_bits/63-row state. The meta row is safe unkeyed: the
+    # batch cannot produce word = -1 (positions are non-negative), so
+    # its group holds only the stored row and bit_or returns it
+    # verbatim. The capacity comes from the same committed rows.
+    def fold(stored):
+        batch = bloom_word_rows(
+            values, value_col, _bloom_capacity(stored, path)
+        ).select(F.col("word").cast("long"), "bits")
+        return (
+            stored.unionByName(batch)
+            .groupBy("word")
+            .agg(F.bit_or("bits").alias("bits"))
+        )
+
+    return fold_parquet_table(spark, path, fold)
 
 
 def rebuild_bloom_store(
@@ -651,11 +647,15 @@ def read_hist_meta(
     intervals."""
     from sqltask_spark.operators.merge import read_parquet_table
 
+    return _hist_meta(read_parquet_table(spark, path, as_of=as_of), path)
+
+
+def _hist_meta(cells: DataFrame, path: str) -> "tuple[int, int]":
+    """(bucket_width, n_buckets) from the meta rows of the store rows
+    ``cells`` — one collect."""
     rows = {
         int(r["b"]): int(r["cnt"])
-        for r in read_parquet_table(spark, path, as_of=as_of)
-        .filter(F.col("g") == _HIST_META_GROUP)
-        .collect()
+        for r in cells.filter(F.col("g") == _HIST_META_GROUP).collect()
     }
     if 0 not in rows or 1 not in rows:
         raise ValueError(f"no histogram meta rows in store at {path}")
@@ -680,28 +680,22 @@ def update_hist_store(
             "update_hist_store requires a batch_id: the sum fold is"
             " not idempotent — an unledgered redelivery double-counts"
         )
-    from sqltask_spark.operators.merge import (
-        merge_into_parquet,
-        read_parquet_table,
-    )
+    from sqltask_spark.operators.merge import fold_parquet_table
 
-    width, n_buckets = read_hist_meta(spark, path)
-    # SUM-fold via ONE (g, b)-keyed aggregate instead of the former
-    # full-outer join (r12 session 4, guide §2.4) — same fusion as the
-    # Count-Min grid; meta rows pass through their singleton groups
-    # unchanged exactly as the old coalesce-to-0 left them.
-    stored = read_parquet_table(spark, path).select("g", "b", "cnt")
-    batch = hist_cell_rows(
-        values, group_col, value_col, width, n_buckets
-    ).select("g", "b", "cnt")
-    merged = (
-        stored.unionByName(batch)
-        .groupBy("g", "b")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-    )
-    return merge_into_parquet(
-        spark, path, merged, ["g", "b"], batch_id=batch_id
-    )
+    # sum over the union, as in the Count-Min grid; the meta rows pass
+    # through their singleton groups unchanged. The layout comes from
+    # the same committed rows.
+    def fold(stored):
+        batch = hist_cell_rows(
+            values, group_col, value_col, *_hist_meta(stored, path)
+        ).select("g", "b", "cnt")
+        return (
+            stored.unionByName(batch)
+            .groupBy("g", "b")
+            .agg(F.sum("cnt").cast("long").alias("cnt"))
+        )
+
+    return fold_parquet_table(spark, path, fold, batch_id=batch_id)
 
 
 def read_hist_quantiles(

@@ -90,8 +90,9 @@ def merge_upsert_sink(
     """
     from sqltask_spark.operators import index_fs
     from sqltask_spark.operators.merge import (
+        TableStore,
+        _schema_of,
         merge_into_parquet,
-        table_schema,
     )
 
     def upsert(batch_df: DataFrame, epoch_id: int) -> None:
@@ -105,11 +106,17 @@ def merge_upsert_sink(
                 .filter(F.col("__rn") == 1)
                 .drop("__rn")
             )
+        # ONE manifest read serves the projection and the ledger check
+        try:
+            m = TableStore(batch_df.sparkSession, table_path).committed()
+        except ValueError:
+            raise ValueError(
+                f"no committed table at {table_path} — create it"
+                " with create_parquet_table before streaming into it"
+            ) from None
         # CDC envelopes carry sequencing metadata the table doesn't
         # store — project onto the committed schema (+ delete flag)
-        keep = [f.name for f in table_schema(
-            batch_df.sparkSession, table_path
-        ).fields]
+        keep = [f.name for f in _schema_of(m).fields]
         if delete_col is not None:
             keep.append(delete_col)
         src = src.select(*keep)
@@ -120,12 +127,6 @@ def merge_upsert_sink(
         fingerprint = content_fingerprint(src, keep)
         prefix = f"{app_id}:epoch-{epoch_id}"
         ledger_id = f"{prefix}#{fingerprint}"
-        m = index_fs.read_manifest(batch_df.sparkSession, table_path)
-        if m is None:
-            raise ValueError(
-                f"no committed table at {table_path} — create it"
-                " with create_parquet_table before streaming into it"
-            )
         committed = m.get("batches", [])
         stale = [
             b for b in committed

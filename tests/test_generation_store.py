@@ -4,11 +4,12 @@
   to 0 makes every bounded id collect decline, so every mutation runs
   its join arm (the fast ≡ join suite relies on this).
 - Crash atomicity at EVERY write step, for both index kinds and every
-  mutation, and for the MERGE tables' upsert, delete-only merge and
-  compaction: a failure injected at each parquet write the mutation
-  makes (through the store's one write path) leaves the committed
-  manifest and a probe exactly at the pre-mutation state, and the
-  re-run heals to the result and state of an uninterrupted run.
+  mutation, and for the MERGE tables' upsert, delete-only merge,
+  compaction and snapshot fold: a failure injected at each parquet
+  write the mutation makes (through the store's one write path) leaves
+  the committed manifest and a probe exactly at the pre-mutation
+  state, and the re-run heals to the result and state of an
+  uninterrupted run.
 - Manifest keys a mutation does not own survive every table mutation.
 """
 
@@ -17,6 +18,7 @@ from __future__ import annotations
 import shutil
 
 import pytest
+from pyspark.sql import functions as F
 
 from sqltask_spark.operators import ann_index as ai
 from sqltask_spark.operators import dedup_index as di
@@ -198,6 +200,11 @@ TABLE_MUTATIONS = {
         s, p, [(5, None, True), (6, None, True)]
     ),
     "compact": lambda s, p: mg.compact_parquet_table(s, p),
+    # the snapshot commit of the sketch stores: the whole state rewritten
+    "fold": lambda s, p: mg.fold_parquet_table(
+        s, p, lambda rows: rows.withColumn("v", F.concat("v", F.lit("+"))),
+        batch_id="b1",
+    ),
 }
 
 

@@ -110,6 +110,9 @@ def test_unknown_size_estimate_keeps_partitioning(spark):
         "a long, b long",
     )
     assert merge._right_sized(rdd_backed) is rdd_backed
+    # pruning a column scales the unknown estimate down, not to a size
+    per_a = rdd_backed.groupBy("a").count().select("a")
+    assert merge._right_sized(per_a) is per_a
     # a relation Catalyst can size, under the open cost: one split
     ranged = spark.range(0, 1000, 1, 6)
     assert merge._right_sized(ranged).rdd.getNumPartitions() == 1

@@ -966,6 +966,19 @@ def test_merge_upsert_sink_epoch_collision_is_loud(spark, tmp_path):
     ) == [(1, 10), (2, 20), (3, 30)]
 
 
+def test_merge_upsert_sink_without_table_names_the_fix(spark, tmp_path):
+    """A sink pointed at a path with no committed table raises its own
+    error, which says how to create the table, before any work."""
+    import pytest
+
+    from sqltask_spark.streaming.tables import merge_upsert_sink
+
+    sink = merge_upsert_sink(str(tmp_path / "missing"), ["k"], app_id="q")
+    batch = spark.createDataFrame([(1, 10)], "k long, v long")
+    with pytest.raises(ValueError, match="create it with create_parquet_table"):
+        sink(batch, 0)
+
+
 def test_scd2_stream_matches_batch_closed_intervals(spark, tmp_path):
     """Streaming SCD2 parity: the stream's emitted CLOSED intervals
     equal the batch scd2_user_state's non-current rows when events
