@@ -114,6 +114,52 @@ def content_fingerprint(df: DataFrame, cols: list[str]) -> str:
     return f"{agg['n']}:{x:x}:{s:x}"
 
 
+def local_frame(
+    spark: SparkSession, rows, schema: "StructType | str"
+) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples in ``schema``
+    order) that plans as a ``LocalRelation`` — zero Spark jobs to
+    build, and zero to collect whatever the optimizer folds into it.
+
+    ``spark.createDataFrame(list, schema)`` pickles the rows into a
+    ``parallelize``d ``PythonRDD`` instead: every action over it runs
+    one Python-worker task per slice (``defaultParallelism`` slices),
+    about a CPU-second of worker start-up and unpickling on a 4-core
+    host for a few dozen keys. Here the rows become a
+    ``pyarrow.Table`` typed by ``to_arrow_schema(schema)`` and reach
+    the JVM as Arrow batches, independent of
+    ``spark.sql.execution.arrow.pyspark.enabled``.
+
+    ``schema`` is a ``StructType`` or a DDL string and is kept exactly,
+    nullability included. Types are never inferred from the values:
+    each row passes the same schema verification
+    ``createDataFrame(list, schema)`` applies, so a value that does
+    not fit its declared type, or a null in a non-nullable field,
+    raises as it did there. A string column is stricter: Arrow rejects
+    a non-string value, where the pickled path stored its ``str()``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import (
+        StructType,
+        _make_type_verifier,
+        _parse_datatype_string,
+    )
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    rows = list(rows)
+    verify = _make_type_verifier(schema)
+    for row in rows:
+        verify(row)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_runtime_confs(spark)
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"

@@ -68,6 +68,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from sqltask_spark.data import local_frame
 from sqltask_spark.operators import index_fs
 from sqltask_spark.operators.similarity import (
     BRUTE_PREFILTER_MIN_PAIRS,
@@ -80,6 +81,7 @@ from sqltask_spark.operators.similarity import (
     as_double_array,
     cosine_prenormed,
     l2_norm,
+    query_side_schema,
 )
 
 
@@ -291,13 +293,14 @@ def build_ivf_index(
             _kmeans_euclid(unit[:, j * subdim : (j + 1) * subdim], pq_k, 8)
             for j in range(m)
         ]
-        cb_df = spark.createDataFrame(
+        cb_df = local_frame(
+            spark,
             [
                 (j, c, [float(x) for x in codebooks[j][c]])
                 for j in range(m)
                 for c in range(pq_k)
             ],
-            ["subspace", "code", "centroid"],
+            "subspace bigint, code bigint, centroid array<double>",
         )
         store.write(cb_df.coalesce(1), f"quantizer/{gen}/codebooks")
     vec_df = _encode(corpus, corpus_id, vec_col, cents, codebooks)
@@ -307,9 +310,10 @@ def build_ivf_index(
         vec_df.repartition(n_cells, "cell"), store.gen_rel(gen),
         partition_by="cell",
     )
-    cent_df = spark.createDataFrame(
+    cent_df = local_frame(
+        spark,
         [(i, [float(x) for x in cents[i]]) for i in range(len(cents))],
-        ["cell", "centroid"],
+        "cell bigint, centroid array<double>",
     )
     store.write(cent_df.coalesce(1), f"quantizer/{gen}/centroids")
     # readback pinned from the plan just written — no inference job;
@@ -660,9 +664,10 @@ def probe_ivf_index(
     """
     m_fest = committed_manifest(spark, path, as_of)
     cents = _read_centroids(spark, path, m_fest)
-    q_rows = queries.select(
+    q_base = queries.select(
         F.col(query_id).alias("query_id"), F.col(query_vec).alias("qv")
-    ).collect()
+    )
+    q_rows = q_base.collect()
     q_mat = np.array([list(r["qv"]) for r in q_rows], dtype=np.float64)
     qn = np.linalg.norm(q_mat, axis=1)
     qn[qn == 0] = 1.0
@@ -670,17 +675,19 @@ def probe_ivf_index(
     cn[cn == 0] = 1.0
     sims = (q_mat / qn[:, None]) @ (cents / cn[:, None]).T
     order = np.argsort(-sims, axis=1)[:, :n_probe]
-    probes_df = spark.createDataFrame(
+    probes_df = local_frame(
+        spark,
         [
             (r["query_id"], int(order[i, j]))
             for i, r in enumerate(q_rows)
             for j in range(order.shape[1])
         ],
-        ["query_id", "cell"],
+        query_side_schema(q_base, "cell bigint"),
     )
-    qvecs_df = spark.createDataFrame(
+    qvecs_df = local_frame(
+        spark,
         [(r["query_id"], [float(x) for x in r["qv"]]) for r in q_rows],
-        ["query_id", "qv"],
+        query_side_schema(q_base, "qv array<double>"),
     ).withColumn("qn", l2_norm(F.col("qv")))
     probed_cells = sorted({int(c) for row in order for c in row})
     # the isin predicate on the PARTITION column prunes directories at
@@ -728,12 +735,13 @@ def probe_ivf_index(
             ],
             axis=1,
         )
-        lut_df = spark.createDataFrame(
+        lut_df = local_frame(
+            spark,
             [
                 (r["query_id"], [float(x) for x in luts[i]])
                 for i, r in enumerate(q_rows)
             ],
-            ["query_id", "lut"],
+            query_side_schema(q_base, "lut array<double>"),
         )
         terms = [
             F.get("lut", i * pq_k + F.get("codes", F.lit(i)).cast("int"))

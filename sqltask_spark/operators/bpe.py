@@ -35,6 +35,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sqltask_spark.data import local_frame
 from sqltask_spark.operators.text import tokenize
 
 _MERGE_SCHEMA = (
@@ -178,7 +179,7 @@ def learn_bpe_merges(
         wf = wf.orderBy(F.desc("freq"), "word").limit(max_words)
     vocab = [(r["word"], int(r["freq"])) for r in wf.collect()]
     merges = _train_merges_local(vocab, n_merges, min_pair_freq)
-    return spark.createDataFrame(merges, _MERGE_SCHEMA)
+    return local_frame(spark, merges, _MERGE_SCHEMA)
 
 
 #: lineage-truncation cadence for the distributed BPE merge loop: the
@@ -305,7 +306,7 @@ def learn_bpe_merges_distributed(
         pending.unpersist()
     vocab.unpersist()
     anchor.unpersist()
-    return spark.createDataFrame(merges, _MERGE_SCHEMA)
+    return local_frame(spark, merges, _MERGE_SCHEMA)
 
 
 def encode_with_merges(

@@ -70,6 +70,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sqltask_spark.data import local_frame
 from sqltask_spark.operators.dedup import (
     _banded_signatures,
     _signatures_wide,
@@ -613,7 +614,8 @@ def probe_minhash_index(
                     else F.lit(False)
                 )
                 cand = F.broadcast(
-                    spark.createDataFrame(
+                    local_frame(
+                        spark,
                         [(b, c, n) for (b, c), n in shared.items()],
                         cand.schema,
                     )

@@ -52,6 +52,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sqltask_spark.data import local_frame
+
 MANIFEST_DIR = "manifests"
 _MANIFEST_FMT = "manifest-%012d.json"
 
@@ -861,18 +863,20 @@ class GenerationStore:
             w = w.partitionBy(partition_by)
         w.parquet(f"{self.path}/{rel}")
 
-    def commit(self, m: dict | None, updates: dict) -> None:
-        """Publish ``m`` with ``updates`` as the next manifest. Unknown
-        manifest keys (sync markers, batch ledger, future metadata)
-        carry forward verbatim — a mutation must never strip another
-        subsystem's state."""
+    def commit(self, m: dict | None, updates: dict) -> int:
+        """Publish ``m`` with ``updates`` as the next manifest and
+        return the seq it published. Unknown manifest keys (sync
+        markers, batch ledger, future metadata) carry forward verbatim
+        — a mutation must never strip another subsystem's state."""
+        prev_seq = m["_seq"] if m else -1
         commit_manifest(
             self.spark,
             self.path,
             {**{k: v for k, v in (m or {}).items() if k != "_seq"},
              **updates},
-            m["_seq"] if m else -1,
+            prev_seq,
         )
+        return prev_seq + 1
 
     def sweep(self, files: bool = False) -> list[str]:
         """Delete what no manifest references — the debris of a
@@ -1070,8 +1074,8 @@ class GenerationStore:
             target_ids = [i for i in uniq if i in hits and i not in prior]
             if not target_ids:
                 return 0
-            target = spark.createDataFrame(
-                [(i,) for i in target_ids], blocked.schema
+            target = local_frame(
+                spark, [(i,) for i in target_ids], blocked.schema
             )
             return self._add_tombstones(m, target, len(target_ids))
         try:
@@ -1192,9 +1196,9 @@ class GenerationStore:
             blocked_ids = [i for i in uniq if i in hit]
             if not blocked_ids:
                 return none
-            blocked = spark.createDataFrame(
-                [(i,) for i in blocked_ids], incoming.schema
-            ).persist()
+            blocked = local_frame(
+                spark, [(i,) for i in blocked_ids], incoming.schema
+            )
         else:
             blocked = (
                 incoming.distinct()

@@ -65,6 +65,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sqltask_spark.data import local_frame
+
 __all__ = [
     "FP_SCALE",
     "to_fixed_long",
@@ -145,8 +147,8 @@ def init_centroids_md5(pts: DataFrame, k: int) -> DataFrame:
             T.StructField("cid", T.IntegerType()),
         ]
     )
-    chosen = spark.createDataFrame(
-        [(r["id"], i) for i, r in enumerate(top)], schema
+    chosen = local_frame(
+        spark, [(r["id"], i) for i, r in enumerate(top)], schema
     )
     return (
         pts.join(F.broadcast(chosen), "id")
@@ -224,8 +226,8 @@ def kmeans_fixed(
     for _ in range(iters):
         assign = assign_cells(pts, cents)
         new_rows = _update(pts, assign, cents).collect()
-        cents = spark.createDataFrame(
-            new_rows, "cid int, pos int, c bigint"
+        cents = local_frame(
+            spark, new_rows, "cid int, pos int, c bigint"
         )
     final_assign = assign_cells(pts, cents)
     # materialize the (small) outputs before releasing the cache
@@ -346,8 +348,8 @@ def kmeans_fixed_sparse(
     for _ in range(iters):
         assign = _assign_sparse(pts, cents)
         rows = _update_sparse(pts, assign, cents).collect()
-        cents = spark.createDataFrame(
-            rows, "cid int, pos int, c bigint"
+        cents = local_frame(
+            spark, rows, "cid int, pos int, c bigint"
         )
     final_assign = _assign_sparse(pts, cents).persist()
     final_assign.count()

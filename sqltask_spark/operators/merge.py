@@ -64,6 +64,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sqltask_spark.data import local_frame
 from sqltask_spark.operators import index_fs
 
 _DATA = "data"
@@ -260,7 +261,7 @@ class TableStore(index_fs.GenerationStore):
         jobs."""
         rels = m.get("files", []) if rels is None else rels
         if not rels:
-            return self.spark.createDataFrame([], _schema_of(m))
+            return local_frame(self.spark, [], _schema_of(m))
         return self.spark.read.schema(_schema_of(m)).parquet(
             *[f"{self.path}/{_DATA}/{rel}" for rel in rels]
         )
@@ -412,15 +413,15 @@ def read_parquet_table_keys(
     files = m.get("files", [])
     if not files or not keys:
         return store.read(m, [])
-    key_type = _schema_of(m)[stats_col].dataType.simpleString()
-    key_df = spark.createDataFrame(
-        [(k,) for k in keys], f"{stats_col} {key_type}"
-    )
     # the keys are driver-side already: under the cap, collect their
-    # positions in one job (a limit-capped collect runs as an
-    # incremental take — a one-partition job, then the rest)
+    # positions from the local relation they plan as — the optimizer
+    # folds the projection into it, so the collect runs no job
     probe_pos = None
     if len(keys) <= index_fs.PROBE_CAP:
+        key_type = _schema_of(m)[stats_col].dataType.simpleString()
+        key_df = local_frame(
+            spark, [(k,) for k in keys], f"{stats_col} {key_type}"
+        )
         probe_pos = [
             (int(r[0]), int(r[1]))
             for r in key_df.select(
@@ -497,8 +498,10 @@ def merge_into_parquet(
 
     Returns ``{"inserted", "updated", "deleted", "noop_deletes",
     "rewritten_files", "stats_pruned_files", "total_files",
-    "skipped"}``. ``skipped=True`` means the batch ledger already
-    holds ``batch_id`` (idempotent retry — nothing was written);
+    "skipped", "seq"}``. ``skipped=True`` means the batch ledger
+    already holds ``batch_id`` (idempotent retry — nothing was
+    written); ``seq`` is the version this MERGE committed, or on a
+    skip the version whose ledger held ``batch_id``;
     ``stats_pruned_files`` counts files excluded from the matched-file
     search by the manifest's per-file [min, max] statistics without
     being read at all (see :func:`create_parquet_table`).
@@ -515,6 +518,7 @@ def merge_into_parquet(
             "stats_pruned_files": 0,
             "total_files": len(m.get("files", [])),
             "skipped": True,
+            "seq": m["_seq"],
         }
     store.sweep()
 
@@ -812,7 +816,7 @@ def merge_into_parquet(
             else ([], {})
         )
         # THE commit — everything above is invisible until this line
-        store.commit(m, {
+        seq = store.commit(m, {
             **store.files_update(
                 m,
                 untouched + new_files,
@@ -831,6 +835,7 @@ def merge_into_parquet(
             "stats_pruned_files": stats_pruned,
             "total_files": len(untouched + new_files),
             "skipped": False,
+            "seq": seq,
         }
     finally:
         src.unpersist()

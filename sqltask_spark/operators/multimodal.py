@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sqltask_spark.data import local_frame
+
 #: Metadata struct carried alongside every media payload.
 MEDIA_META_TYPE = T.StructType(
     [
@@ -378,4 +380,4 @@ def make_media_table(
             T.StructField("meta", MEDIA_META_TYPE),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from sqltask_spark.data import local_frame
+
 
 def global_prefix_sum(
     df: DataFrame,
@@ -94,7 +96,7 @@ def global_prefix_sum(
         out.count()
         local.unpersist()
         return out
-    off_df = spark.createDataFrame(offsets, "__pid int, __off long")
+    off_df = local_frame(spark, offsets, "__pid int, __off long")
     out = (
         local.join(F.broadcast(off_df), "__pid")
         .withColumn(

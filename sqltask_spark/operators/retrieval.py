@@ -33,6 +33,7 @@ from typing import Optional, Sequence, Tuple
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from sqltask_spark.data import local_frame
 from sqltask_spark.operators import text as tx
 
 #: Micro-unit fixed-point scale shared with the oracle SQL.
@@ -42,8 +43,8 @@ _MICRO = 1_000_000
 def _query_frame(
     spark: SparkSession, queries: Sequence[Tuple[int, str]]
 ) -> DataFrame:
-    return spark.createDataFrame(
-        list(queries), schema="query_id bigint, query_text string"
+    return local_frame(
+        spark, list(queries), schema="query_id bigint, query_text string"
     )
 
 

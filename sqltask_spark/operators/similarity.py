@@ -28,6 +28,20 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from sqltask_spark.data import local_frame
+
+
+def query_side_schema(q_base: DataFrame, ddl: str):
+    """Schema of a driver-built query-side frame: ``query_id`` typed
+    as the query frame ``q_base`` types it, then the columns the
+    driver computes, declared in ``ddl`` (``"cell bigint"``) — never
+    inferred from the Python values."""
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    return StructType(
+        [q_base.schema["query_id"], *_parse_datatype_string(ddl).fields]
+    )
+
 
 def as_double_array(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -606,7 +620,7 @@ def cosine_near_pairs_lsh_fixed(
         )
     n_sig = tables * n_planes
     triples = sparse_projection_matrix(dim, n_sig, seed)
-    mat = spark.createDataFrame(triples, schema="i int, j int, s long")
+    mat = local_frame(spark, triples, schema="i int, j int, s long")
 
     base = ensure_min_partitions(df).select(
         F.col(id_col).alias("id"),
@@ -791,7 +805,7 @@ def random_projection(
             f"embedding dim {dim} != expected {expected_dim}"
         )
     triples = sparse_projection_matrix(dim, out_dim, seed)
-    mat = spark.createDataFrame(triples, schema="i int, j int, s long")
+    mat = local_frame(spark, triples, schema="i int, j int, s long")
     scale = math.sqrt(3.0 / out_dim)
     base = df.select(
         F.col(id_col).alias("id"),
@@ -1253,22 +1267,24 @@ def cosine_topk_ivf(
         sims = (q_mat / qn[:, None]) @ (cents / cn[:, None]).T
         order = np.argsort(-sims, axis=1)[:, :n_probe]
         probes_df = F.broadcast(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [
                     (r["query_id"], int(order[i, j]))
                     for i, r in enumerate(q_rows)
                     for j in range(order.shape[1])
                 ],
-                ["query_id", "cell"],
+                query_side_schema(q_base, "cell bigint"),
             )
         )
         qvecs_df = F.broadcast(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [
                     (r["query_id"], [float(x) for x in r["qv"]])
                     for r in q_rows
                 ],
-                ["query_id", "qv"],
+                query_side_schema(q_base, "qv array<double>"),
             ).withColumn("qn", l2_norm(F.col("qv")))
         )
         assigned = None
@@ -1445,13 +1461,17 @@ def cosine_topk_lsh(
             for t in range(tables)
             for flip in flips
         ]
-        # schemas inferred so non-long id types keep working
-        probes_df = spark.createDataFrame(
-            probe_rows, ["query_id", "t", "bucket"]
+        # query_id typed by the query frame, so non-long id types
+        # keep working
+        probes_df = local_frame(
+            spark,
+            probe_rows,
+            query_side_schema(q_base, "t bigint, bucket bigint"),
         )
-        qvecs_df = spark.createDataFrame(
+        qvecs_df = local_frame(
+            spark,
             [(r["query_id"], [float(x) for x in r["qv"]]) for r in q_rows],
-            ["query_id", "qv"],
+            query_side_schema(q_base, "qv array<double>"),
         )
         broadcast_q = True
     else:
@@ -1836,13 +1856,14 @@ def cosine_topk_ivf_pq(
         sims = q_unit @ (cents / ccn[:, None]).T
         order = np.argsort(-sims, axis=1)[:, :n_probe]
         probes_df = F.broadcast(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [
                     (r["query_id"], int(order[i, j]))
                     for i, r in enumerate(q_rows)
                     for j in range(order.shape[1])
                 ],
-                ["query_id", "cell"],
+                query_side_schema(q_base, "cell bigint"),
             )
         )
         luts = np.concatenate(
@@ -1850,7 +1871,8 @@ def cosine_topk_ivf_pq(
              for j in range(m)],
             axis=1,
         )  # (n_queries, m * pq_k), row-major by subspace
-        qlut_df = spark.createDataFrame(
+        qlut_df = local_frame(
+            spark,
             [
                 (
                     r["query_id"],
@@ -1859,7 +1881,9 @@ def cosine_topk_ivf_pq(
                 )
                 for i, r in enumerate(q_rows)
             ],
-            ["query_id", "lut", "qv"],
+            query_side_schema(
+                q_base, "lut array<double>, qv array<double>"
+            ),
         ).withColumn("qn", l2_norm(F.col("qv")))
         broadcast_q = True
         prepped = None

@@ -46,6 +46,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sqltask_spark.data import local_frame
+
 HLL_M = 256
 HLL_RHO_CAP = 24
 _ALPHA_MICRO = 718273  # round(1e6 * 0.7213 / (1 + 1.079/256))
@@ -309,8 +311,8 @@ def create_bloom_store(
     from sqltask_spark.operators.merge import create_parquet_table
 
     spark = values.sparkSession
-    meta = spark.createDataFrame(
-        [(_BLOOM_META_WORD, int(m_bits))], "word long, bits long"
+    meta = local_frame(
+        spark, [(_BLOOM_META_WORD, int(m_bits))], "word long, bits long"
     )
     create_parquet_table(
         bloom_word_rows(values, value_col, m_bits)
@@ -386,8 +388,10 @@ def rebuild_bloom_store(
         read_parquet_table,
     )
 
-    meta = spark.createDataFrame(
-        [(_BLOOM_META_WORD, int(m_bits_new))], "word long, bits long"
+    meta = local_frame(
+        spark,
+        [(_BLOOM_META_WORD, int(m_bits_new))],
+        "word long, bits long",
     )
     desired = (
         bloom_word_rows(members, value_col, m_bits_new)
@@ -616,7 +620,8 @@ def create_hist_store(
             f"need bucket_width >= 1 and n_buckets >= 2, got"
             f" ({bucket_width}, {n_buckets})"
         )
-    meta = spark.createDataFrame(
+    meta = local_frame(
+        spark,
         [
             (_HIST_META_GROUP, 0, int(bucket_width)),
             (_HIST_META_GROUP, 1, int(n_buckets)),
@@ -833,7 +838,8 @@ def rebuild_hist_store(
     )
 
     _, n_buckets = read_hist_meta(spark, path)
-    meta = spark.createDataFrame(
+    meta = local_frame(
+        spark,
         [
             (_HIST_META_GROUP, 0, int(bucket_width_new)),
             (_HIST_META_GROUP, 1, int(n_buckets)),
@@ -1032,10 +1038,11 @@ def create_mg_store(
     if int(k) < 1:
         raise ValueError(f"need k >= 1, got {k}")
     batch = _mg_counts(values, group_col, item_col, weight_col)
-    empty = spark.createDataFrame([], "g string, item string, cnt long")
-    empty_gc = spark.createDataFrame([], "g string, cnt long")
+    empty = local_frame(spark, [], "g string, item string, cnt long")
+    empty_gc = local_frame(spark, [], "g string, cnt long")
     state, _ = _mg_fold(empty, empty_gc, empty_gc, batch, int(k))
-    meta = spark.createDataFrame(
+    meta = local_frame(
+        spark,
         [(_MG_META_GROUP, "k", int(k))],
         "g string, item string, cnt long",
     )
@@ -1271,7 +1278,8 @@ def create_kmv_store(
     if int(k) < 1:
         raise ValueError(f"need k >= 1, got {k}")
     state = kmv_rows(values, group_col, key_col, int(k))
-    meta = spark.createDataFrame(
+    meta = local_frame(
+        spark,
         [(_KMV_META_GROUP, "k", int(k))],
         "g string, item string, h long",
     )

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from sqltask_spark.data import local_frame
+
 #: Tiny per-language stopword sets for the heuristic language ID.
 #: Deliberately minimal and deterministic; real corpora would load a
 #: broadcast stopword table instead.
@@ -465,7 +467,7 @@ class BigramLM:
         self.bgc.write.mode("overwrite").parquet(f"{path}/bigrams")
         self.ctx.write.mode("overwrite").parquet(f"{path}/contexts")
         spark = self.bgc.sparkSession
-        spark.createDataFrame([(self.v,)], ["v"]).coalesce(1).write.mode(
+        local_frame(spark, [(self.v,)], "v bigint").coalesce(1).write.mode(
             "overwrite"
         ).parquet(f"{path}/meta")
 

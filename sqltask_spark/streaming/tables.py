@@ -88,7 +88,6 @@ def merge_upsert_sink(
                               order_col="ts", app_id="orders-cdc")
         ).trigger(availableNow=True).start()
     """
-    from sqltask_spark.operators import index_fs
     from sqltask_spark.operators.merge import (
         TableStore,
         _schema_of,
@@ -141,7 +140,7 @@ def merge_upsert_sink(
                 "— pass a distinct app_id per logical stream instead "
                 "of silently dropping this batch."
             )
-        merge_into_parquet(
+        merged = merge_into_parquet(
             batch_df.sparkSession,
             table_path,
             src,
@@ -164,9 +163,7 @@ def merge_upsert_sink(
             )
 
             spark = batch_df.sparkSession
-            to_seq = int(
-                index_fs.read_manifest(spark, table_path)["_seq"]
-            )
+            to_seq = merged["seq"]
             for spec in sync_indexes:
                 kind = spec["kind"]
                 if kind not in ("minhash", "ivf"):

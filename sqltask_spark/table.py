@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sqltask_spark.data import local_frame
 from sqltask_spark.exceptions import MandatoryValueMissingException
 
 _PY_TO_SPARK: dict[type, T.DataType] = {
@@ -173,4 +174,4 @@ class TableContext:
         return df.select(*cols)
 
     def empty_dataframe(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame([], self.schema)
+        return local_frame(spark, [], self.schema)

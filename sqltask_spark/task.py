@@ -61,6 +61,9 @@ class SparkTask:
         self._lookup_sources: dict[str, DataFrame] = {}
         self._outputs: dict[str, DataFrame] = {}
         self._dq_outputs: dict[str, DataFrame] = {}
+        # name -> (forced output, its row count) from execute_etl's
+        # force, so the default validate() need not count it again
+        self._forced_counts: dict[str, tuple[DataFrame, int]] = {}
 
     # -- registries (parity: sqltask/__init__.py:24-120) --------------------
 
@@ -108,10 +111,14 @@ class SparkTask:
         any write (``reference sqltask/__init__.py:52-58``). Default:
         optional min-row-count check (the canonical example validates
         exactly this, ``example/tasks/fact_customer_task.py:164-166``).
+        An output that is still the cached frame the lifecycle forced
+        reuses the force's count: zero extra jobs.
         """
         if self.min_row_count is not None:
             for name, df in self._outputs.items():
-                n = df.count()
+                forced, n = self._forced_counts.get(name, (None, 0))
+                if forced is not df:
+                    n = df.count()
                 if n < self.min_row_count:
                     raise TooFewRowsException(
                         f"table {name!r}: {n} rows < required "
@@ -180,7 +187,8 @@ class SparkTask:
         try:
             for name, df in list(self._outputs.items()):
                 df = df.cache()
-                df.count()  # force: surfaces transform errors pre-write
+                # force: surfaces transform errors pre-write
+                self._forced_counts[name] = (df, df.count())
                 cached.append(df)
                 self._outputs[name] = df
                 if dq_mod.ISSUES_COL in df.columns:
@@ -215,6 +223,7 @@ class SparkTask:
                     sink.write_batch(self._dq_outputs[name], dq_table)
             self.post_insert()
         finally:
+            self._forced_counts.clear()
             for df in cached:
                 df.unpersist()
 

@@ -1399,7 +1399,7 @@ def test_append_gen_pruning_never_reads_pruned_generation(
 
 
 def test_manifest_reader_schemas_pin_jobfree_reads(
-    spark, tables, tmp_path
+    spark, tables, tmp_path, jobs
 ):
     """r12 optimization: the manifests record every relation's reader
     schema, so index reads plan with ZERO Spark jobs (an unpinned
@@ -1417,11 +1417,6 @@ def test_manifest_reader_schemas_pin_jobfree_reads(
     from sqltask_spark.operators import ann_index as ai
     from sqltask_spark.operators import dedup_index as di
 
-    sc = spark.sparkContext
-
-    def njid():
-        return int(sc._jsc.sc().dagScheduler().nextJobId())
-
     docs = tables["documents"].select("doc_id", "text")
     idx = str(tmp_path / "mh_schemas")
     build_minhash_index(docs.filter(F.col("doc_id") < 40), idx)
@@ -1429,11 +1424,11 @@ def test_manifest_reader_schemas_pin_jobfree_reads(
     assert set(m["schemas"]) == {
         "postings", "shingles", "sizes", "tombstones"
     }
-    j0 = njid()
-    pinned = di._read_shingles(spark, idx, m)
-    _ = di._read_postings(spark, idx, m)
-    _ = di._read_sizes(spark, idx, m)
-    assert njid() - j0 == 0, "pinned reads must plan job-free"
+    with jobs() as planned:
+        pinned = di._read_shingles(spark, idx, m)
+        _ = di._read_postings(spark, idx, m)
+        _ = di._read_sizes(spark, idx, m)
+    assert planned.n == 0, "pinned reads must plan job-free"
     # pre-schema manifest: inference fallback reads the same rows
     m_old = {k: v for k, v in m.items() if k != "schemas"}
     legacy = di._read_shingles(spark, idx, m_old)
@@ -1463,9 +1458,9 @@ def test_manifest_reader_schemas_pin_jobfree_reads(
     )
     vm = ai.committed_manifest(spark, vidx)
     assert {"vectors", "centroids", "tombstones"} <= set(vm["schemas"])
-    j0 = njid()
-    vpin = ai._read_vectors(spark, vidx, vm)
-    assert njid() - j0 == 0, "pinned vector read must plan job-free"
+    with jobs() as planned:
+        vpin = ai._read_vectors(spark, vidx, vm)
+    assert planned.n == 0, "pinned vector read must plan job-free"
     vm_old = {k: v for k, v in vm.items() if k != "schemas"}
     vleg = ai._read_vectors(spark, vidx, vm_old)
     assert sorted(r["neighbor_id"] for r in vpin.collect()) == sorted(
