@@ -2,8 +2,13 @@
 """Job-count breakdown INSIDE one CDC epoch of the stream-sync loop.
 
 Replays epoch 0 (single-row insert) step by step at orchestration
-granularity — fingerprint, merge, change feed, mutations, marker —
-printing the DAGScheduler job delta per step.
+granularity — the sink's bounded collect, its fingerprint, the merge,
+the change feed, the index mutations and the sync marker — printing
+the Spark jobs and wall seconds of each step. Each step runs under a
+job group of its own, read back through the public
+``statusTracker().getJobIdsForGroup``.
+
+    python scripts/profile_epoch_steps.py [SF_DIR]
 """
 
 from __future__ import annotations
@@ -11,6 +16,7 @@ from __future__ import annotations
 import os
 import sys
 import time
+import uuid
 
 import pandas as pd
 
@@ -20,6 +26,40 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from sqltask_spark.data import load_table  # noqa: E402
 from sqltask_spark.session import get_spark  # noqa: E402
+
+
+class StepJobs:
+    """Wall seconds and Spark jobs per step: each step's actions run
+    under their own job group, counted once the status tracker has seen
+    a sentinel job started after them (the listener bus may lag)."""
+
+    def __init__(self, spark) -> None:
+        self.sc = spark.sparkContext
+        self.spark = spark
+        self.steps: list[tuple[str, str, float]] = []
+        self._open()
+
+    def _open(self) -> None:
+        self.group = f"step-{uuid.uuid4().hex}"
+        self.sc.setJobGroup(self.group, "profile_epoch_steps")
+        self.t0 = time.perf_counter()
+
+    def mark(self, label: str) -> None:
+        self.steps.append((label, self.group, time.perf_counter() - self.t0))
+        self._open()
+
+    def report(self) -> list[tuple[str, int, float]]:
+        tracker = self.sc.statusTracker()
+        sentinel = f"sentinel-{uuid.uuid4().hex}"
+        self.sc.setJobGroup(sentinel, "profile_epoch_steps sentinel")
+        self.spark.range(1).count()
+        deadline = time.monotonic() + 30
+        while not tracker.getJobIdsForGroup(sentinel) and time.monotonic() < deadline:
+            time.sleep(0.01)
+        return [
+            (label, len(tracker.getJobIdsForGroup(group)), wall)
+            for label, group, wall in self.steps
+        ]
 
 
 def main() -> int:
@@ -34,18 +74,8 @@ def main() -> int:
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
-    sc = spark.sparkContext
-
-    def jid() -> int:
-        return int(sc._jsc.sc().dagScheduler().nextJobId())
-
-    marks = []
-    _t = [time.perf_counter(), jid()]
-
-    def mark(label):
-        now, j = time.perf_counter(), jid()
-        marks.append((label, j - _t[1], now - _t[0]))
-        _t[0], _t[1] = now, j
+    steps = StepJobs(spark)
+    mark = steps.mark
 
     from sqltask_spark.queries import QUERIES
 
@@ -60,7 +90,7 @@ def main() -> int:
     import shutil
     import tempfile
 
-    from sqltask_spark.data import content_fingerprint
+    from sqltask_spark.data import collect_local, content_fingerprint, local_frame
     from sqltask_spark.operators import index_fs
     from sqltask_spark.operators import dedup_index as di
     from sqltask_spark.operators.merge import (
@@ -84,10 +114,8 @@ def main() -> int:
         di.build_minhash_index(docs, idx)
         mark("setup(create+build)")
 
-        batch = spark.createDataFrame(
-            [(10_000_001, novel_a, 1, False)],
-            "doc_id long, text string, seq long, is_del boolean",
-        )
+        epoch_ddl = "doc_id long, text string, seq long, is_del boolean"
+        batch = local_frame(spark, [(10_000_001, novel_a, 1, False)], epoch_ddl)
         # --- the sink's steps, unrolled ---------------------------
         from pyspark.sql import Window
 
@@ -100,6 +128,10 @@ def main() -> int:
         keep = [f.name for f in table_schema(spark, tbl).fields]
         keep.append("is_del")
         src = src.select(*keep)
+        local = collect_local(src, index_fs.SMALL_BATCH_CAP)
+        if local is not None:
+            src = local
+        mark("sink_collect")
         fp = content_fingerprint(src, keep)
         mark("fingerprint")
         v0 = index_fs.read_manifest(spark, tbl)["_seq"]
@@ -141,10 +173,7 @@ def main() -> int:
         print("by_type:", by_type, "unblock:", ub, "appended:", n_app)
 
         # --- epoch 2 shape: delete then re-insert -----------------
-        batch = spark.createDataFrame(
-            [(0, None, 2, True)],
-            "doc_id long, text string, seq long, is_del boolean",
-        )
+        batch = local_frame(spark, [(0, None, 2, True)], epoch_ddl)
         merge_into_parquet(
             spark, tbl, batch.select(*keep), ["doc_id"],
             batch_id="e1", delete_col="is_del",
@@ -157,9 +186,9 @@ def main() -> int:
             from_seq=v1, to_seq=to_seq,
         )
         mark("e1_sync(delete-only)")
-        batch = spark.createDataFrame(
-            [(0, "qm rn so tp uq vr ws xt yu zv aw bx cy dz", 3, False)],
-            "doc_id long, text string, seq long, is_del boolean",
+        batch = local_frame(
+            spark, [(0, "qm rn so tp uq vr ws xt yu zv aw bx cy dz", 3, False)],
+            epoch_ddl,
         )
         merge_into_parquet(
             spark, tbl, batch.select(*keep), ["doc_id"],
@@ -189,7 +218,7 @@ def main() -> int:
         print("e2 unblock:", ub, "appended:", n_app)
 
         print("\n=== step breakdown (jobs / wall s) ===")
-        for label, jobs, wall in marks:
+        for label, jobs, wall in steps.report():
             print(f"{label:28s} {jobs:4d} jobs  {wall:7.2f}s")
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

@@ -88,11 +88,17 @@ def content_fingerprint(df: DataFrame, cols: list[str]) -> str:
     # per-row hashes in ONE narrow job (no exchange) and folds n/xor/
     # sum driver-side — the global aggregate costs 3 AQE stage jobs
     # (partial → single-partition exchange → final) PER SINK EPOCH.
+    # Over a local relation (:func:`collect_local`) the projection
+    # folds into the relation and the collect runs no job at all.
     # Same Spark-computed hashes, so the fingerprint string is
     # identical by construction; larger batches keep the aggregate.
-    _CAP = 65536
-    rows = hashed.limit(_CAP + 1).collect()
-    if len(rows) <= _CAP:
+    # The cap is the filter-probe collect cap, read at call time, so
+    # patching it to 0 forces the aggregate here too.
+    from sqltask_spark.operators import index_fs
+
+    cap = index_fs.PROBE_CAP
+    rows = hashed.limit(cap + 1).collect()
+    if len(rows) <= cap:
         n = len(rows)
         x = s = 0
         for r in rows:
@@ -112,6 +118,30 @@ def content_fingerprint(df: DataFrame, cols: list[str]) -> str:
     x = (agg["x"] or 0) & 0xFFFFFFFFFFFFFFFF
     s = int(agg["s"] or 0) & 0xFFFFFFFFFFFFFFFF
     return f"{agg['n']}:{x:x}:{s:x}"
+
+
+def collect_local(df: DataFrame, cap: int) -> "DataFrame | None":
+    """``df``'s rows as a relation that plans as a ``LocalRelation``,
+    or ``None`` when ``df`` has more than ``cap`` rows. ONE bounded
+    collect, and the rows never leave the JVM: they come back as
+    ``Row`` objects and go straight into
+    ``SparkSession.createDataFrame(java.util.List[Row], schema)``, so
+    every type round-trips exactly as Spark converts it, without a
+    Python or Arrow conversion.
+
+    Everything that reads the result afterwards — projections,
+    filters and limits the optimizer folds into the local relation —
+    runs no Spark job, however often it is read. Use it where a small
+    relation is read several times on the driver's behalf (the CDC
+    sink: a content fingerprint, then MERGE's key collect, then the
+    write)."""
+    spark = df.sparkSession
+    rows = df.limit(cap + 1)._jdf.collectAsList()
+    if rows.size() > cap:
+        return None
+    return DataFrame(
+        spark._jsparkSession.createDataFrame(rows, df._jdf.schema()), spark
+    )
 
 
 def local_frame(
@@ -136,11 +166,16 @@ def local_frame(
     ``createDataFrame(list, schema)`` applies, so a value that does
     not fit its declared type, or a null in a non-nullable field,
     raises as it did there. A string column is stricter: Arrow rejects
-    a non-string value, where the pickled path stored its ``str()``."""
+    a non-string value, where the pickled path stored its ``str()``.
+    A naive ``datetime`` in a ``timestamp`` column is local wall time,
+    as it was there."""
+    from datetime import datetime, timezone
+
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import (
         StructType,
+        TimestampType,
         _make_type_verifier,
         _parse_datatype_string,
     )
@@ -153,6 +188,18 @@ def local_frame(
         verify(row)
     arrow_schema = to_arrow_schema(schema)
     columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    # a naive datetime is local wall time, as createDataFrame(list)
+    # reads it; Arrow takes any datetime's wall time as UTC, so hand it
+    # the UTC wall time
+    columns = [
+        [
+            v.astimezone(timezone.utc) if isinstance(v, datetime) else v
+            for v in c
+        ]
+        if isinstance(f.dataType, TimestampType)
+        else c
+        for c, f in zip(columns, schema.fields)
+    ]
     table = pa.Table.from_arrays(
         [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
         schema=arrow_schema,

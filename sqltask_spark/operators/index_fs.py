@@ -383,13 +383,20 @@ def _fold_stats(rows) -> dict | None:
     los = [r["lo"] for r in rows if r["lo"] is not None]
     if not los:
         return None
-    lo = min(los)
-    hi = max(r["hi"] for r in rows if r["hi"] is not None)
-    if isinstance(lo, bool) or not isinstance(lo, (int, str)):
-        return None
     words = [0] * ID_FILTER_WORDS
     for r in rows:
         words[int(r["w"])] = int(r["bits"])
+    return _stats_dict(
+        min(los), max(r["hi"] for r in rows if r["hi"] is not None), words
+    )
+
+
+def _stats_dict(lo, hi, words: list) -> dict | None:
+    """The generation stats dict for ids in ``[lo, hi]`` whose filter
+    bits are ``words`` — ``None`` unless the ids are int or str (bool
+    excluded): only their Python order is Spark's."""
+    if lo is None or isinstance(lo, bool) or not isinstance(lo, (int, str)):
+        return None
     stats = {"min_id": lo, "max_id": hi}
     set_bits = sum(
         bin(w & 0xFFFFFFFFFFFFFFFF).count("1") for w in words
@@ -406,6 +413,38 @@ def _fold_stats(rows) -> dict | None:
             "words": words,
         }
     return stats
+
+
+def observed_stats_aggs(id_col: str) -> list:
+    """The aggregates a write OBSERVES (``DataFrame.observe``) so that
+    :func:`stats_from_observed` can derive the written rows' stats
+    without reading them back: min and max of ``id_col`` and the
+    distinct values of each filter hash position — at most the
+    filter's 8192 bits each, however many rows the write holds. Null
+    ids keep their positions (``xxhash64(NULL)`` is the seed hash), as
+    in :func:`_stats_agg`."""
+    p0, p1 = filter_pos_cols(id_col)
+    return [
+        F.min(id_col).alias("lo"),
+        F.max(id_col).alias("hi"),
+        F.collect_set(p0).alias("p0"),
+        F.collect_set(p1).alias("p1"),
+    ]
+
+
+def stats_from_observed(obs: dict) -> dict | None:
+    """The stats dict of the rows a write observed with
+    :func:`observed_stats_aggs` — bit-identical to :func:`_stats_agg`
+    over the same rows, words included: a word with bit 63 set is the
+    negative long Spark's ``bit_or`` of ``shiftleft(1L, 63)`` yields."""
+    words = [0] * ID_FILTER_WORDS
+    for p in itertools.chain(obs["p0"], obs["p1"]):
+        words[p >> 6] |= 1 << (p & 63)
+    return _stats_dict(
+        obs["lo"],
+        obs["hi"],
+        [w - (1 << 64) if w >> 63 else w for w in words],
+    )
 
 
 def count_and_bounds(df, id_col: str) -> "tuple[int, dict | None]":
@@ -435,10 +474,12 @@ def count_and_bounds(df, id_col: str) -> "tuple[int, dict | None]":
 # exchange it avoids.
 SMALL_BATCH_CAP = 512
 
-# Collect cap for filter-probe positions (and MERGE's per-key rows,
-# which carry them): at most this many rows reach the driver; past it
-# the callers take their collect-free formulations. It bounds driver
-# memory, not literal counts, hence far above SMALL_BATCH_CAP.
+# Collect cap for filter-probe positions (and MERGE's source key rows,
+# which carry them, and the content fingerprint's per-row hashes): at
+# most this many rows reach the driver; past it the callers take their
+# aggregate formulations. It bounds driver memory, not literal counts,
+# hence far above SMALL_BATCH_CAP. Read at call time: patching it to 0
+# forces every one of those aggregates.
 PROBE_CAP = 65536
 
 
@@ -481,25 +522,12 @@ def stats_from_id_rows(rows: "list[tuple]") -> dict | None:
     ids = [i for i, _, _ in rows if i is not None]
     if not ids:
         return None
-    lo, hi = min(ids), max(ids)
-    if isinstance(lo, bool) or not isinstance(lo, (int, str)):
-        return None
     words = [0] * ID_FILTER_WORDS
     for _, p0, p1 in rows:
         for p in (p0, p1):
             if p is not None:
                 words[p >> 6] |= 1 << (p & 63)
-    stats = {"min_id": lo, "max_id": hi}
-    set_bits = sum(
-        bin(w & 0xFFFFFFFFFFFFFFFF).count("1") for w in words
-    )
-    if set_bits < int(0.9 * ID_FILTER_WORDS * 64):
-        stats["filter"] = {
-            "k": ID_FILTER_K,
-            "bits": ID_FILTER_WORDS * 64,
-            "words": words,
-        }
-    return stats
+    return _stats_dict(min(ids), max(ids), words)
 
 
 def keep_ids_filter(id_col: str, drop_ids: "list"):

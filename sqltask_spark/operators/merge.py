@@ -35,14 +35,22 @@ primitive the way Delta/Iceberg/Hudi do:
   ledger and manifest protocol (:func:`fold_parquet_table`), with no
   keyed MERGE of the state into itself.
 
-Scale notes: the only driver-side materializations are the
-touched-file list (bounded by the table's file count, the same thing
-the driver already holds to plan a scan), the per-file [min, max]
-statistics (file-count-bounded), and the 5-long counts row.
-Source-key uniqueness is validated with one aggregate (MERGE's
-standard multiple-rows-matched error). The source relation is
-persisted once and feeds the prune, the validation, the counts, and
-the rewrite. The matched-file search itself is bounded by DATA
+Scale notes: the driver-side materializations are the touched-file
+list (bounded by the table's file count, the same thing the driver
+already holds to plan a scan), the per-file [min, max] statistics
+(file-count-bounded), the counts row, and ONE bounded collect of the
+source's key projection (keys, delete flag, filter positions; at most
+:data:`~.index_fs.PROBE_CAP` rows). That collect, grouped on the
+driver with Spark's grouping equality, validates source-key
+uniqueness (MERGE's standard multiple-rows-matched error) and yields
+the prune bounds and probe positions; a source past the cap is
+validated with one aggregate instead. A source that plans as a local
+relation (the CDC sink's small epochs) is read at no job cost by every
+step; any other source is persisted once and feeds the prune, the
+validation, the counts, and the rewrite. A rewrite written as one
+file observes that file's statistics during the write instead of
+reading it back (:meth:`TableStore.write_files`). The matched-file
+search itself is bounded by DATA
 SKIPPING: when the table declares ``stats_col``, every commit
 records per-file [min, max] of that column in the manifest, and a
 merge first drops files whose range cannot intersect the batch —
@@ -61,7 +69,7 @@ from __future__ import annotations
 import json
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from sqltask_spark.data import local_frame
@@ -113,6 +121,13 @@ def _right_sized(df: DataFrame) -> DataFrame:
     )
     parts = -(-size // split)
     return df if parts >= 1 << 31 else df.coalesce(max(1, parts))
+
+
+def _one_partition(df: DataFrame) -> bool:
+    """True iff ``df``'s plan fixes ONE output partition before any job
+    runs: a ``coalesce(1)`` or ``repartition(1)`` at its root."""
+    plan = df._jdf.queryExecution().logical()
+    return plan.nodeName() == "Repartition" and plan.numPartitions() == 1
 
 
 def _schema_of(manifest: dict):
@@ -271,30 +286,47 @@ class TableStore(index_fs.GenerationStore):
     ) -> "tuple[list[str], dict]":
         """Write ``df`` as the fresh generation ``gen`` through the
         store's write path. Returns its committed file names and, when
-        ``m`` declares ``stats_col``, their stats entries: ONE skinny
-        aggregate over the new files, :func:`~.index_fs._stats_agg`
-        grouped by data file."""
+        ``m`` declares ``stats_col``, their stats entries.
+
+        When ``df``'s plan already fixes ONE output partition (what
+        :func:`_right_sized` makes of a small rewrite), the write
+        itself observes the new file's stats
+        (:func:`~.index_fs.observed_stats_aggs`): no job reads the
+        file back. Otherwise — several files, or a write that split
+        its one partition into several files — ONE skinny aggregate
+        over the new files derives them, :func:`~.index_fs._stats_agg`
+        grouped by data file. Both give identical entries."""
         gen = gen or self._allocator(m)()
+        col = m.get("stats_col")
+        observed = None
+        if col is not None and _one_partition(df):
+            observed = Observation()
+            df = df.observe(observed, *index_fs.observed_stats_aggs(col))
         self.write(df, self.gen_rel(gen))
         files = [
             f"{gen}/{n}"
             for n in index_fs.list_names(self.spark, self.gen_path(gen))
             if n.endswith(".parquet")
         ]
-        col = m.get("stats_col")
         if col is None or not files:
             return files, {}
-        per_file = index_fs._stats_agg(
-            self.read(m, files).select(
-                F.col("_metadata.file_path").alias("__file"), col
-            ),
-            col,
-            by="__file",
-        )
+        if observed is not None and len(files) == 1:
+            per_file = {files[0]: index_fs.stats_from_observed(observed.get)}
+        else:
+            per_file = {
+                _rel_of(uri): st
+                for uri, st in index_fs._stats_agg(
+                    self.read(m, files).select(
+                        F.col("_metadata.file_path").alias("__file"), col
+                    ),
+                    col,
+                    by="__file",
+                ).items()
+            }
         return files, {
-            _rel_of(uri): [st["min_id"], st["max_id"]]
+            rel: [st["min_id"], st["max_id"]]
             + ([st["filter"]["words"]] if "filter" in st else [])
-            for uri, st in per_file.items()
+            for rel, st in per_file.items()
             if st
         }
 
@@ -534,55 +566,56 @@ def merge_into_parquet(
         m, [f for f in src.schema.fields if f.name != "__is_del"],
         "MERGE source",
     )
-    src = src.persist()
+    # a source that plans as a local relation (the CDC sink's small
+    # epochs) is driver-resident already: every read below folds into
+    # it, and persisting it would only cost a job
+    local = _is_local(src)
+    if not local:
+        src = src.persist()
     try:
         files = m.get("files", [])
         stats_col = m.get("stats_col")
 
-        # ONE bounded collect of the per-key aggregate serves three
-        # formerly separate actions: the MERGE duplicate-key check,
-        # the batch's [lo, hi] key bounds for file-range pruning, and
-        # the keys' filter-probe positions for per-file Bloom pruning
-        # (the bounds/positions are per-KEY quantities — for the key
-        # column, rows ≡ keys once the dup check passes, so driver-
-        # side derivation is exact). A batch past the collect cap
-        # falls back to the aggregate-job formulation; certificates
-        # and CDC epochs — the callers that pay per-job overhead
-        # hardest — stay under it by orders of magnitude.
-        per_key = src.groupBy(*key_cols).agg(
-            F.count(F.lit(1)).alias("__c"),
-            # per-key delete flag (never null — coalesced at entry;
-            # max over the single row each key has once the dup check
-            # passes): feeds the driver-side decide fast path below
-            F.max(F.col("__is_del").cast("int")).alias("__d"),
-        )
+        # ONE bounded collect of the source's key projection — keys,
+        # delete flag and, when the table prunes by filter, the keys'
+        # filter-probe positions — grouped on the driver with Spark's
+        # grouping equality (:func:`_exact`). It serves the MERGE
+        # duplicate-key check, the per-key delete flags of the decide
+        # fast path, the batch's [lo, hi] key bounds for file-range
+        # pruning and the positions for per-file Bloom pruning (for
+        # the key column, rows ≡ keys once the dup check passes). Over
+        # a local relation the collect runs no job. A source past the
+        # collect cap keeps the aggregate formulation.
         probe_on = bool(files) and stats_col in key_cols
         extra = []
         if probe_on:
             p0, p1 = index_fs.filter_pos_cols(stats_col)
             extra = [p0.alias("__p0"), p1.alias("__p1")]
         key_rows = (
-            per_key.select(*key_cols, "__c", "__d", *extra)
+            src.select(*key_cols, "__is_del", *extra)
             .limit(index_fs.PROBE_CAP + 1)
             .collect()
         )
         capped = len(key_rows) > index_fs.PROBE_CAP
         if capped:
             dup = (
-                per_key.filter(F.col("__c") > 1).limit(1).collect()
+                src.groupBy(*key_cols)
+                .agg(F.count(F.lit(1)).alias("__c"))
+                .filter(F.col("__c") > 1)
+                .limit(1)
+                .collect()
             )
             if dup:
-                raise ValueError(
-                    f"MERGE source has multiple rows for key "
-                    f"{[dup[0][k] for k in key_cols]}"
-                )
+                _raise_duplicate([dup[0][k] for k in key_cols])
         else:
-            dups = [r for r in key_rows if r["__c"] > 1]
-            if dups:
-                raise ValueError(
-                    f"MERGE source has multiple rows for key "
-                    f"{[dups[0][k] for k in key_cols]}"
-                )
+            seen = set()
+            for r in key_rows:
+                k = _exact(tuple(r[c] for c in key_cols))
+                if k in seen:
+                    _raise_duplicate(
+                        [_grouped(r[c]) for c in key_cols]
+                    )
+                seen.add(k)
 
         src_keys = src.select(*key_cols).distinct()
 
@@ -689,24 +722,22 @@ def merge_into_parquet(
             # row whose key the batch carries is matched (null keys
             # never match on either side); a batch key with no target
             # row is source-only
-            del_of = {r[kc]: bool(r["__d"]) for r in key_rows}
+            del_of = {r[kc]: r["__is_del"] for r in key_rows}
             matched_keys = {r["__k"] for r in hit_rows}
             counts_row = {
                 "updated": sum(
                     1 for r in hit_rows if not del_of[r["__k"]]
                 ),
-                "deleted": sum(
-                    1 for r in hit_rows if del_of[r["__k"]]
-                ),
+                "deleted": sum(1 for r in hit_rows if del_of[r["__k"]]),
                 "inserted": sum(
-                    int(r["__c"])
+                    1
                     for r in key_rows
-                    if r[kc] not in matched_keys and not r["__d"]
+                    if r[kc] not in matched_keys and not r["__is_del"]
                 ),
                 "noop_deletes": sum(
-                    int(r["__c"])
+                    1
                     for r in key_rows
-                    if r[kc] not in matched_keys and r["__d"]
+                    if r[kc] not in matched_keys and r["__is_del"]
                 ),
             }
             touched = {_rel_of(r["__file"]) for r in hit_rows}
@@ -753,17 +784,13 @@ def merge_into_parquet(
             ).collect()[0]
             touched = {_rel_of(u) for u in counts_row["touched"] or []}
             touched_rels = [rel for rel in candidates if rel in touched]
-        elif inline_keys is not None:
-            # everything stats-pruned + keys in hand: zero jobs
+        elif not capped:
+            # nothing to match against + keys in hand: zero jobs
             counts_row = {
                 "updated": 0,
                 "deleted": 0,
-                "inserted": sum(
-                    int(r["__c"]) for r in key_rows if not r["__d"]
-                ),
-                "noop_deletes": sum(
-                    int(r["__c"]) for r in key_rows if r["__d"]
-                ),
+                "inserted": sum(1 for r in key_rows if not r["__is_del"]),
+                "noop_deletes": sum(1 for r in key_rows if r["__is_del"]),
             }
         else:
             counts_row = src.agg(
@@ -838,7 +865,8 @@ def merge_into_parquet(
             "seq": seq,
         }
     finally:
-        src.unpersist()
+        if not local:
+            src.unpersist()
 
 
 def fold_parquet_table(
@@ -892,14 +920,36 @@ _NAN = object()
 
 
 def _exact(v):
-    """``v`` normalised so that Python ``==`` is Spark's ``<=>``:
-    NaN equals NaN, through arrays and structs (``Row`` is a tuple).
-    Nulls (``None``) and -0.0 == 0.0 already compare so."""
+    """``v`` normalised so that Python ``==`` and ``hash`` are Spark's
+    ``<=>`` and its grouping equality: NaN equals NaN, through arrays
+    and structs (``Row`` is a tuple), which become (hashable) tuples;
+    binary values become ``bytes``. Nulls (``None``) and -0.0 == 0.0
+    already compare and hash so."""
     if isinstance(v, float):
         return _NAN if v != v else v
     if isinstance(v, (list, tuple)):
         return tuple(_exact(x) for x in v)
+    if isinstance(v, bytearray):
+        return bytes(v)
     return v
+
+
+def _grouped(v):
+    """``v`` as Spark's grouping reports its group: -0.0 groups with
+    0.0 and shows as 0.0."""
+    return 0.0 if isinstance(v, float) and v == 0 else v
+
+
+def _raise_duplicate(key: list):
+    raise ValueError(f"MERGE source has multiple rows for key {key}")
+
+
+def _is_local(df: DataFrame) -> bool:
+    """True iff ``df`` optimizes to a local relation: driver-resident
+    rows, which every projection, filter and limit folds into — no
+    Spark job to read them."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan.nodeName() == "LocalRelation"
 
 
 def table_changes(

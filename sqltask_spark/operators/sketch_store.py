@@ -29,10 +29,10 @@ state as ONE keyed aggregate over stored ∪ batch, unique per key by
 construction, and commit it as one snapshot write
 (:func:`~sqltask_spark.operators.merge.fold_parquet_table`): no keyed
 MERGE of the state into itself, no match search, no counts. The
-heavy-hitter and KMV stores delete evicted rows, so they stay on
-:func:`~sqltask_spark.operators.merge.merge_into_parquet`. The
-full-state rewrite per update is deliberate and bounded: the HLL
-state is at most groups × 256 rows.
+heavy-hitter and KMV folds and the Bloom and histogram rebuilds
+commit their complete next state the same way: a row they evict is
+simply not in it. The full-state rewrite per update is deliberate and
+bounded: the HLL state is at most groups × 256 rows.
 
 Same register/estimator discipline as the oracled
 ``source_distinct_hll`` catalog entry (integer-only: rank from
@@ -377,16 +377,15 @@ def rebuild_bloom_store(
     member set — the only move when saturation outgrows ``m_bits``
     (positions are taken mod the frozen capacity, so old bitmaps
     cannot be re-hashed; same frozen-parameter rule as the IVF
-    quantizer, same rebuild answer). One ATOMIC merge commit: the
-    new capacity's word rows and meta row upsert in, stale words
-    delete out — readers see the old store until the manifest lands,
-    the new one after, never a mix (a mixed read would produce false
-    NEGATIVES, the one error class a Bloom filter must never make).
+    quantizer, same rebuild answer). One ATOMIC commit: the new
+    capacity's word rows and meta row replace the store's whole
+    state in one snapshot write
+    (:func:`~sqltask_spark.operators.merge.fold_parquet_table`) —
+    readers see the old store until the manifest lands, the new one
+    after, never a mix (a mixed read would produce false NEGATIVES,
+    the one error class a Bloom filter must never make).
     """
-    from sqltask_spark.operators.merge import (
-        merge_into_parquet,
-        read_parquet_table,
-    )
+    from sqltask_spark.operators.merge import fold_parquet_table
 
     meta = local_frame(
         spark,
@@ -398,16 +397,7 @@ def rebuild_bloom_store(
         .select(F.col("word").cast("long"), F.col("bits"))
         .unionByName(meta)
     )
-    stale = (
-        read_parquet_table(spark, path)
-        .select("word")
-        .join(desired.select("word"), "word", "left_anti")
-        .select("word", F.lit(0).cast("long").alias("bits"))
-    )
-    src = desired.withColumn("__del", F.lit(False)).unionByName(
-        stale.withColumn("__del", F.lit(True))
-    )
-    merge_into_parquet(spark, path, src, ["word"], delete_col="__del")
+    fold_parquet_table(spark, path, lambda stored: desired)
 
 
 def bloom_probe(
@@ -828,38 +818,30 @@ def rebuild_hist_store(
     """Rebuild the store at a NEW frozen width from the driving value
     relation — the only move when the top bucket saturates (buckets
     cannot be split after the fact; same frozen-parameter rule as
-    Bloom capacity / the IVF quantizer). One ATOMIC merge commit:
-    new-layout cells + meta upsert in, stale (g, b) cells delete out
-    — readers see the old histogram until the manifest lands, never
-    a mixed-width state."""
-    from sqltask_spark.operators.merge import (
-        merge_into_parquet,
-        read_parquet_table,
-    )
+    Bloom capacity / the IVF quantizer). The new-layout cells and meta
+    rows replace the store's whole state in one snapshot write
+    (:func:`~sqltask_spark.operators.merge.fold_parquet_table`) —
+    readers see the old histogram until the manifest lands, never a
+    mixed-width state."""
+    from sqltask_spark.operators.merge import fold_parquet_table
 
-    _, n_buckets = read_hist_meta(spark, path)
-    meta = local_frame(
-        spark,
-        [
-            (_HIST_META_GROUP, 0, int(bucket_width_new)),
-            (_HIST_META_GROUP, 1, int(n_buckets)),
-        ],
-        "g string, b long, cnt long",
-    )
-    desired = hist_cell_rows(
-        members, group_col, value_col, bucket_width_new, n_buckets,
-        weight_col=weight_col,
-    ).unionByName(meta)
-    stale = (
-        read_parquet_table(spark, path)
-        .select("g", "b")
-        .join(desired.select("g", "b"), ["g", "b"], "left_anti")
-        .select("g", "b", F.lit(0).cast("long").alias("cnt"))
-    )
-    src = desired.withColumn("__del", F.lit(False)).unionByName(
-        stale.withColumn("__del", F.lit(True))
-    )
-    merge_into_parquet(spark, path, src, ["g", "b"], delete_col="__del")
+    # the bucket count carries over from the same committed rows
+    def fold(stored):
+        _, n_buckets = _hist_meta(stored, path)
+        meta = local_frame(
+            spark,
+            [
+                (_HIST_META_GROUP, 0, int(bucket_width_new)),
+                (_HIST_META_GROUP, 1, int(n_buckets)),
+            ],
+            "g string, b long, cnt long",
+        )
+        return hist_cell_rows(
+            members, group_col, value_col, bucket_width_new, n_buckets,
+            weight_col=weight_col,
+        ).unionByName(meta)
+
+    fold_parquet_table(spark, path, fold)
 
 
 # ---------------------------------------------------------------------------
@@ -898,10 +880,23 @@ def _mg_counts(
         if weight_col is not None
         else F.lit(1).cast("long")
     )
+    item = F.col(item_col).cast("string")
+    # a user item equal to a sentinel would share its (g, item) key
+    # with the group's decrement or total row: fail the write loudly
+    # (no extra job — the check runs inside the fold's own plan)
+    item = F.when(
+        item.isin(_MG_DECR_ITEM, _MG_TOTAL_ITEM),
+        F.raise_error(
+            F.concat(
+                F.lit("MG store: item "), item,
+                F.lit(" is a reserved sentinel value"),
+            )
+        ),
+    ).otherwise(item)
     return (
         values.select(
             F.col(group_col).cast("string").alias("g"),
-            F.col(item_col).cast("string").alias("item"),
+            item.alias("item"),
             w.alias("w"),
         )
         .filter(F.col("item").isNotNull())
@@ -914,8 +909,8 @@ def _mg_fold(
     counters: DataFrame, decr: DataFrame, total: DataFrame,
     batch: DataFrame, k: int,
 ):
-    """(surviving counters ∪ updated decr ∪ updated total rows,
-    dropped keys) after one mergeable-summaries step.
+    """The surviving counters ∪ updated decr ∪ updated total rows
+    after one mergeable-summaries step.
     ``counters``/``batch`` are (g, item, cnt); ``decr``/``total``
     are (g, cnt) of prior decrement totals / total folded mass
     (absent groups = 0). Tracking total mass exactly is what makes
@@ -933,10 +928,9 @@ def _mg_fold(
     that CAN have a (k+1)-th counter — state alone holds ≤ k — owns a
     decr row to absorb ``_d``; zero-valued decr rows are dropped on
     output, which is exactly the old join's emission set. ``_sp``
-    tags provenance so a user item equal to a sentinel string stays
-    in the counter flow (and still fails loudly at the MERGE
-    duplicate-key check) instead of silently summing into the
-    total/decr rows; ``_sp`` ordering ranks counters ahead of the
+    tags provenance so a counter never sums into the total/decr rows
+    (a user item equal to a sentinel string fails in
+    :func:`_mg_counts`); ``_sp`` ordering ranks counters ahead of the
     meta rows so ``_rn == k+1 ∧ _sp == 0`` is the (k+1)-th counter.
     """
     from pyspark.sql import Window
@@ -1004,17 +998,13 @@ def _mg_fold(
         .cast("long")
         .alias("cnt"),
     )
-    state = adjusted.filter(
+    return adjusted.filter(
         # counters/decr emit only positive rows (a zero decr row means
         # "no decrement yet" = the row's absence, the old join's
         # behavior); total rows emit unconditionally like before
         ((F.col("_sp") != 1) & (F.col("cnt") > 0))
         | (F.col("_sp") == 1)
     ).select("g", "item", "cnt")
-    dropped = adjusted.filter(
-        (F.col("_sp") == 0) & (F.col("cnt") <= 0)
-    ).select("g", "item")
-    return state, dropped
 
 
 def create_mg_store(
@@ -1040,7 +1030,7 @@ def create_mg_store(
     batch = _mg_counts(values, group_col, item_col, weight_col)
     empty = local_frame(spark, [], "g string, item string, cnt long")
     empty_gc = local_frame(spark, [], "g string, cnt long")
-    state, _ = _mg_fold(empty, empty_gc, empty_gc, batch, int(k))
+    state = _mg_fold(empty, empty_gc, empty_gc, batch, int(k))
     meta = local_frame(
         spark,
         [(_MG_META_GROUP, "k", int(k))],
@@ -1058,16 +1048,18 @@ def read_mg_k(
     like the histogram layout — same torn-read hazard)."""
     from sqltask_spark.operators.merge import read_parquet_table
 
-    rows = (
-        read_parquet_table(spark, path, as_of=as_of)
-        .filter(
-            (F.col("g") == _MG_META_GROUP) & (F.col("item") == "k")
-        )
-        .collect()
-    )
-    if not rows:
+    return _mg_k(read_parquet_table(spark, path, as_of=as_of), path)
+
+
+def _mg_k(rows: DataFrame, path: str) -> int:
+    """The frozen ``k`` from the meta row of the store rows ``rows`` —
+    one collect."""
+    meta = rows.filter(
+        (F.col("g") == _MG_META_GROUP) & (F.col("item") == "k")
+    ).collect()
+    if not meta:
         raise ValueError(f"no MG meta row in store at {path}")
-    return int(rows[0]["cnt"])
+    return int(meta[0]["cnt"])
 
 
 def update_mg_store(
@@ -1080,43 +1072,41 @@ def update_mg_store(
     weight_col: "str | None" = None,
 ) -> dict:
     """Fold a batch into the store — counter sums are NOT idempotent,
-    so the batch LEDGER is mandatory (the histogram rule). One MERGE
-    commit: surviving counters and the decrement row upsert in,
-    counters the decrement zeroed out delete out."""
+    so the batch LEDGER is mandatory (the histogram rule). The
+    surviving counters, the decrement and total rows and the meta row
+    are the store's complete next state, committed as one snapshot
+    write (:func:`~sqltask_spark.operators.merge.fold_parquet_table`):
+    counters the decrement zeroed out are simply not in it."""
     if not batch_id:
         raise ValueError(
             "update_mg_store requires a batch_id: the counter fold is"
             " not idempotent — an unledgered redelivery double-counts"
         )
-    from sqltask_spark.operators.merge import (
-        merge_into_parquet,
-        read_parquet_table,
-    )
+    from sqltask_spark.operators.merge import fold_parquet_table
 
-    k = read_mg_k(spark, path)
-    stored = read_parquet_table(spark, path)
-    counters = stored.filter(
-        (F.col("g") != _MG_META_GROUP)
-        & ~F.col("item").isin(_MG_DECR_ITEM, _MG_TOTAL_ITEM)
-    )
-    decr = stored.filter(F.col("item") == _MG_DECR_ITEM).select(
-        "g", "cnt"
-    )
-    total = stored.filter(F.col("item") == _MG_TOTAL_ITEM).select(
-        "g", "cnt"
-    )
     batch = _mg_counts(values, group_col, item_col, weight_col)
-    state, dropped = _mg_fold(counters, decr, total, batch, k)
-    src = state.withColumn("_del", F.lit(False)).unionByName(
-        dropped.select(
-            "g", "item", F.lit(0).cast("long").alias("cnt"),
-            F.lit(True).alias("_del"),
+
+    # ``k`` comes from the same committed rows
+    def fold(stored):
+        # a null group is a group like any other (null-safe tests)
+        counters = stored.filter(
+            ~F.col("g").eqNullSafe(_MG_META_GROUP)
+            & ~F.col("item").isin(_MG_DECR_ITEM, _MG_TOTAL_ITEM)
         )
-    )
-    return merge_into_parquet(
-        spark, path, src, ["g", "item"],
-        batch_id=batch_id, delete_col="_del",
-    )
+        decr = stored.filter(F.col("item") == _MG_DECR_ITEM).select(
+            "g", "cnt"
+        )
+        total = stored.filter(F.col("item") == _MG_TOTAL_ITEM).select(
+            "g", "cnt"
+        )
+        state = _mg_fold(counters, decr, total, batch, _mg_k(stored, path))
+        return state.unionByName(
+            stored.filter(
+                (F.col("g") == _MG_META_GROUP) & (F.col("item") == "k")
+            )
+        )
+
+    return fold_parquet_table(spark, path, fold, batch_id=batch_id)
 
 
 def read_mg_topk(
@@ -1294,16 +1284,18 @@ def read_kmv_k(
     """The store's frozen ``k`` (meta row; travels with ``as_of``)."""
     from sqltask_spark.operators.merge import read_parquet_table
 
-    rows = (
-        read_parquet_table(spark, path, as_of=as_of)
-        .filter(
-            (F.col("g") == _KMV_META_GROUP) & (F.col("item") == "k")
-        )
-        .collect()
-    )
-    if not rows:
+    return _kmv_k(read_parquet_table(spark, path, as_of=as_of), path)
+
+
+def _kmv_k(rows: DataFrame, path: str) -> int:
+    """The frozen ``k`` from the meta row of the store rows ``rows`` —
+    one collect."""
+    meta = rows.filter(
+        (F.col("g") == _KMV_META_GROUP) & (F.col("item") == "k")
+    ).collect()
+    if not meta:
         raise ValueError(f"no KMV meta row in store at {path}")
-    return int(rows[0]["h"])
+    return int(meta[0]["h"])
 
 
 def update_kmv_store(
@@ -1314,19 +1306,20 @@ def update_kmv_store(
     key_col: str,
     batch_id: "str | None" = None,
 ) -> dict:
-    """Fold a batch: union the stored hashes with the batch's
-    bottom-k, keep the k smallest per group, delete evictions — one
-    MERGE commit. Idempotent AND commutative (bottom-k of unions),
-    so the ledger is optional exactly as for the HLL registers."""
-    from sqltask_spark.operators.merge import (
-        merge_into_parquet,
-        read_parquet_table,
-    )
+    """Fold a batch: union the stored hashes with the batch's keys and
+    keep the k smallest per group — with the meta row, the store's
+    complete next state, committed as one snapshot write
+    (:func:`~sqltask_spark.operators.merge.fold_parquet_table`), so
+    evicted rows simply drop out. Idempotent AND commutative (bottom-k
+    of unions), so the ledger is optional exactly as for the HLL
+    registers."""
+    from sqltask_spark.operators.merge import fold_parquet_table
 
-    k = read_kmv_k(spark, path)
-    stored = read_parquet_table(spark, path).filter(
-        F.col("g") != _KMV_META_GROUP
-    )
+    batch = values.select(
+        F.col(group_col).cast("string").alias("g"),
+        F.col(key_col).cast("string").alias("item"),
+    ).filter(F.col("item").isNotNull())
+
     # Fused fold (r12 session 4, guide §2.4): the batch's raw keys
     # union straight into the state dedup — ONE (g, item) distinct
     # (map-side combine bounds the shuffle exactly like the former
@@ -1337,31 +1330,22 @@ def update_kmv_store(
     # bottom-k(stored ∪ batch bottom-k) — the bottom-k algebra the
     # docstring already relies on. ``h`` is a pure function of item,
     # recomputed post-dedup (identical values, stored rows included).
-    combined = (
-        stored.select("g", "item")
-        .unionByName(
-            values.select(
-                F.col(group_col).cast("string").alias("g"),
-                F.col(key_col).cast("string").alias("item"),
-            ).filter(F.col("item").isNotNull())
+    # ``k`` comes from the same committed rows.
+    def fold(stored):
+        # a null group is a group like any other (null-safe test)
+        is_meta = F.col("g").eqNullSafe(_KMV_META_GROUP)
+        combined = (
+            stored.filter(~is_meta)
+            .select("g", "item")
+            .unionByName(batch)
+            .distinct()
+            .withColumn("h", kmv_hash("item"))
         )
-        .distinct()
-        .withColumn("h", kmv_hash("item"))
-    )
-    state = _kmv_bottom_k(combined, k)
-    dropped = stored.select("g", "item").join(
-        state.select("g", "item"), ["g", "item"], "left_anti"
-    )
-    src = state.withColumn("_del", F.lit(False)).unionByName(
-        dropped.select(
-            "g", "item", F.lit(0).cast("long").alias("h"),
-            F.lit(True).alias("_del"),
+        return _kmv_bottom_k(combined, _kmv_k(stored, path)).unionByName(
+            stored.filter(is_meta)
         )
-    )
-    return merge_into_parquet(
-        spark, path, src, ["g", "item"],
-        batch_id=batch_id, delete_col="_del",
-    )
+
+    return fold_parquet_table(spark, path, fold, batch_id=batch_id)
 
 
 def read_kmv_state(

@@ -53,6 +53,16 @@ def merge_upsert_sink(
     signal that a fresh checkpoint or a second query is reusing epoch
     ids; give each logical stream its own ``app_id``.
 
+    One driver round trip per small epoch: the deduplicated, projected
+    epoch is collected once, bounded at
+    :data:`~sqltask_spark.operators.index_fs.SMALL_BATCH_CAP` + 1 rows.
+    An epoch under the cap continues as a local relation
+    (:func:`~sqltask_spark.data.collect_local`), so the fingerprint and
+    MERGE's key collect fold into it and run no Spark job; the epoch
+    then runs MERGE's hit scan and its write, whose new file's stats
+    the write itself observes. An epoch past the cap stays a plan and
+    pays one more bounded collect for its fingerprint.
+
     Single-writer, like the table itself: the manifest protocol
     already makes concurrent writer collisions a loud error.
 
@@ -119,10 +129,13 @@ def merge_upsert_sink(
         if delete_col is not None:
             keep.append(delete_col)
         src = src.select(*keep)
-        # Order-independent content fingerprint (one cheap pass over
-        # a batch that is about to be merged anyway).
-        from sqltask_spark.data import content_fingerprint
+        # the epoch's one driver round trip (see the docstring)
+        from sqltask_spark.data import collect_local, content_fingerprint
+        from sqltask_spark.operators import index_fs
 
+        local = collect_local(src, index_fs.SMALL_BATCH_CAP)
+        if local is not None:
+            src = local
         fingerprint = content_fingerprint(src, keep)
         prefix = f"{app_id}:epoch-{epoch_id}"
         ledger_id = f"{prefix}#{fingerprint}"

@@ -1,11 +1,15 @@
 """Driver-built relations plan as Arrow local relations: building and
 collecting them runs no Spark job, their declared schema is kept
-exactly, and no operator builds one from a pickled Python list."""
+exactly, and no operator (nor a typed in-memory source) builds one
+from a pickled Python list."""
 
 from __future__ import annotations
 
 import ast
 import pathlib
+import time
+from datetime import date, datetime
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -22,6 +26,7 @@ from sqltask_spark.operators.merge import (
     read_parquet_table,
     read_parquet_table_keys,
 )
+from sqltask_spark.sources.memory import dict_source, list_source
 
 PACKAGE = pathlib.Path(__file__).resolve().parents[1] / "sqltask_spark"
 
@@ -104,6 +109,75 @@ def test_local_frame_ignores_the_arrow_conf(spark, jobs):
             assert built.n == 0 and [r.k for r in got] == [3, 4]
     finally:
         spark.conf.set(key, before)
+
+
+# -- in-memory sources ------------------------------------------------------
+
+SOURCE_COLUMNS = ["id", "ts", "d", "amt", "s"]
+SOURCE_DDL = "id bigint, ts timestamp, d date, amt decimal(12,4), s string"
+SOURCE_ROWS = [
+    (1, datetime(2024, 3, 10, 12, 30, 15, 123456), date(2024, 2, 29),
+     Decimal("12345.6789"), None),
+    (2, None, None, None, "x"),
+    (3, datetime(1969, 12, 31, 23, 59, 59, 999999), date(1900, 1, 1),
+     Decimal("-0.0001"), ""),
+]
+
+
+def _sources(spark):
+    return {
+        "list": list_source(spark, SOURCE_COLUMNS, SOURCE_ROWS, SOURCE_DDL),
+        "dict": dict_source(
+            spark, [dict(zip(SOURCE_COLUMNS, r)) for r in SOURCE_ROWS],
+            SOURCE_DDL,
+        ),
+    }
+
+
+@pytest.fixture(params=["UTC", "America/New_York"])
+def python_tz(request, monkeypatch):
+    """The driver process's local time zone (the session's stays UTC)."""
+    monkeypatch.setenv("TZ", request.param)
+    time.tzset()
+    yield request.param
+    monkeypatch.undo()
+    time.tzset()
+
+
+@pytest.mark.parametrize("kind", ["list", "dict"])
+def test_memory_sources_round_trip_typed_values(spark, jobs, kind, python_tz):
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    with jobs() as built:
+        df = _sources(spark)[kind]
+        got = df.collect()
+    assert built.n == 0
+    assert [tuple(r) for r in got] == SOURCE_ROWS
+    assert df.schema.simpleString() == (
+        "struct<id:bigint,ts:timestamp,d:date,amt:decimal(12,4),s:string>"
+    )
+    # the stored instants and their UTC rendering are those the pickled
+    # createDataFrame(list, schema) path stores: a naive datetime is
+    # local wall time there too
+    def instants(frame):
+        return frame.select(
+            "id", F.unix_micros("ts"), F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS")
+        ).orderBy("id").collect()
+
+    assert instants(df) == instants(spark.createDataFrame(SOURCE_ROWS, SOURCE_DDL))
+
+
+def test_dict_source_reads_rows_by_field_name(spark):
+    df = dict_source(spark, [{"b": "x", "a": 1}, {"a": 2}], "a bigint, b string")
+    assert [tuple(r) for r in df.collect()] == [(1, "x"), (2, None)]
+
+
+@pytest.mark.parametrize("kind", ["list", "dict"])
+def test_memory_sources_reject_an_int_in_a_string_column(spark, kind):
+    with pytest.raises(Exception):
+        if kind == "list":
+            list_source(spark, ["k", "s"], [(1, "a"), (2, 3)], "k bigint, s string")
+        else:
+            dict_source(spark, [{"k": 1, "s": 3}], "k bigint, s string")
 
 
 # -- the table store's driver-built relations --------------------------------

@@ -156,3 +156,148 @@ def test_commit_between_read_and_commit_raises(spark, tmp_path):
     m = index_fs.read_manifest(spark, path)
     assert m["_seq"] == 1 and m["batches"] == ["other"]
     assert {r[2] for r in _rows(spark, path)} == {24}
+
+
+# -- the evicting folds and the rebuilds ------------------------------------
+
+
+def _null_first(row):
+    return tuple((v is not None, v) for v in row)
+
+
+def _nullable_rows(spark, path):
+    """:func:`_rows` for states with null groups."""
+    rows = mg.read_parquet_table(spark, path).collect()
+    return sorted((tuple(r) for r in rows), key=_null_first)
+
+
+@pytest.fixture
+def no_merge(monkeypatch):
+    """Fail any MERGE: these writers commit one snapshot instead."""
+
+    def merge_into_parquet(*a, **kw):
+        raise AssertionError("a snapshot writer ran a MERGE")
+
+    monkeypatch.setattr(mg, "merge_into_parquet", merge_into_parquet)
+
+
+def _mg_step(counters, decr, total, batch, k):
+    """One mergeable-summaries step on plain dicts — the reference the
+    store's fold must reproduce: add the batch counts, subtract each
+    group's (k+1)-th largest counter, keep the positive ones."""
+    counters = dict(counters)
+    for key, c in batch.items():
+        counters[key] = counters.get(key, 0) + c
+    decr, total = dict(decr), dict(total)
+    for g in {g for g, _ in batch}:
+        total[g] = total.get(g, 0) + sum(c for (h, _), c in batch.items() if h == g)
+        ranked = sorted(
+            ((-c, item) for (h, item), c in counters.items() if h == g)
+        )
+        d = -ranked[k][0] if len(ranked) > k else 0
+        if d:
+            decr[g] = decr.get(g, 0) + d
+            for (h, item), c in list(counters.items()):
+                if h == g:
+                    counters[(h, item)] = c - d
+    counters = {key: c for key, c in counters.items() if c > 0}
+    return counters, decr, total
+
+
+def test_mg_fold_commits_the_reference_state(spark, tmp_path, no_merge):
+    def counts(rows):
+        out = {}
+        for g, item in rows:
+            out[(g, item)] = out.get((g, item), 0) + 1
+        return out
+
+    first = [("a", f"x{i % 4}") for i in range(10)] + [(None, "y")] * 2
+    second = [("a", f"x{i % 6}") for i in range(9)] + [("b", "z")] * 3
+    second += [(None, "y"), (None, "w")]
+    path = str(tmp_path / "mg")
+    ss.create_mg_store(
+        spark.createDataFrame(first, "g string, t string"), path, "g", "t",
+        k=2, batch_id="b0",
+    )
+    stored = _nullable_rows(spark, path)
+    counters = {
+        (g, it): c for g, it, c in stored
+        if g != ss._MG_META_GROUP
+        and it not in (ss._MG_DECR_ITEM, ss._MG_TOTAL_ITEM)
+    }
+    decr = {g: c for g, it, c in stored if it == ss._MG_DECR_ITEM}
+    total = {g: c for g, it, c in stored if it == ss._MG_TOTAL_ITEM}
+
+    out = ss.update_mg_store(
+        spark, path, spark.createDataFrame(second, "g string, t string"),
+        "g", "t", "b1",
+    )
+
+    assert out["skipped"] is False
+    c2, d2, t2 = _mg_step(counters, decr, total, counts(second), 2)
+    want = (
+        [(g, it, c) for (g, it), c in c2.items()]
+        + [(g, ss._MG_DECR_ITEM, c) for g, c in d2.items()]
+        + [(g, ss._MG_TOTAL_ITEM, c) for g, c in t2.items()]
+        + [(ss._MG_META_GROUP, "k", 2)]
+    )
+    assert _nullable_rows(spark, path) == sorted(want, key=_null_first)
+    # the replay is a ledger hit: nothing read, nothing committed
+    seq = index_fs.read_manifest(spark, path)["_seq"]
+    assert ss.update_mg_store(spark, path, spark.createDataFrame(second, "g string, t string"),
+                              "g", "t", "b1")["skipped"] is True
+    assert index_fs.read_manifest(spark, path)["_seq"] == seq
+
+
+def test_mg_sentinel_item_fails_the_fold(spark, tmp_path):
+    path = str(tmp_path / "mg")
+    rows = spark.createDataFrame([("a", "x")], "g string, t string")
+    ss.create_mg_store(rows, path, "g", "t", k=2, batch_id="b0")
+    m = index_fs.read_manifest(spark, path)
+    bad = spark.createDataFrame([("a", ss._MG_TOTAL_ITEM)], "g string, t string")
+    with pytest.raises(Exception, match="reserved sentinel"):
+        ss.update_mg_store(spark, path, bad, "g", "t", "b1")
+    assert index_fs.read_manifest(spark, path) == m
+
+
+def test_kmv_fold_keeps_the_bottom_k_and_the_meta_row(spark, tmp_path, no_merge):
+    k = 3
+    first = [("a", f"k{i}") for i in range(5)] + [(None, "n1")]
+    second = [("a", f"k{i}") for i in range(3, 9)] + [("b", "k1"), (None, "n2")]
+    path = str(tmp_path / "kmv")
+    schema = "g string, key string"
+    ss.create_kmv_store(spark.createDataFrame(first, schema), path, "g", "key", k=k)
+
+    ss.update_kmv_store(spark, path, spark.createDataFrame(second, schema), "g", "key")
+
+    hashed = {
+        r["item"]: r["h"]
+        for r in spark.createDataFrame(
+            [(t,) for _, t in first + second], "item string"
+        ).select("item", ss.kmv_hash("item").alias("h")).collect()
+    }
+    want = []
+    for g in ("a", "b", None):
+        items = sorted({t for h, t in first + second if h == g}, key=lambda t: (hashed[t], t))
+        want += [(g, t, hashed[t]) for t in items[:k]]
+    want.append((ss._KMV_META_GROUP, "k", k))
+    assert _nullable_rows(spark, path) == sorted(want, key=_null_first)
+
+
+def test_rebuilds_commit_the_fresh_layout(spark, tmp_path, no_merge):
+    members = _values(spark, 0, 80)
+    bloom, fresh_bloom = str(tmp_path / "bloom"), str(tmp_path / "bloom_fresh")
+    ss.create_bloom_store(_values(spark, 0, 40), bloom, 63 * 4, "text")
+    ss.rebuild_bloom_store(spark, bloom, members, "text", 63 * 16)
+    ss.create_bloom_store(members, fresh_bloom, 63 * 16, "text")
+    assert _rows(spark, bloom) == _rows(spark, fresh_bloom)
+    assert ss.read_bloom_capacity(spark, bloom) == 63 * 16
+
+    hist, fresh_hist = str(tmp_path / "hist"), str(tmp_path / "hist_fresh")
+    ss.create_hist_store(_values(spark, 0, 40), hist, "src", "n", 4, 8)
+    ss.rebuild_hist_store(spark, hist, members, "src", "n", 16)
+    ss.create_hist_store(members, fresh_hist, "src", "n", 16, 8)
+    assert _rows(spark, hist) == _rows(spark, fresh_hist)
+    assert ss.read_hist_meta(spark, hist) == (16, 8)
+    for path in (bloom, hist):
+        assert index_fs.read_manifest(spark, path)["_seq"] == 1

@@ -111,11 +111,9 @@ def test_fold_sources_are_join_free(spark, mg_rows, tmp_path):
         "g", "cnt"
     )
     batch = ss._mg_counts(mg_rows, "g", "item", None)
-    state, dropped = ss._mg_fold(counters, decr, total, batch, 2)
-    for df in (state, dropped):
-        p = _plan(df)
-        assert "SortMergeJoin" not in p and "ShuffledHashJoin" not in p
-        assert "BroadcastHashJoin" not in p
+    p = _plan(ss._mg_fold(counters, decr, total, batch, 2))
+    assert "SortMergeJoin" not in p and "ShuffledHashJoin" not in p
+    assert "BroadcastHashJoin" not in p
 
     # --- HLL / CM / histogram / KMV fold shapes (inline replicas of
     # the update functions' MERGE sources over tiny state) ---

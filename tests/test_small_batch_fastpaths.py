@@ -188,7 +188,7 @@ def test_index_mutations_fast_match_join(spark, tmpdir, monkeypatch):
     assert outcomes[0][2] == 2  # both freed again
 
 
-def test_content_fingerprint_fast_matches_agg(spark):
+def test_content_fingerprint_fast_matches_agg(spark, monkeypatch):
     import sqltask_spark.data as data_mod
 
     df = spark.createDataFrame(
@@ -196,30 +196,15 @@ def test_content_fingerprint_fast_matches_agg(spark):
         "k long, v string",
     )
     fast = data_mod.content_fingerprint(df, ["k", "v"])
-    # force the aggregate arm by shrinking the collect to nothing:
-    # monkeypatch-free — recompute via the documented formula over a
-    # deliberately over-cap-free call is impossible without the cap,
-    # so compare against a manual Spark aggregate instead
-    from pyspark.sql import functions as F
-
-    hashed = df.select(F.expr("xxhash64(`k`, `v`)").alias("__h"))
-    agg = hashed.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.expr("bit_xor(__h)").alias("x"),
-        F.expr(
-            "CAST(pmod(sum(CAST(__h AS DECIMAL(38,0))),"
-            " CAST(18446744073709551616 AS DECIMAL(38,0)))"
-            " AS DECIMAL(38,0))"
-        ).alias("s"),
-    ).collect()[0]
-    x = (agg["x"] or 0) & 0xFFFFFFFFFFFFFFFF
-    s = int(agg["s"] or 0) & 0xFFFFFFFFFFFFFFFF
-    assert fast == f"{agg['n']}:{x:x}:{s:x}"
-    # empty relation: both arms agree on the zero fingerprint
+    # empty relation: the zero fingerprint
     assert (
         data_mod.content_fingerprint(df.filter(F.lit(False)), ["k", "v"])
         == "0:0:0"
     )
+    # the collect cap is the one filter-probe cap, read at call time:
+    # patching it to 0 forces the aggregate arm
+    monkeypatch.setattr(index_fs, "PROBE_CAP", 0)
+    assert data_mod.content_fingerprint(df, ["k", "v"]) == fast
 
 
 def test_ivf_mutations_fast_match_join(spark, tmpdir, monkeypatch):
