@@ -1,9 +1,10 @@
 #!/usr/bin/env python
 """Per-entry profiling: wall seconds AND Spark job count per catalog
-entry (min-of-N wall like bench.py; job count from the DAGScheduler's
-next-job-id counter, which is deterministic across runs of the same
-tree — the noise-free cross-tree comparison unit used by the r12
-optimization round).
+entry (min-of-N wall like bench.py; each run's jobs counted through a
+job group of its own, read back with the status tracker —
+``profile_epoch_steps.StepJobs``. The count is deterministic across
+runs of the same tree — the noise-free cross-tree comparison unit
+used by the r12 optimization round).
 
 Usage: [SPARK_GRAFT_PROFILE_REPEATS=N] \
            python scripts/profile_entry.py sf_dir query [query ...]
@@ -14,11 +15,12 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from profile_epoch_steps import StepJobs  # noqa: E402
 
 from sqltask_spark.queries import QUERIES  # noqa: E402
 from sqltask_spark.session import get_spark  # noqa: E402
@@ -38,10 +40,6 @@ def main() -> int:
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
-    sc = spark.sparkContext
-
-    def next_job_id() -> int:
-        return int(sc._jsc.sc().dagScheduler().nextJobId())
 
     # warm JVM + python worker pool exactly like bench.py
     from pyspark.sql import functions as F
@@ -54,19 +52,24 @@ def main() -> int:
 
     spark.range(1000).repartition(int(cpus)).select(_warm("id")).count()
 
+    steps = StepJobs(spark)
+    rows = {}
     for name in names:
-        walls = []
-        jobs = rows = None
         for _ in range(repeats):
             spark.catalog.clearCache()
-            j0 = next_job_id()
-            t0 = time.perf_counter()
-            rows = QUERIES[name](spark, sf_dir).count()
-            walls.append(time.perf_counter() - t0)
-            jobs = next_job_id() - j0
+            steps.mark("")  # the run starts a step of its own
+            rows[name] = QUERIES[name](spark, sf_dir).count()
+            steps.mark(name)
+    runs: dict[str, list[tuple[int, float]]] = {}
+    for label, jobs, wall in steps.report():
+        if label:
+            runs.setdefault(label, []).append((jobs, wall))
+    for name in rows:
+        walls = [wall for _, wall in runs[name]]
+        jobs = runs[name][-1][0]
         walls_s = " ".join(f"{w:.2f}" for w in walls)
         print(
-            f"{name} rows={rows} jobs={jobs}"
+            f"{name} rows={rows[name]} jobs={jobs}"
             f" min={min(walls):.2f} [{walls_s}]",
             flush=True,
         )

@@ -2,10 +2,11 @@
 """Per-phase Spark-JOB breakdown of the heavy certificate loops.
 
 Replays corpus_stream_index_sync / corpus_ingest_loop step by step and
-prints the DAGScheduler job-count delta (deterministic per tree — the
-r12 optimization round's noise-free unit) plus wall seconds for each
-phase, so job reductions can be attributed to the exact mutation that
-pays them.
+prints the Spark jobs (deterministic per tree — the r12 optimization
+round's noise-free unit; each phase runs under a job group of its own,
+read back with the status tracker — ``profile_epoch_steps.StepJobs``)
+plus wall seconds for each phase, so job reductions can be attributed
+to the exact mutation that pays them.
 
 Usage: python scripts/profile_stream_sync_phases.py [sf_dir]
 """
@@ -14,12 +15,12 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from profile_epoch_steps import StepJobs  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from sqltask_spark.data import load_table  # noqa: E402
@@ -38,18 +39,8 @@ def main() -> int:
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
-    sc = spark.sparkContext
-
-    def jid() -> int:
-        return int(sc._jsc.sc().dagScheduler().nextJobId())
-
-    marks: list[tuple[str, int, float]] = []
-    _t = [time.perf_counter(), jid()]
-
-    def mark(label: str) -> None:
-        now, j = time.perf_counter(), jid()
-        marks.append((label, j - _t[1], now - _t[0]))
-        _t[0], _t[1] = now, j
+    steps = StepJobs(spark)
+    mark = steps.mark
 
     # warm like bench.py
     from sqltask_spark.queries import QUERIES
@@ -154,6 +145,7 @@ def main() -> int:
         mark("ingest_count_b1")
         shutil.rmtree(tmp2, ignore_errors=True)
 
+        marks = steps.report()
         print("\n=== phase breakdown (jobs / wall s) ===")
         for label, jobs, wall in marks:
             print(f"{label:28s} {jobs:4d} jobs  {wall:7.2f}s")

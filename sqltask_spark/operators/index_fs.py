@@ -28,8 +28,11 @@ of this module); each index kind subclasses it with its payload writers
 only, and the tables' :class:`~sqltask_spark.operators.merge.TableStore`
 with its file-list layout (the store's layout hooks). Their size caps
 are one policy here: :data:`SMALL_BATCH_CAP` bounds the driver-side
-fast arms of the index mutations and probe, the MERGE decide and the
-change feed; :data:`PROBE_CAP` bounds every filter-probe collect.
+fast arms of the index mutations and probe, the MERGE decide, the
+change feed and the CDC sink's epoch collect; :data:`PROBE_CAP` bounds
+every filter-probe collect (the point lookup's key positions
+included), MERGE's collect of its source's key rows and the content
+fingerprint's collect.
 
 All filesystem access goes through the Hadoop ``FileSystem`` API of
 the live SparkSession — NOT ``os``/``shutil`` — so the identical code
@@ -245,8 +248,6 @@ def id_bounds(df, id_col: str) -> dict | None:
     (:func:`~sqltask_spark.operators.dedup_index.unblock_minhash_ids`)
     — a conservative superset range is always valid, so rewrites keep
     a generation's old bounds rather than re-measuring."""
-    from pyspark.sql import functions as F
-
     return _stats_agg(df, id_col)[1]
 
 
@@ -267,39 +268,11 @@ def filter_pos_cols(id_col: str):
     """The k hash-bit positions of ``id_col`` — MUST be identical at
     build and probe (xxhash64 is Spark-version-stable and typed: a
     long id and its string form hash differently, consistently)."""
-    from pyspark.sql import functions as F
-
     bits = ID_FILTER_WORDS * 64
     return [
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(bits)),
         F.pmod(F.xxhash64(F.col(id_col), F.lit(1)), F.lit(bits)),
     ]
-
-
-def filter_word_aggs(p0: str = "_p0", p1: str = "_p1") -> list:
-    """The 128 ``bit_or`` aggregate expressions that fold each row's
-    two hash-bit positions (columns ``p0``/``p1``) into the filter's
-    words — shared by the generation stats (one global aggregate) and
-    the MERGE table's per-file stats (the same expressions under a
-    per-file groupBy)."""
-    from pyspark.sql import functions as F
-
-    return [
-        F.expr(
-            f"bit_or("
-            f"if({p0} div 64 = {w},"
-            f" shiftleft(1L, cast({p0} % 64 as int)), 0L)"
-            f" | if({p1} div 64 = {w},"
-            f" shiftleft(1L, cast({p1} % 64 as int)), 0L))"
-        ).alias(f"_w{w}")
-        for w in range(ID_FILTER_WORDS)
-    ]
-
-
-def words_from_row(r) -> list:
-    """Decode one aggregate result row's ``_w*`` columns into the
-    filter's word list (an empty group yields NULL words → 0)."""
-    return [int(r[f"_w{w}"] or 0) for w in range(ID_FILTER_WORDS)]
 
 
 def explode_pos_rows(df, id_col: str, keep: "tuple[str, ...]" = ()):
@@ -309,8 +282,6 @@ def explode_pos_rows(df, id_col: str, keep: "tuple[str, ...]" = ()):
     with ONE ``bit_or`` replaces the 128-expression wide aggregate,
     whose whole-stage codegen compile alone cost ~1.4s PER CALL
     (measured; every index mutation pays the stats action)."""
-    from pyspark.sql import functions as F
-
     p0, p1 = filter_pos_cols(id_col)
     return df.select(
         *keep,
@@ -353,8 +324,6 @@ def _stats_agg(df, id_col: str, by: str | None = None):
     no caller reads it, and its aggregate adds ~30 ms of CPU per
     action (measured on a 4-vCPU host, C1-only JVM).
     """
-    from pyspark.sql import functions as F
-
     keys = (by,) if by else ()
     aggs = [
         F.bit_or("m").alias("bits"),
@@ -493,8 +462,6 @@ def collect_id_rows(
     time, so patching the module cap to 0 really forces every caller
     onto its join arm (a default bound at definition time never
     saw the patch)."""
-    from pyspark.sql import functions as F
-
     if cap is None:
         cap = SMALL_BATCH_CAP
     p0, p1 = filter_pos_cols(id_col)
@@ -534,8 +501,6 @@ def keep_ids_filter(id_col: str, drop_ids: "list"):
     """Filter column reproducing a LEFT ANTI join against
     ``drop_ids`` exactly: null ids never match (kept), non-null ids
     survive iff outside the set."""
-    from pyspark.sql import functions as F
-
     if not drop_ids:
         return F.lit(True)
     return F.col(id_col).isNull() | ~F.col(id_col).isin(drop_ids)
@@ -550,8 +515,6 @@ def filter_probe_positions(
     every generation anyway — the caller falls back to the
     bitmap-intersection test, which needs no collect). Bounded: at
     most ``cap`` (int, int) rows reach the driver."""
-    from pyspark.sql import functions as F
-
     if cap is None:
         cap = PROBE_CAP
     p0, p1 = filter_pos_cols(id_col)

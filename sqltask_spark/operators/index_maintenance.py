@@ -299,11 +299,12 @@ def maintain_hist_store(
 
     from sqltask_spark.operators.sketch_store import (
         hist_saturation,
-        read_hist_meta,
+        read_params,
         rebuild_hist_store,
     )
 
-    width, n_buckets = read_hist_meta(spark, path)
+    params = read_params(spark, path)
+    width, n_buckets = params["bucket_width"], params["n_buckets"]
     worst = (
         hist_saturation(spark, path)
         .agg(F.max("top_bucket_milli").alias("m"))

@@ -219,7 +219,8 @@ class TableStore(index_fs.GenerationStore):
     file names relative to ``data/``), ``schema``, and — with a
     declared ``stats_col`` — the per-file ``stats`` ``[min, max(,
     key filter words)]``: the stats Delta/Iceberg keep per data file
-    plus the same tiny key Bloom filter the index generations carry.
+    plus the same tiny key Bloom filter the index generations carry;
+    a table created with ``params`` keeps its frozen parameters there.
     The layout hooks reference data FILES, so a merge's untouched
     files stay committed while its touched ones drop out. Every
     version stays readable until a vacuum drops its manifest:
@@ -344,6 +345,7 @@ def create_parquet_table(
     path: str,
     batch_id: str | None = None,
     stats_col: str | None = None,
+    params: dict | None = None,
 ) -> None:
     """Materialize ``df`` as version 0 of a merge-able table.
 
@@ -362,6 +364,11 @@ def create_parquet_table(
     and the file-pruning assumption (a key lives in exactly one file)
     require it. Enforced here with one aggregate action, the same
     loud error MERGE raises for a duplicate-key source.
+
+    ``params`` records the table's frozen parameters (a sketch
+    store's capacity, bucket layout or ``k``) in the manifest, outside
+    its rows: every commit carries them forward, and
+    :func:`fold_parquet_table` hands them to each fold.
     """
     spark = df.sparkSession
     if index_fs.list_manifest_seqs(spark, path):
@@ -388,6 +395,8 @@ def create_parquet_table(
     }
     if stats_col is not None:
         head["stats_col"] = stats_col
+    if params is not None:
+        head["params"] = dict(params)
     files, stats = store.write_files(head, df)
     store.commit(None, {**head, **store.files_update(head, files, stats)})
 
@@ -872,17 +881,24 @@ def merge_into_parquet(
 def fold_parquet_table(
     spark: SparkSession,
     path: str,
-    fold: Callable[[DataFrame], DataFrame],
+    fold: Callable[[DataFrame, dict], DataFrame],
     batch_id: str | None = None,
+    params: dict | None = None,
 ) -> dict:
-    """Replace the state of the table at ``path`` with ``fold(rows)``,
-    ``rows`` being its committed rows: the snapshot commit of a table
-    whose every update recomputes the whole state (the sketch stores'
-    lattice folds, :mod:`.sketch_store`). ``fold`` returns the
+    """Replace the state of the table at ``path`` with ``fold(rows,
+    params)``, ``rows`` being its committed rows and ``params`` the
+    frozen parameters of the same manifest: the snapshot commit of a
+    table whose every update recomputes the whole state (the sketch
+    stores' lattice folds, :mod:`.sketch_store`). ``fold`` returns the
     COMPLETE next state in the table's columns — with a declared
     ``stats_col``, one row per key. Nothing is matched, counted or
     carried over, so an update costs the fold's own plan plus one
     write, not a keyed MERGE of the full state into itself.
+
+    ``params`` given here (a rebuild's new capacity or width) update
+    the committed ones: the fold sees the updated set, and the commit
+    publishes it together with the state it shaped, so no version
+    pairs new parameters with old rows.
 
     The ledger check, the read, the write and the commit all run
     against ONE manifest read: a writer that commits in between takes
@@ -901,7 +917,8 @@ def fold_parquet_table(
         return {"skipped": True, "rewritten_files": 0,
                 "total_files": len(files)}
     store.sweep()
-    state = fold(store.read(m))
+    params_next = {**m.get("params", {}), **(params or {})}
+    state = fold(store.read(m), params_next)
     _check_columns(m, state.schema.fields, "fold state")
     cols = [f.name for f in _schema_of(m).fields]
     new_files, new_stats = store.write_files(
@@ -911,6 +928,7 @@ def fold_parquet_table(
     store.commit(m, {
         **store.files_update(m, new_files, new_stats),
         "batches": m.get("batches", []) + ([batch_id] if batch_id else []),
+        **({"params": params_next} if params else {}),
     })
     return {"skipped": False, "rewritten_files": len(files),
             "total_files": len(new_files)}

@@ -34,6 +34,16 @@ commit their complete next state the same way: a row they evict is
 simply not in it. The full-state rewrite per update is deliberate and
 bounded: the HLL state is at most groups × 256 rows.
 
+A store's frozen parameters — the Bloom capacity, the histogram's
+bucket layout, the heavy-hitter and KMV ``k`` — live in its manifest's
+``params`` (:func:`read_params`), never in its rows, as the tables
+keep their schema there: every fold gets them from the manifest it
+commits against, and a rebuild commits its new parameters in the same
+manifest as the state they shaped. So a reader reads them with no
+job, every group value — null included — is an ordinary group, and
+``as_of`` time travel pairs each version's rows with its own
+parameters.
+
 Same register/estimator discipline as the oracled
 ``source_distinct_hll`` catalog entry (integer-only: rank from
 binary-string length, harmonic sum as Σ 2^(cap−rho) in BIGINT,
@@ -47,6 +57,32 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sqltask_spark.data import local_frame
+
+
+def read_params(
+    spark: SparkSession, path: str, as_of: int | None = None
+) -> dict:
+    """The frozen parameters of the store at ``path`` — ``m_bits``
+    (Bloom), ``bucket_width`` and ``n_buckets`` (histogram), ``k``
+    (heavy hitters, KMV) — from its manifest, so no job runs;
+    ``as_of`` returns those of that version."""
+    from sqltask_spark.operators.merge import TableStore
+
+    return TableStore(spark, path).committed(as_of).get("params", {})
+
+
+def _committed(
+    spark: SparkSession, path: str, as_of: int | None = None
+) -> "tuple[DataFrame, dict]":
+    """The committed rows of the store at ``path`` and the parameters
+    of the same manifest: one manifest read, so a rebuild that commits
+    in between cannot pair new parameters with old rows."""
+    from sqltask_spark.operators.merge import TableStore
+
+    store = TableStore(spark, path)
+    m = store.committed(as_of)
+    return store.read(m), m.get("params", {})
+
 
 HLL_M = 256
 HLL_RHO_CAP = 24
@@ -106,7 +142,7 @@ def update_hll_store(
     # max over the union is the element-wise lattice join (register
     # ranks are >= 1, so an absent side never decides a value): one
     # exchange on <= groups x m rows per side
-    def fold(stored):
+    def fold(stored, params):
         return (
             stored.unionByName(regs.select("g", "idx", "r"))
             .groupBy("g", "idx")
@@ -198,7 +234,7 @@ def update_cm_store(
 
     # sum over the union is the element-wise addition (an absent side
     # adds 0): one exchange on <= groups x d x w rows per side
-    def fold(stored):
+    def fold(stored, params):
         return (
             stored.unionByName(cells.select("g", "j", "p", "cnt"))
             .groupBy("g", "j", "p")
@@ -254,11 +290,6 @@ def read_cm_estimates(
 
 BLOOM_K = 2
 BLOOM_WORD_BITS = 63
-#: Reserved key row carrying the frozen capacity (m_bits) inside the
-#: word table itself, so the store is self-describing under the same
-#: merge-table commit protocol (word = -1 can never be a real word:
-#: positions are non-negative).
-_BLOOM_META_WORD = -1
 
 
 def bloom_positions(value_col: str, m_bits: int) -> list:
@@ -306,35 +337,15 @@ def create_bloom_store(
     """Materialize a Bloom membership store with FROZEN capacity
     ``m_bits`` (size it for the EXPECTED total population — standard
     Bloom capacity planning; the frozen-parameter rule is the same
-    one the IVF quantizer follows). The capacity rides as a reserved
-    meta row so the store is self-describing."""
+    one the IVF quantizer follows). The capacity is the store's
+    ``m_bits`` parameter (:func:`read_params`)."""
     from sqltask_spark.operators.merge import create_parquet_table
 
-    spark = values.sparkSession
-    meta = local_frame(
-        spark, [(_BLOOM_META_WORD, int(m_bits))], "word long, bits long"
-    )
     create_parquet_table(
-        bloom_word_rows(values, value_col, m_bits)
-        .select(F.col("word").cast("long"), F.col("bits"))
-        .unionByName(meta),
+        bloom_word_rows(values, value_col, m_bits),
         path,
+        params={"m_bits": int(m_bits)},
     )
-
-
-def read_bloom_capacity(spark: SparkSession, path: str) -> int:
-    from sqltask_spark.operators.merge import read_parquet_table
-
-    return _bloom_capacity(read_parquet_table(spark, path), path)
-
-
-def _bloom_capacity(words: DataFrame, path: str) -> int:
-    """The frozen capacity from the meta row of the store rows
-    ``words`` — one collect."""
-    row = words.filter(F.col("word") == _BLOOM_META_WORD).collect()
-    if not row:
-        raise ValueError(f"no Bloom meta row in store at {path}")
-    return int(row[0]["bits"])
 
 
 def update_bloom_store(
@@ -349,14 +360,9 @@ def update_bloom_store(
     from sqltask_spark.operators.merge import fold_parquet_table
 
     # bit_or over the union is the element-wise OR: one exchange on
-    # the <= m_bits/63-row state. The meta row is safe unkeyed: the
-    # batch cannot produce word = -1 (positions are non-negative), so
-    # its group holds only the stored row and bit_or returns it
-    # verbatim. The capacity comes from the same committed rows.
-    def fold(stored):
-        batch = bloom_word_rows(
-            values, value_col, _bloom_capacity(stored, path)
-        ).select(F.col("word").cast("long"), "bits")
+    # the <= m_bits/63-row state
+    def fold(stored, params):
+        batch = bloom_word_rows(values, value_col, params["m_bits"])
         return (
             stored.unionByName(batch)
             .groupBy("word")
@@ -378,8 +384,8 @@ def rebuild_bloom_store(
     (positions are taken mod the frozen capacity, so old bitmaps
     cannot be re-hashed; same frozen-parameter rule as the IVF
     quantizer, same rebuild answer). One ATOMIC commit: the new
-    capacity's word rows and meta row replace the store's whole
-    state in one snapshot write
+    capacity's word rows replace the store's whole state, and the new
+    capacity its ``m_bits``, in one snapshot write
     (:func:`~sqltask_spark.operators.merge.fold_parquet_table`) —
     readers see the old store until the manifest lands, the new one
     after, never a mix (a mixed read would produce false NEGATIVES,
@@ -387,17 +393,14 @@ def rebuild_bloom_store(
     """
     from sqltask_spark.operators.merge import fold_parquet_table
 
-    meta = local_frame(
+    fold_parquet_table(
         spark,
-        [(_BLOOM_META_WORD, int(m_bits_new))],
-        "word long, bits long",
+        path,
+        lambda stored, params: bloom_word_rows(
+            members, value_col, params["m_bits"]
+        ),
+        params={"m_bits": int(m_bits_new)},
     )
-    desired = (
-        bloom_word_rows(members, value_col, m_bits_new)
-        .select(F.col("word").cast("long"), F.col("bits"))
-        .unionByName(meta)
-    )
-    fold_parquet_table(spark, path, lambda stored: desired)
 
 
 def bloom_probe(
@@ -420,15 +423,10 @@ def bloom_probe(
     Candidate rows pass through 1:1 (word is unique per store), so
     for the duplicate-free candidate sets every caller feeds, the
     output is row-identical to the old aggregate."""
-    from sqltask_spark.operators.merge import read_parquet_table
-
-    m_bits = read_bloom_capacity(spark, path)
-    words = read_parquet_table(spark, path).filter(
-        F.col("word") != _BLOOM_META_WORD
-    )
+    words, params = _committed(spark, path)
     out = candidates
     hits = []
-    for j, pos in enumerate(bloom_positions(value_col, m_bits)):
+    for j, pos in enumerate(bloom_positions(value_col, params["m_bits"])):
         pj, wj, bj = f"__pos{j}", f"__w{j}", f"__b{j}"
         out = out.withColumn(pj, pos).join(
             F.broadcast(
@@ -466,14 +464,10 @@ def bloom_saturation(spark: SparkSession, path: str) -> DataFrame:
     capacity — the fp-rate drift signal that says when the frozen
     ``m_bits`` has outgrown its population (rebuild with a larger
     capacity, exactly like the IVF drift rebuild)."""
-    from sqltask_spark.operators.merge import read_parquet_table
-
-    m_bits = read_bloom_capacity(spark, path)
+    words, params = _committed(spark, path)
     return (
-        read_parquet_table(spark, path)
-        .filter(F.col("word") != _BLOOM_META_WORD)
-        .agg(
-            F.lit(m_bits).cast("long").alias("m_bits"),
+        words.agg(
+            F.lit(params["m_bits"]).cast("long").alias("m_bits"),
             F.sum(F.bit_count("bits")).cast("long").alias("n_set_bits"),
             F.count(F.lit(1)).cast("long").alias("n_words_used"),
         )
@@ -531,14 +525,6 @@ def read_hll_estimates(
             ).alias("est_milli"),
         )
     )
-
-
-#: Reserved group carrying the frozen histogram parameters inside the
-#: cell table itself (the Bloom meta-row discipline): bucket 0 holds
-#: the bucket WIDTH, bucket 1 the bucket COUNT. A real group can never
-#: collide (user group values are namespaced by the cast below only
-#: within their own rows; the meta group name is reserved).
-_HIST_META_GROUP = "__HIST_META__"
 
 
 def hist_bucket(value_col: str, bucket_width: int, n_buckets: int):
@@ -601,60 +587,28 @@ def create_hist_store(
     :func:`hist_saturation` for the rebuild-wider signal, exactly
     like the Bloom capacity and the IVF quantizer). State is bounded
     at groups × n_buckets rows FOREVER; quantile reads carry a
-    ±bucket_width rank-certified interval."""
+    ±bucket_width rank-certified interval. The layout is the store's
+    ``bucket_width`` and ``n_buckets`` parameters
+    (:func:`read_params`)."""
     from sqltask_spark.operators.merge import create_parquet_table
 
-    spark = values.sparkSession
     if int(bucket_width) < 1 or int(n_buckets) < 2:
         raise ValueError(
             f"need bucket_width >= 1 and n_buckets >= 2, got"
             f" ({bucket_width}, {n_buckets})"
         )
-    meta = local_frame(
-        spark,
-        [
-            (_HIST_META_GROUP, 0, int(bucket_width)),
-            (_HIST_META_GROUP, 1, int(n_buckets)),
-        ],
-        "g string, b long, cnt long",
-    )
     # ``batch_id`` seeds the ledger with the CREATING batch: a
     # replayed first epoch must be a no-op exactly like any other
     # replayed fold (the streaming sink's exactly-once proof found
     # the create path silently outside the ledger)
     create_parquet_table(
-        hist_cell_rows(
-            values, group_col, value_col, bucket_width, n_buckets
-        ).unionByName(meta),
+        hist_cell_rows(values, group_col, value_col, bucket_width, n_buckets),
         path,
         batch_id=batch_id,
+        params={
+            "bucket_width": int(bucket_width), "n_buckets": int(n_buckets)
+        },
     )
-
-
-def read_hist_meta(
-    spark: SparkSession, path: str, as_of: int | None = None
-) -> "tuple[int, int]":
-    """(bucket_width, n_buckets) from the store's meta rows. The meta
-    rows live in the same versioned table as the cells, so a
-    time-traveled read MUST pass the same ``as_of`` — a rebuild may
-    have widened the bucket width since, and deriving [lo, hi) from
-    the new width against old-width buckets returns wrong
-    intervals."""
-    from sqltask_spark.operators.merge import read_parquet_table
-
-    return _hist_meta(read_parquet_table(spark, path, as_of=as_of), path)
-
-
-def _hist_meta(cells: DataFrame, path: str) -> "tuple[int, int]":
-    """(bucket_width, n_buckets) from the meta rows of the store rows
-    ``cells`` — one collect."""
-    rows = {
-        int(r["b"]): int(r["cnt"])
-        for r in cells.filter(F.col("g") == _HIST_META_GROUP).collect()
-    }
-    if 0 not in rows or 1 not in rows:
-        raise ValueError(f"no histogram meta rows in store at {path}")
-    return rows[0], rows[1]
 
 
 def update_hist_store(
@@ -677,13 +631,12 @@ def update_hist_store(
         )
     from sqltask_spark.operators.merge import fold_parquet_table
 
-    # sum over the union, as in the Count-Min grid; the meta rows pass
-    # through their singleton groups unchanged. The layout comes from
-    # the same committed rows.
-    def fold(stored):
+    # sum over the union, as in the Count-Min grid
+    def fold(stored, params):
         batch = hist_cell_rows(
-            values, group_col, value_col, *_hist_meta(stored, path)
-        ).select("g", "b", "cnt")
+            values, group_col, value_col,
+            params["bucket_width"], params["n_buckets"],
+        )
         return (
             stored.unionByName(batch)
             .groupBy("g", "b")
@@ -709,15 +662,13 @@ def read_hist_quantiles(
     the true q-quantile lies in ``[lo, hi)`` (``hi`` NULL for the
     unbounded top bucket — the saturation signal's territory).
     Partitioned window (per group) over a state-bounded relation —
-    never a global window."""
+    never a global window. The layout is read from the manifest of the
+    cells, so ``as_of`` never pairs a rebuilt width with old-width
+    buckets."""
     from pyspark.sql import Window
 
-    from sqltask_spark.operators.merge import read_parquet_table
-
-    width, n_buckets = read_hist_meta(spark, path, as_of=as_of)
-    cells = read_parquet_table(spark, path, as_of=as_of).filter(
-        F.col("g") != _HIST_META_GROUP
-    )
+    cells, params = _committed(spark, path, as_of)
+    width, n_buckets = params["bucket_width"], params["n_buckets"]
     w_cum = (
         Window.partitionBy("g")
         .orderBy("b")
@@ -736,7 +687,10 @@ def read_hist_quantiles(
     qdf = F.explode(
         F.array(*[F.lit(int(q)).alias("q") for q in qs_milli])
     )
-    hits = (
+    # the cumulative count rises with the bucket, so the hit bucket's
+    # is the hits' least: no join back to the cells (an equi-join on g
+    # would also drop the null group)
+    return (
         cum.select("*", qdf.alias("q_milli"))
         .filter(
             F.col("cum_count") * 1000
@@ -745,15 +699,9 @@ def read_hist_quantiles(
         .groupBy("g", "q_milli")
         .agg(
             F.min("b").cast("long").alias("bucket"),
+            F.min("cum_count").alias("cum_count"),
             F.max("total_count").cast("long").alias("total_count"),
         )
-    )
-    cum_at = cum.select(
-        "g", F.col("b").alias("bucket"),
-        F.col("cum_count").alias("cum_count"),
-    )
-    return (
-        hits.join(cum_at, ["g", "bucket"])
         .select(
             "g",
             "q_milli",
@@ -777,14 +725,10 @@ def hist_saturation(
     UNBOUNDED top bucket — the signal that the frozen width has
     outgrown its value distribution (a top-heavy histogram certifies
     nothing above ``(n_buckets-1)·width``). Rebuild wider on drift,
-    exactly like the Bloom capacity. ``as_of`` time-travels meta and
-    cells TOGETHER (same hazard as :func:`read_hist_quantiles`)."""
-    from sqltask_spark.operators.merge import read_parquet_table
-
-    width, n_buckets = read_hist_meta(spark, path, as_of=as_of)
-    cells = read_parquet_table(spark, path, as_of=as_of).filter(
-        F.col("g") != _HIST_META_GROUP
-    )
+    exactly like the Bloom capacity. ``as_of`` time-travels layout
+    and cells TOGETHER (as in :func:`read_hist_quantiles`)."""
+    cells, params = _committed(spark, path, as_of)
+    n_buckets = params["n_buckets"]
     return (
         cells.groupBy("g")
         .agg(
@@ -818,30 +762,25 @@ def rebuild_hist_store(
     """Rebuild the store at a NEW frozen width from the driving value
     relation — the only move when the top bucket saturates (buckets
     cannot be split after the fact; same frozen-parameter rule as
-    Bloom capacity / the IVF quantizer). The new-layout cells and meta
-    rows replace the store's whole state in one snapshot write
+    Bloom capacity / the IVF quantizer). The new-layout cells and the
+    new width replace the store's state and ``bucket_width`` in one
+    snapshot write
     (:func:`~sqltask_spark.operators.merge.fold_parquet_table`) —
     readers see the old histogram until the manifest lands, never a
     mixed-width state."""
     from sqltask_spark.operators.merge import fold_parquet_table
 
-    # the bucket count carries over from the same committed rows
-    def fold(stored):
-        _, n_buckets = _hist_meta(stored, path)
-        meta = local_frame(
-            spark,
-            [
-                (_HIST_META_GROUP, 0, int(bucket_width_new)),
-                (_HIST_META_GROUP, 1, int(n_buckets)),
-            ],
-            "g string, b long, cnt long",
-        )
-        return hist_cell_rows(
-            members, group_col, value_col, bucket_width_new, n_buckets,
+    # the fold sees the new width and the carried-over bucket count
+    fold_parquet_table(
+        spark,
+        path,
+        lambda stored, params: hist_cell_rows(
+            members, group_col, value_col,
+            params["bucket_width"], params["n_buckets"],
             weight_col=weight_col,
-        ).unionByName(meta)
-
-    fold_parquet_table(spark, path, fold)
+        ),
+        params={"bucket_width": int(bucket_width_new)},
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -851,7 +790,7 @@ def rebuild_hist_store(
 # bounded at groups × (k + 2) rows FOREVER; every read carries a
 # rank-certified count interval, and the summary PROVABLY contains
 # every item whose true count exceeds the group's accumulated
-# decrement (which the store tracks EXACTLY as a meta row, so the
+# decrement (which the store tracks EXACTLY as a per-group row, so the
 # certificate is data-dependent and tight, not the worst-case n/k).
 #
 # Fold = the mergeable-summaries merge (Agarwal et al., PODS'12):
@@ -866,7 +805,6 @@ def rebuild_hist_store(
 # mandatory, exactly like the histogram store.
 # ---------------------------------------------------------------------------
 
-_MG_META_GROUP = "__MG_META__"
 _MG_DECR_ITEM = "__MG_DECR__"
 _MG_TOTAL_ITEM = "__MG_TOTAL__"
 
@@ -931,7 +869,8 @@ def _mg_fold(
     tags provenance so a counter never sums into the total/decr rows
     (a user item equal to a sentinel string fails in
     :func:`_mg_counts`); ``_sp`` ordering ranks counters ahead of the
-    meta rows so ``_rn == k+1 ∧ _sp == 0`` is the (k+1)-th counter.
+    total and decr rows so ``_rn == k+1 ∧ _sp == 0`` is the (k+1)-th
+    counter.
     """
     from pyspark.sql import Window
 
@@ -1021,7 +960,8 @@ def create_mg_store(
     parameter rule as the Bloom capacity and histogram width).
     ``batch_id`` seeds the ledger with the creating batch, exactly
     like :func:`create_hist_store` (a replayed first epoch must
-    no-op)."""
+    no-op). ``k`` is the store's ``k`` parameter
+    (:func:`read_params`)."""
     from sqltask_spark.operators.merge import create_parquet_table
 
     spark = values.sparkSession
@@ -1031,35 +971,9 @@ def create_mg_store(
     empty = local_frame(spark, [], "g string, item string, cnt long")
     empty_gc = local_frame(spark, [], "g string, cnt long")
     state = _mg_fold(empty, empty_gc, empty_gc, batch, int(k))
-    meta = local_frame(
-        spark,
-        [(_MG_META_GROUP, "k", int(k))],
-        "g string, item string, cnt long",
-    )
     create_parquet_table(
-        state.unionByName(meta), path, batch_id=batch_id
+        state, path, batch_id=batch_id, params={"k": int(k)}
     )
-
-
-def read_mg_k(
-    spark: SparkSession, path: str, as_of: int | None = None
-) -> int:
-    """The store's frozen ``k`` (meta row; travels with ``as_of``
-    like the histogram layout — same torn-read hazard)."""
-    from sqltask_spark.operators.merge import read_parquet_table
-
-    return _mg_k(read_parquet_table(spark, path, as_of=as_of), path)
-
-
-def _mg_k(rows: DataFrame, path: str) -> int:
-    """The frozen ``k`` from the meta row of the store rows ``rows`` —
-    one collect."""
-    meta = rows.filter(
-        (F.col("g") == _MG_META_GROUP) & (F.col("item") == "k")
-    ).collect()
-    if not meta:
-        raise ValueError(f"no MG meta row in store at {path}")
-    return int(meta[0]["cnt"])
 
 
 def update_mg_store(
@@ -1073,8 +987,8 @@ def update_mg_store(
 ) -> dict:
     """Fold a batch into the store — counter sums are NOT idempotent,
     so the batch LEDGER is mandatory (the histogram rule). The
-    surviving counters, the decrement and total rows and the meta row
-    are the store's complete next state, committed as one snapshot
+    surviving counters and the decrement and total rows are the
+    store's complete next state, committed as one snapshot
     write (:func:`~sqltask_spark.operators.merge.fold_parquet_table`):
     counters the decrement zeroed out are simply not in it."""
     if not batch_id:
@@ -1086,12 +1000,9 @@ def update_mg_store(
 
     batch = _mg_counts(values, group_col, item_col, weight_col)
 
-    # ``k`` comes from the same committed rows
-    def fold(stored):
-        # a null group is a group like any other (null-safe tests)
+    def fold(stored, params):
         counters = stored.filter(
-            ~F.col("g").eqNullSafe(_MG_META_GROUP)
-            & ~F.col("item").isin(_MG_DECR_ITEM, _MG_TOTAL_ITEM)
+            ~F.col("item").isin(_MG_DECR_ITEM, _MG_TOTAL_ITEM)
         )
         decr = stored.filter(F.col("item") == _MG_DECR_ITEM).select(
             "g", "cnt"
@@ -1099,12 +1010,7 @@ def update_mg_store(
         total = stored.filter(F.col("item") == _MG_TOTAL_ITEM).select(
             "g", "cnt"
         )
-        state = _mg_fold(counters, decr, total, batch, _mg_k(stored, path))
-        return state.unionByName(
-            stored.filter(
-                (F.col("g") == _MG_META_GROUP) & (F.col("item") == "k")
-            )
-        )
+        return _mg_fold(counters, decr, total, batch, params["k"])
 
     return fold_parquet_table(spark, path, fold, batch_id=batch_id)
 
@@ -1118,18 +1024,19 @@ def read_mg_topk(
     COMPLETENESS guarantee: every item whose true count exceeds the
     group's ``decr`` IS in the summary — an absent item's true count
     is ≤ decr. Both properties hold under any fold order."""
+    from pyspark.sql import Window
+
     from sqltask_spark.operators.merge import read_parquet_table
 
-    stored = read_parquet_table(spark, path, as_of=as_of)
-    counters = stored.filter(
-        (F.col("g") != _MG_META_GROUP)
-        & ~F.col("item").isin(_MG_DECR_ITEM, _MG_TOTAL_ITEM)
-    )
-    decr = stored.filter(F.col("item") == _MG_DECR_ITEM).select(
-        "g", F.col("cnt").alias("_decr")
-    )
+    # each group's decrement reaches its counters through a window
+    # over g, which keeps the null group (an equi-join on g would not)
+    decr = F.max(
+        F.when(F.col("item") == _MG_DECR_ITEM, F.col("cnt"))
+    ).over(Window.partitionBy("g"))
     return (
-        counters.join(decr, "g", "left")
+        read_parquet_table(spark, path, as_of=as_of)
+        .withColumn("_decr", decr)
+        .filter(~F.col("item").isin(_MG_DECR_ITEM, _MG_TOTAL_ITEM))
         .select(
             "g",
             "item",
@@ -1155,22 +1062,29 @@ def mg_saturation(
     fact)."""
     from sqltask_spark.operators.merge import read_parquet_table
 
-    stored = read_parquet_table(spark, path, as_of=as_of)
-    decr = stored.filter(F.col("item") == _MG_DECR_ITEM).select(
-        "g", F.col("cnt").alias("decr")
-    )
-    total = stored.filter(F.col("item") == _MG_TOTAL_ITEM).select(
-        "g", F.col("cnt").alias("total_mass")
-    )
-    return total.join(decr, "g", "left").select(
-        "g",
-        "total_mass",
-        F.coalesce("decr", F.lit(0)).cast("long").alias("decr"),
-        F.expr(
-            "CASE WHEN total_mass > 0 THEN"
-            " (coalesce(decr, 0) * 1000) DIV total_mass"
-            " ELSE 0 END"
-        ).cast("long").alias("error_milli"),
+    def cnt_of(item):
+        return F.max(F.when(F.col("item") == item, F.col("cnt")))
+
+    # one aggregate over g, not a join on it: the null group keeps
+    # its decrement (every group that has one has a total row)
+    return (
+        read_parquet_table(spark, path, as_of=as_of)
+        .filter(F.col("item").isin(_MG_DECR_ITEM, _MG_TOTAL_ITEM))
+        .groupBy("g")
+        .agg(
+            cnt_of(_MG_TOTAL_ITEM).alias("total_mass"),
+            F.coalesce(cnt_of(_MG_DECR_ITEM), F.lit(0))
+            .cast("long")
+            .alias("decr"),
+        )
+        .withColumn(
+            "error_milli",
+            F.expr(
+                "CASE WHEN total_mass > 0 THEN"
+                " (decr * 1000) DIV total_mass"
+                " ELSE 0 END"
+            ).cast("long"),
+        )
     )
 
 
@@ -1204,7 +1118,6 @@ def mg_saturation(
 # once from the accuracy target and the store is maintenance-free
 # forever (vacuum/retention aside).
 
-_KMV_META_GROUP = "__KMV_META__"
 _KMV_HEX = 12  # 48-bit hash: ('0x' || prefix)::BIGINT in DuckDB,
 # conv(prefix, 16, 10) in Spark — both exact in BIGINT
 _KMV_SPACE = 1 << (_KMV_HEX * 4)
@@ -1261,41 +1174,16 @@ def create_kmv_store(
     batch_id: "str | None" = None,
 ) -> None:
     """Materialize the store with FROZEN ``k`` (the family rule: a
-    sketch parameter cannot grow after the fact — rebuild instead)."""
+    sketch parameter cannot grow after the fact — rebuild instead);
+    ``k`` is the store's ``k`` parameter (:func:`read_params`)."""
     from sqltask_spark.operators.merge import create_parquet_table
 
-    spark = values.sparkSession
     if int(k) < 1:
         raise ValueError(f"need k >= 1, got {k}")
-    state = kmv_rows(values, group_col, key_col, int(k))
-    meta = local_frame(
-        spark,
-        [(_KMV_META_GROUP, "k", int(k))],
-        "g string, item string, h long",
-    )
     create_parquet_table(
-        state.unionByName(meta), path, batch_id=batch_id
+        kmv_rows(values, group_col, key_col, int(k)), path,
+        batch_id=batch_id, params={"k": int(k)},
     )
-
-
-def read_kmv_k(
-    spark: SparkSession, path: str, as_of: int | None = None
-) -> int:
-    """The store's frozen ``k`` (meta row; travels with ``as_of``)."""
-    from sqltask_spark.operators.merge import read_parquet_table
-
-    return _kmv_k(read_parquet_table(spark, path, as_of=as_of), path)
-
-
-def _kmv_k(rows: DataFrame, path: str) -> int:
-    """The frozen ``k`` from the meta row of the store rows ``rows`` —
-    one collect."""
-    meta = rows.filter(
-        (F.col("g") == _KMV_META_GROUP) & (F.col("item") == "k")
-    ).collect()
-    if not meta:
-        raise ValueError(f"no KMV meta row in store at {path}")
-    return int(meta[0]["h"])
 
 
 def update_kmv_store(
@@ -1307,8 +1195,7 @@ def update_kmv_store(
     batch_id: "str | None" = None,
 ) -> dict:
     """Fold a batch: union the stored hashes with the batch's keys and
-    keep the k smallest per group — with the meta row, the store's
-    complete next state, committed as one snapshot write
+    keep the k smallest per group — the store's complete next state, committed as one snapshot write
     (:func:`~sqltask_spark.operators.merge.fold_parquet_table`), so
     evicted rows simply drop out. Idempotent AND commutative (bottom-k
     of unions), so the ledger is optional exactly as for the HLL
@@ -1330,20 +1217,14 @@ def update_kmv_store(
     # bottom-k(stored ∪ batch bottom-k) — the bottom-k algebra the
     # docstring already relies on. ``h`` is a pure function of item,
     # recomputed post-dedup (identical values, stored rows included).
-    # ``k`` comes from the same committed rows.
-    def fold(stored):
-        # a null group is a group like any other (null-safe test)
-        is_meta = F.col("g").eqNullSafe(_KMV_META_GROUP)
+    def fold(stored, params):
         combined = (
-            stored.filter(~is_meta)
-            .select("g", "item")
+            stored.select("g", "item")
             .unionByName(batch)
             .distinct()
             .withColumn("h", kmv_hash("item"))
         )
-        return _kmv_bottom_k(combined, _kmv_k(stored, path)).unionByName(
-            stored.filter(is_meta)
-        )
+        return _kmv_bottom_k(combined, params["k"])
 
     return fold_parquet_table(spark, path, fold, batch_id=batch_id)
 
@@ -1357,9 +1238,9 @@ def read_kmv_state(
     at O(k) per group."""
     from sqltask_spark.operators.merge import read_parquet_table
 
-    return read_parquet_table(spark, path, as_of=as_of).filter(
-        F.col("g") != _KMV_META_GROUP
-    ).select("g", "item", "h")
+    return read_parquet_table(spark, path, as_of=as_of).select(
+        "g", "item", "h"
+    )
 
 
 def kmv_estimates(state: DataFrame, k: int) -> DataFrame:
@@ -1393,8 +1274,8 @@ def read_kmv_estimates(
 ) -> DataFrame:
     """Distinct-count estimates per group from the persisted state —
     O(state) forever, never O(corpus)."""
-    k = read_kmv_k(spark, path, as_of=as_of)
-    return kmv_estimates(read_kmv_state(spark, path, as_of=as_of), k)
+    state, params = _committed(spark, path, as_of)
+    return kmv_estimates(state, params["k"])
 
 
 def kmv_set_estimates(state: DataFrame, k: int) -> DataFrame:

@@ -596,9 +596,9 @@ def bloom_store_sink(
 
     ``table_maintenance`` (r12): version-ledger retention for the
     store AND the member table (each epoch commits one manifest per
-    relation — see :func:`hll_store_sink`). The batch ledger and the
-    frozen capacity ride IN the newest manifest, so vacuuming old
-    versions never affects convergence (pytest-pinned).
+    relation — see :func:`hll_store_sink`). The frozen capacity is
+    the store's ``m_bits`` parameter, carried in every manifest, so
+    vacuuming old versions never loses it (pytest-pinned).
     """
     if maintenance is not None and members_path is None:
         raise ValueError(
@@ -1008,7 +1008,8 @@ def kmv_store_sink(
     commutative, so redelivered/reordered epochs converge; a ledger
     would only add the colliding-epoch skip hazard. ``k`` is FROZEN
     at create (the family rule); a later call with a different ``k``
-    folds under the STORE's k — the stored meta row is authoritative.
+    folds under the STORE's k — the ``k`` in its manifest is
+    authoritative.
     ``table_maintenance``: version-ledger retention thresholds, as in
     :func:`hll_store_sink`."""
     from pyspark.sql import functions as F

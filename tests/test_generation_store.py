@@ -177,11 +177,9 @@ def _table_rows(spark, path):
 
 
 def _table_state(spark, path):
-    """(rows, file count) of the committed table."""
-    return (
-        _table_rows(spark, path),
-        len(index_fs.read_manifest(spark, path)["files"]),
-    )
+    """(rows, file count, params) of the committed table."""
+    m = index_fs.read_manifest(spark, path)
+    return _table_rows(spark, path), len(m["files"]), m.get("params")
 
 
 def _table_merge(spark, path, rows):
@@ -202,8 +200,15 @@ TABLE_MUTATIONS = {
     "compact": lambda s, p: mg.compact_parquet_table(s, p),
     # the snapshot commit of the sketch stores: the whole state rewritten
     "fold": lambda s, p: mg.fold_parquet_table(
-        s, p, lambda rows: rows.withColumn("v", F.concat("v", F.lit("+"))),
+        s, p, lambda rows, params: rows.withColumn("v", F.concat("v", F.lit("+"))),
         batch_id="b1",
+    ),
+    # a sketch-store rebuild: new params, committed with the state
+    # they shaped
+    "rebuild": lambda s, p: mg.fold_parquet_table(
+        s, p,
+        lambda rows, params: rows.withColumn("v", F.concat("v", F.lit(params["tag"]))),
+        params={"tag": "+r"},
     ),
 }
 

@@ -3754,7 +3754,7 @@ def test_bloom_store_lattice_and_saturation(spark, tmp_path):
         bloom_probe,
         bloom_saturation,
         create_bloom_store,
-        read_bloom_capacity,
+        read_params,
         update_bloom_store,
     )
 
@@ -3766,7 +3766,7 @@ def test_bloom_store_lattice_and_saturation(spark, tmp_path):
     m_bits = 64 * 63
     store = str(tmp_path / "bloom")
     create_bloom_store(a, store, m_bits, "s")
-    assert read_bloom_capacity(spark, store) == m_bits
+    assert read_params(spark, store) == {"m_bits": m_bits}
     update_bloom_store(spark, store, b, "s")
     sat1 = bloom_saturation(spark, store).collect()[0]
     # replay (no ledger): bitmap unchanged
@@ -3897,8 +3897,8 @@ def test_hist_store_saturation_rebuild_wider(spark, tmp_path):
     from sqltask_spark.operators.sketch_store import (
         create_hist_store,
         hist_saturation,
-        read_hist_meta,
         read_hist_quantiles,
+        read_params,
     )
 
     # values deliberately larger than the initial range: width 4 ×
@@ -3917,8 +3917,7 @@ def test_hist_store_saturation_rebuild_wider(spark, tmp_path):
         spark, store, vals, "source", "v", max_top_bucket_milli=50
     )
     assert r["rebuilt"] is True
-    width, n_buckets = read_hist_meta(spark, store)
-    assert width == 8 and n_buckets == 8
+    assert read_params(spark, store) == {"bucket_width": 8, "n_buckets": 8}
     # still saturated at 2x — the policy converges over repeated
     # maintenance calls exactly like repeated Bloom growth
     for _ in range(8):
@@ -3928,7 +3927,7 @@ def test_hist_store_saturation_rebuild_wider(spark, tmp_path):
         if not r["rebuilt"]:
             break
     assert r["rebuilt"] is False  # reached a healthy width
-    width, _ = read_hist_meta(spark, store)
+    width = read_params(spark, store)["bucket_width"]
     assert width >= 64  # 400-range values need width >= ~57
     # exact median within the certified interval after rebuilds
     med = sorted(((i * 7) % 400) for i in range(400))[200]
@@ -3956,8 +3955,8 @@ def test_hist_time_travel_reads_meta_as_of(spark, tmp_path):
     from sqltask_spark.operators.sketch_store import (
         create_hist_store,
         hist_saturation,
-        read_hist_meta,
         read_hist_quantiles,
+        read_params,
     )
 
     vals = spark.createDataFrame(
@@ -3983,8 +3982,8 @@ def test_hist_time_travel_reads_meta_as_of(spark, tmp_path):
             spark, store, vals, "source", "v", max_top_bucket_milli=50
         )["rebuilt"]:
             break
-    w_new, _ = read_hist_meta(spark, store)
-    w_old, _ = read_hist_meta(spark, store, as_of=pre_seq)
+    w_new = read_params(spark, store)["bucket_width"]
+    w_old = read_params(spark, store, as_of=pre_seq)["bucket_width"]
     assert w_old == 4 and w_new > 4
     assert sorted(
         tuple(r) for r in read_hist_quantiles(
@@ -4013,8 +4012,8 @@ def test_mg_store_certified_heavy_hitters(spark, tables, tmp_path):
     from sqltask_spark.operators.merge import read_parquet_table
     from sqltask_spark.operators.sketch_store import (
         create_mg_store,
-        read_mg_k,
         read_mg_topk,
+        read_params,
         update_mg_store,
     )
 
@@ -4071,13 +4070,10 @@ def test_mg_store_certified_heavy_hitters(spark, tables, tmp_path):
     b = str(tmp_path / "mg_b")
     build(b, [2, 0, 1])
     check(b)
-    # state bound: groups × (k + 2) incl. decr+total rows, + 1 meta
+    # state bound: groups × (k + 2) incl. decr+total rows
     n_groups = toks.select("source").distinct().count()
-    assert (
-        read_parquet_table(spark, a).count()
-        <= n_groups * (K + 2) + 1
-    )
-    assert read_mg_k(spark, a) == K
+    assert read_parquet_table(spark, a).count() <= n_groups * (K + 2)
+    assert read_params(spark, a) == {"k": K}
     # the error signal is observable, exact, and within the MG bound
     from sqltask_spark.operators.sketch_store import mg_saturation
 
@@ -4219,7 +4215,7 @@ def test_kmv_frozen_k_and_time_travel(spark, tmp_path):
     from sqltask_spark.operators.sketch_store import (
         create_kmv_store,
         read_kmv_estimates,
-        read_kmv_k,
+        read_params,
         update_kmv_store,
     )
 
@@ -4234,7 +4230,7 @@ def test_kmv_frozen_k_and_time_travel(spark, tmp_path):
     before = read_kmv_estimates(spark, path).first()["est"]
     update_kmv_store(spark, path, df2, "g", "key")
     after = read_kmv_estimates(spark, path).first()["est"]
-    assert read_kmv_k(spark, path) == 8
+    assert read_params(spark, path) == {"k": 8}
     # version 0 still serves the pre-fold estimate
     assert read_kmv_estimates(spark, path, as_of=0).first()["est"] == before
     assert after != before

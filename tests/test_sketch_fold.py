@@ -84,7 +84,7 @@ def test_fold_commits_what_the_merge_formulation_commits(
     assert out["skipped"] is False
 
     def merge_formulation(spark, path, fold, batch_id=None):
-        merged = fold(mg.read_parquet_table(spark, path))
+        merged = fold(mg.read_parquet_table(spark, path), ss.read_params(spark, path))
         return mg.merge_into_parquet(spark, path, merged, keys, batch_id=batch_id)
 
     monkeypatch.setattr(mg, "fold_parquet_table", merge_formulation)
@@ -110,7 +110,7 @@ def test_ledger_hit_moves_no_manifest(spark, tmp_path, kind):
 
     assert update(spark, path, batch)["skipped"] is True
 
-    def never(rows):
+    def never(rows, params):
         raise AssertionError("a ledger hit ran the fold")
 
     assert mg.fold_parquet_table(spark, path, never, batch_id="b1") == {
@@ -126,10 +126,10 @@ def test_fold_rejects_a_state_off_the_table_schema(spark, tmp_path):
     m = index_fs.read_manifest(spark, path)
     with pytest.raises(ValueError, match="types do not match"):
         mg.fold_parquet_table(
-            spark, path, lambda rows: rows.withColumn("r", F.col("r").cast("string"))
+            spark, path, lambda rows, params: rows.withColumn("r", F.col("r").cast("string"))
         )
     with pytest.raises(ValueError, match="columns"):
-        mg.fold_parquet_table(spark, path, lambda rows: rows.drop("r"))
+        mg.fold_parquet_table(spark, path, lambda rows, params: rows.drop("r"))
     assert index_fs.read_manifest(spark, path) == m
 
 
@@ -141,10 +141,10 @@ def test_commit_between_read_and_commit_raises(spark, tmp_path):
     STORES["hll"][0](spark, path, _values(spark, 0, 30))
     regs = _hll_regs(_values(spark, 30, 60))
 
-    def racing_fold(rows):
+    def racing_fold(rows, params):
         # the interloper: another fold commits manifest 1 first
         mg.fold_parquet_table(
-            spark, path, lambda r: r.withColumn("r", F.lit(24)), batch_id="other"
+            spark, path, lambda r, p: r.withColumn("r", F.lit(24)), batch_id="other"
         )
         return (
             rows.unionByName(regs).groupBy("g", "idx")
@@ -222,8 +222,7 @@ def test_mg_fold_commits_the_reference_state(spark, tmp_path, no_merge):
     stored = _nullable_rows(spark, path)
     counters = {
         (g, it): c for g, it, c in stored
-        if g != ss._MG_META_GROUP
-        and it not in (ss._MG_DECR_ITEM, ss._MG_TOTAL_ITEM)
+        if it not in (ss._MG_DECR_ITEM, ss._MG_TOTAL_ITEM)
     }
     decr = {g: c for g, it, c in stored if it == ss._MG_DECR_ITEM}
     total = {g: c for g, it, c in stored if it == ss._MG_TOTAL_ITEM}
@@ -239,9 +238,9 @@ def test_mg_fold_commits_the_reference_state(spark, tmp_path, no_merge):
         [(g, it, c) for (g, it), c in c2.items()]
         + [(g, ss._MG_DECR_ITEM, c) for g, c in d2.items()]
         + [(g, ss._MG_TOTAL_ITEM, c) for g, c in t2.items()]
-        + [(ss._MG_META_GROUP, "k", 2)]
     )
     assert _nullable_rows(spark, path) == sorted(want, key=_null_first)
+    assert ss.read_params(spark, path) == {"k": 2}
     # the replay is a ledger hit: nothing read, nothing committed
     seq = index_fs.read_manifest(spark, path)["_seq"]
     assert ss.update_mg_store(spark, path, spark.createDataFrame(second, "g string, t string"),
@@ -260,7 +259,7 @@ def test_mg_sentinel_item_fails_the_fold(spark, tmp_path):
     assert index_fs.read_manifest(spark, path) == m
 
 
-def test_kmv_fold_keeps_the_bottom_k_and_the_meta_row(spark, tmp_path, no_merge):
+def test_kmv_fold_keeps_the_bottom_k_and_its_k(spark, tmp_path, no_merge):
     k = 3
     first = [("a", f"k{i}") for i in range(5)] + [(None, "n1")]
     second = [("a", f"k{i}") for i in range(3, 9)] + [("b", "k1"), (None, "n2")]
@@ -280,8 +279,8 @@ def test_kmv_fold_keeps_the_bottom_k_and_the_meta_row(spark, tmp_path, no_merge)
     for g in ("a", "b", None):
         items = sorted({t for h, t in first + second if h == g}, key=lambda t: (hashed[t], t))
         want += [(g, t, hashed[t]) for t in items[:k]]
-    want.append((ss._KMV_META_GROUP, "k", k))
     assert _nullable_rows(spark, path) == sorted(want, key=_null_first)
+    assert ss.read_params(spark, path) == {"k": k}
 
 
 def test_rebuilds_commit_the_fresh_layout(spark, tmp_path, no_merge):
@@ -291,13 +290,13 @@ def test_rebuilds_commit_the_fresh_layout(spark, tmp_path, no_merge):
     ss.rebuild_bloom_store(spark, bloom, members, "text", 63 * 16)
     ss.create_bloom_store(members, fresh_bloom, 63 * 16, "text")
     assert _rows(spark, bloom) == _rows(spark, fresh_bloom)
-    assert ss.read_bloom_capacity(spark, bloom) == 63 * 16
+    assert ss.read_params(spark, bloom) == {"m_bits": 63 * 16}
 
     hist, fresh_hist = str(tmp_path / "hist"), str(tmp_path / "hist_fresh")
     ss.create_hist_store(_values(spark, 0, 40), hist, "src", "n", 4, 8)
     ss.rebuild_hist_store(spark, hist, members, "src", "n", 16)
     ss.create_hist_store(members, fresh_hist, "src", "n", 16, 8)
     assert _rows(spark, hist) == _rows(spark, fresh_hist)
-    assert ss.read_hist_meta(spark, hist) == (16, 8)
+    assert ss.read_params(spark, hist) == {"bucket_width": 16, "n_buckets": 8}
     for path in (bloom, hist):
         assert index_fs.read_manifest(spark, path)["_seq"] == 1

@@ -101,8 +101,7 @@ def test_fold_sources_are_join_free(spark, mg_rows, tmp_path):
     ss.create_mg_store(mg_rows, store, "g", "item", k=2, batch_id="b0")
     stored = read_parquet_table(spark, store)
     counters = stored.filter(
-        (F.col("g") != ss._MG_META_GROUP)
-        & ~F.col("item").isin(ss._MG_DECR_ITEM, ss._MG_TOTAL_ITEM)
+        ~F.col("item").isin(ss._MG_DECR_ITEM, ss._MG_TOTAL_ITEM)
     )
     decr = stored.filter(F.col("item") == ss._MG_DECR_ITEM).select(
         "g", "cnt"

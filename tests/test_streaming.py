@@ -1540,7 +1540,7 @@ def test_bloom_store_sink_saturation_rebuild(spark, tmp_path):
     from sqltask_spark.operators.sketch_store import (
         bloom_probe,
         bloom_saturation,
-        read_bloom_capacity,
+        read_params,
     )
     from sqltask_spark.streaming.corpus import bloom_store_sink
 
@@ -1574,7 +1574,7 @@ def test_bloom_store_sink_saturation_rebuild(spark, tmp_path):
         q.awaitTermination()
 
     run_stream()
-    cap = read_bloom_capacity(spark, store)
+    cap = read_params(spark, store)["m_bits"]
     assert cap > m_bits  # the rebuild-bigger policy fired
     # no false negative for ANY streamed member (the one error class
     # a Bloom filter must never make — pinned across the rebuild)
@@ -1587,7 +1587,7 @@ def test_bloom_store_sink_saturation_rebuild(spark, tmp_path):
     # replay from a fresh checkpoint: member upserts and bitmap OR
     # both converge; capacity does not grow again
     run_stream()
-    assert read_bloom_capacity(spark, store) == cap
+    assert read_params(spark, store)["m_bits"] == cap
     assert bloom_probe(
         spark, store, vals.select("s"), "s"
     ).filter(F.col("bloom_hit") == 0).count() == 0
@@ -1692,8 +1692,8 @@ def test_hist_store_sink_stream_ledger_and_rebuild(spark, tmp_path):
     from sqltask_spark.operators.merge import read_parquet_table
     from sqltask_spark.operators.sketch_store import (
         create_hist_store,
-        read_hist_meta,
         read_hist_quantiles,
+        read_params,
     )
     from sqltask_spark.streaming.corpus import hist_store_sink
 
@@ -1728,7 +1728,8 @@ def test_hist_store_sink_stream_ledger_and_rebuild(spark, tmp_path):
         q.awaitTermination()
 
     run_stream()
-    width1, n_buckets = read_hist_meta(spark, store)
+    params = read_params(spark, store)
+    width1, n_buckets = params["bucket_width"], params["n_buckets"]
     assert n_buckets == 8
     assert width1 > 16  # values up to 899 saturated width 16 -> grew
     # member census is exact: total mass equals the streamed rows
@@ -1839,7 +1840,6 @@ def test_sketch_sinks_version_ledger_retention(spark, tmp_path):
     from sqltask_spark.operators import index_fs
     from sqltask_spark.operators.merge import read_parquet_table
     from sqltask_spark.operators.sketch_store import (
-        _HIST_META_GROUP,
         bloom_probe,
         create_hll_store,
         hll_register_rows,
@@ -1902,8 +1902,7 @@ def test_sketch_sinks_version_ledger_retention(spark, tmp_path):
     assert index_fs.read_manifest(spark, hstore)["_seq"] == seq
     cells = sorted(
         (r["g"], int(r["b"]), int(r["cnt"]))
-        for r in read_parquet_table(spark, hstore)
-        .filter(F.col("g") != _HIST_META_GROUP).collect()
+        for r in read_parquet_table(spark, hstore).collect()
     )
     assert sum(c for _, _, c in cells) == 120  # every row once
 
